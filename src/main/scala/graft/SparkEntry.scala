@@ -104,7 +104,7 @@ object SparkEntry {
     // the sketch lane over the same window: randomized KLL states, no
     // oracle (the HLL stance) — spec pins the rank-error bound
     "q_gas_quantiles_window_sketch" -> ((s: SparkSession, d: String) =>
-      QuantileWarehouse.sketchWindowProbe(s, QuantileWarehouse.sketchBuiltPath(s, d))),
+      QuantileWarehouse.Kll.windowProbe(s, QuantileWarehouse.Kll.builtPath(s, d))),
     // staking / treasury (reference: src/service/staking/, src/collector/richlist.ts)
     "q_validators_by_power" -> (Staking.validatorsByPower _),
     "q_validator_return" -> (Staking.validatorReturn _),

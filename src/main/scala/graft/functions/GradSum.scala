@@ -32,12 +32,16 @@ import org.apache.spark.sql.types._
   *  - SumxArrAgg's per-term quantization replicates Spark's
   *    Cast(double → DECIMAL(30,6)): java.math.BigDecimal.valueOf
   *    (Double.toString shortest-repr) then setScale(6, HALF_UP) — the
-  *    unscaled values are summed EXACTLY in long arithmetic (addExact:
-  *    a sum that cannot fit 18 digits would have overflowed the
-  *    decimal route loudly too), and the final per-slot value is
-  *    BigDecimal(unscaled, 6).doubleValue — Decimal.toDouble's own
-  *    conversion.  Decimal sums are order-free, so partial aggregation
-  *    and merge order cannot move a bit.
+  *    unscaled values are summed EXACTLY in long arithmetic, and the
+  *    final per-slot value is BigDecimal(unscaled, 6).doubleValue —
+  *    Decimal.toDouble's own conversion.  Decimal sums are order-free,
+  *    so partial aggregation and merge order cannot move a bit.
+  *  - CEILING (the contract): a per-slot partial sum must stay below
+  *    2^63 unscaled units, |sum| < ~9.22e12.  Past it `Math.addExact`
+  *    throws ArithmeticException and fails the job loudly.  The
+  *    DECIMAL(38, 6) route `sumx` takes holds ~1e32, so inputs between
+  *    the two ceilings are summable there but not here
+  *    (ExpressionPropertySpec pins the throw).
   *  - Null slots are skipped per element exactly as sum(decimal) skips
   *    null rows; a slot with zero surviving terms reads null.
   */

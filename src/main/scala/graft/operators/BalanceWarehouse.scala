@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{AdditiveRollup, CommitLog, Tables}
 
 /** The per-denom balance VALUE HISTOGRAM at rest — concentration
   * monitoring as a warehouse member: q_richlist_gini already
@@ -53,19 +53,25 @@ import graft.sources.{CommitLog, Tables}
   * randomized compaction — have no inverse; see each member's
   * Scaladoc).
   */
-object BalanceWarehouse {
+object BalanceWarehouse extends AdditiveRollup("balance_warehouse",
+    "c_custkey", Seq("denom", "q"), "c") {
 
-  /** Every histogram write declares Q stats (round 13, VERDICT-r12
-    * ask #4): exact per-generation min/max of the quantized balance
-    * ride in the commit entries, so a value-band consumer (e.g. a
-    * concentration sweep over one balance band) prunes generations at
-    * the LOG — BalanceWarehouseSpec pins the pruned set on a
-    * band-split ingest. */
-  private val QStats = Seq("q")
+  /** Every histogram write declares Q stats: exact per-generation
+    * min/max of the quantized balance ride in the commit entries, so
+    * a value-band consumer (e.g. a concentration sweep over one
+    * balance band) prunes generations at the LOG —
+    * BalanceWarehouseSpec pins the pruned set on a band-split
+    * ingest. */
+  override protected def statsCols: Seq[String] = Seq("q")
 
-  /** The customer-side base/incoming split (the warehouse family's
-    * mod-10 convention, on c_custkey). */
-  private[graft] def isBaseCust = pmod(col("c_custkey"), lit(10L)) < 8
+  /** (c_custkey, denom, bal) account rows — the inline query's nation
+    * join, paid at INGEST time instead of probe time. */
+  protected def source(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).customer
+      .join(broadcast(Tables(spark, dir).nation),
+        col("c_nationkey") === col("n_nationkey"))
+      .select(col("c_custkey"), col("n_name").as("denom"),
+        col("c_acctbal").as("bal"))
 
   /** Per-key integer counts of a batch — the delta rows.  Input is
     * (denom, bal); quantization to cents happens HERE, once, so every
@@ -75,74 +81,6 @@ object BalanceWarehouse {
       .select(col("denom"), floor(col("bal") * 100 + 0.5).cast("long").as("q"))
       .groupBy(col("denom"), col("q")).agg(count(lit(1)).as("c"))
 
-  /** The (denom, bal) frame of a customer-table slice — the inline
-    * query's join, paid at INGEST time instead of probe time. */
-  private def balancesOf(spark: SparkSession, dir: String,
-      slice: DataFrame): DataFrame =
-    slice.join(broadcast(Tables(spark, dir).nation),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name").as("denom"), col("c_acctbal").as("bal"))
-
-  /** Ingest — also the refresh-equivalence spec's one-shot reference
-    * builder. */
-  def materializeFrom(balances: DataFrame, path: String): Unit =
-    CommitLog.transaction(balances.sparkSession, path)(
-      _.replace(deltas(balances), path, statsCols = QStats))
-
-  /** REFRESH — fold a batch in at rest: append its histogram deltas.
-    * O(batch); no standing row is read or rewritten.  One CommitLog
-    * transaction (single-part here, but the committed read means a
-    * concurrent probe can never see a half-landed append and a crashed
-    * write job's files are never even listed). */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val done = refreshTxn(spark, batch, path, batchId = None)
-    assert(done, "unreachable: un-id'd refreshes never skip")
-  }
-
-  /** The refresh transaction body, optionally committing a STREAM
-    * BATCH ID atomically with the histogram deltas — the exactly-once
-    * rung (StreamTwin; round 13 rolls it across the twin matrix). */
-  private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
-      path: String, batchId: Option[Long]): Boolean =
-    graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
-      _.append(deltas(batch), path, statsCols = QStats))
-
-  /** RETRACT — remove accounts from the standing histogram: append
-    * their deltas NEGATED.  O(removed), append-only like refresh (no
-    * standing row is read or rewritten — the delete is a negative
-    * delta the merge folds out).  Precondition: removed ⊆ what was
-    * ingested, i.e. counts never go net-negative — the caller's
-    * contract, exactly like refresh's batch-freshness one. */
-  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit =
-    CommitLog.transaction(spark, path)(_.append(deltas(removed)
-      .select(col("denom"), col("q"), (-col("c")).as("c")), path,
-      statsCols = QStats))
-
-  /** COMPACT — merge delta rows to one per key.  Probes bit-identical
-    * before/after (integer-sum order freedom); single-writer
-    * maintenance window assumed, as everywhere in the matrix. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    // persist exactly what probes serve: the one merged-reader body
-    // (the replace writes a NEW generation dir, never its own source)
-    val snap = CommitLog.snapshot(spark, path)
-    CommitLog.transaction(spark, path) { t =>
-      t.replace(mergedHist(spark, path), path, statsCols = QStats)
-      // replay protection survives compaction (StreamTwin)
-      graft.sources.StreamTwin.compactIds(snap, t, path)
-    }
-  }
-
-  /** The delta-merge read — exposed un-checkpointed so the spec can
-    * assert its plan scans ONLY the warehouse (zero customer/nation
-    * scans).  Zero-count keys (fully-retracted values) are dropped:
-    * that makes the merged state EQUAL to a rebuild on the surviving
-    * accounts, not merely probe-equal (the retract contract's
-    * bit-for-bit claim). */
-  private[graft] def mergedHist(spark: SparkSession, path: String): DataFrame =
-    CommitLog.snapshot(spark, path).read(path)
-      .groupBy(col("denom"), col("q")).agg(sum(col("c")).as("c"))
-      .filter(col("c") =!= 0)
-
   /** Registered `q_richlist_gini_probe`: the concentration report
     * served from the histogram at rest.  base ∪ incoming = all
     * accounts and the histogram preserves the per-denom value
@@ -150,16 +88,7 @@ object BalanceWarehouse {
     * shares its oracle VERBATIM (the shared Staking.giniOfHist
     * tail — identical all-LONG rank-block arithmetic). */
   def giniProbe(spark: SparkSession, path: String): DataFrame =
-    Staking.giniOfHist(mergedHist(spark, path).localCheckpoint())
-
-  /** The once-per-JVM two-generation build (the Materialized
-    * pattern). */
-  def builtPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("balance_warehouse", dir) { p =>
-      val c = Tables(spark, dir).customer
-      materializeFrom(balancesOf(spark, dir, c.filter(isBaseCust)), p)
-      refresh(spark, balancesOf(spark, dir, c.filter(!isBaseCust)), p)
-    }
+    Staking.giniOfHist(merged(spark, path).localCheckpoint())
 
   /** The slice the registered retraction removes — deliberately
     * CROSS-CUTTING (every third account, from base and incoming
@@ -170,23 +99,7 @@ object BalanceWarehouse {
   /** The retraction build: ingest + refresh as `builtPath`, then
     * retract the cross-cutting slice. */
   def builtRetractedPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("balance_warehouse_retracted", dir) { p =>
-      val c = Tables(spark, dir).customer
-      materializeFrom(balancesOf(spark, dir, c.filter(isBaseCust)), p)
-      refresh(spark, balancesOf(spark, dir, c.filter(!isBaseCust)), p)
-      retract(spark, balancesOf(spark, dir, c.filter(isRetractedCust)), p)
-    }
-
-  /** The refresh's ONLINE twin at the EXACTLY-ONCE rung (round 13):
-    * each micro-batch of (denom, bal) rows folds its histogram deltas
-    * in one transaction that also commits the engine batch id
-    * (StreamTwin) — associativity means any batching serves a
-    * bit-equal histogram (spec-pinned), and a redelivered committed
-    * batch folds NOTHING. */
-  def streamingRefresh(balances: DataFrame, path: String,
-      checkpointEvery: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.sources.StreamTwin.exactlyOnce(balances, path, checkpointEvery)(
-      (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
+    builtRetracted(spark, dir, isRetractedCust)
 
   // ------------------------------------------------------------------
   // SNAPSHOT LOG — as-of generation reads (time travel over the delta
@@ -227,18 +140,6 @@ object BalanceWarehouse {
   // state).
   // ------------------------------------------------------------------
 
-  /** REFRESH as the next committed generation. */
-  def refreshGen(batch: DataFrame, path: String): Unit =
-    CommitLog.transaction(batch.sparkSession, path)(
-      _.append(deltas(batch), path, statsCols = QStats))
-
-  /** RETRACT as the next committed generation — negated deltas. */
-  def retractGen(removed: DataFrame, path: String): Unit =
-    CommitLog.transaction(removed.sparkSession, path)(
-      _.append(deltas(removed)
-        .select(col("denom"), col("q"), (-col("c")).as("c")), path,
-        statsCols = QStats))
-
   /** The as-of merge: fold only committed generations <= `gen` — the
     * CommitLog fold reads exactly those directories (later generations
     * are never listed).  Behind the retention horizon the state is
@@ -246,9 +147,7 @@ object BalanceWarehouse {
   private[graft] def mergedHistAsOf(spark: SparkSession, path: String,
       gen: Int): DataFrame =
     CommitLog.snapshot(spark, path).readOpt(path, gen.toLong)
-      .map(_.groupBy(col("denom"), col("q")).agg(sum(col("c")).as("c"))
-        .filter(col("c") =!= 0))
-      .getOrElse(emptyHist(spark))
+      .map(merge).getOrElse(emptyHist(spark))
 
   private def emptyHist(spark: SparkSession): DataFrame = {
     import org.apache.spark.sql.types._
@@ -277,7 +176,7 @@ object BalanceWarehouse {
   def compactHorizon(spark: SparkSession, path: String, horizon: Int): Unit = {
     val merged = mergedHistAsOf(spark, path, horizon)
     CommitLog.transaction(spark, path)(
-      _.rebase(merged, path, horizon.toLong, statsCols = QStats))
+      _.rebase(merged, path, horizon.toLong, statsCols = statsCols))
   }
 
   /** The three-generation snapshot-log build: gen 0 = base ingest,
@@ -286,10 +185,10 @@ object BalanceWarehouse {
     * bit-comparable to the flat retracted log's. */
   def builtGenPath(spark: SparkSession, dir: String): String =
     graft.sources.Materialized.pathFor("balance_warehouse_gen", dir) { p =>
-      val c = Tables(spark, dir).customer
-      refreshGen(balancesOf(spark, dir, c.filter(isBaseCust)), p)
-      refreshGen(balancesOf(spark, dir, c.filter(!isBaseCust)), p)
-      retractGen(balancesOf(spark, dir, c.filter(isRetractedCust)), p)
+      val b = source(spark, dir)
+      refresh(spark, b.filter(isBase), p)
+      refresh(spark, b.filter(!isBase), p)
+      retract(spark, b.filter(isRetractedCust), p)
     }
 
   /** Op-weighted histogram deltas of a change batch: op = +1 inserts
@@ -329,6 +228,5 @@ object BalanceWarehouse {
     * stream batch id in ONE atomic commit. */
   private[graft] def changesTxn(spark: SparkSession, batch: DataFrame,
       path: String, batchId: Option[Long]): Boolean =
-    graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
-      _.append(deltasSigned(batch), path, statsCols = QStats))
+    appendTxn(spark, deltasSigned(batch), path, batchId)
 }

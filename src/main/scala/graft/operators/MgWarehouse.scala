@@ -1,11 +1,11 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.functions.TextFunctions.words
 import graft.functions.{MisraGries, MisraGriesMerge}
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{SketchRollup, Tables}
 
 /** Corpus heavy-hitter summaries at rest — the FREQUENCY family's
   * warehouse member, completing the mergeable-summary matrix:
@@ -49,92 +49,29 @@ import graft.sources.{CommitLog, Tables}
   * its surviving docs.  The honest bottom rung of the retraction
   * ladder (see BalanceWarehouse's Scaladoc for the full ladder).
   */
-object MgWarehouse {
+object MgWarehouse extends SketchRollup("mg_warehouse", "doc_id", Nil, "hh") {
 
   private[graft] val K = 32
 
-  /** The documents-side base/incoming split (the warehouse family's
-    * mod-10 convention, on doc_id). */
-  private[graft] def isBaseDoc = pmod(col("doc_id"), lit(10L)) < 8
+  protected def source(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).documents
 
   /** One summary row for a batch — the delta. */
-  private[graft] def deltas(docs: DataFrame, k: Int = K): DataFrame =
-    docs.agg(MisraGries(words(col("text")), k).as("hh"))
+  private[graft] def deltas(docs: DataFrame): DataFrame =
+    docs.agg(MisraGries(words(col("text")), K).as("hh"))
 
-  /** Ingest — also the refresh-equivalence spec's one-shot reference
-    * builder.  One CommitLog transaction (round 12 — the sketch lane
-    * joins the shared protocol, VERDICT-r11 ask #1). */
-  def materializeFrom(docs: DataFrame, path: String): Unit = {
-    val d = deltas(docs)
-    CommitLog.transaction(d.sparkSession, path)(_.replace(d, path))
-  }
-
-  /** REFRESH — fold a batch in at rest: append its summary row as one
-    * committed generation.  O(batch); no standing row is read or
-    * rewritten, and a crash before the marker is invisible. */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val done = refreshTxn(spark, batch, path, batchId = None)
-    assert(done, "unreachable: un-id'd refreshes never skip")
-  }
-
-  /** The refresh transaction body, optionally committing a STREAM
-    * BATCH ID atomically with the summary — the exactly-once rung
-    * (StreamTwin; round 13 rolls it across the twin matrix). */
-  private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
-      path: String, batchId: Option[Long]): Boolean =
-    graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
-      _.append(deltas(batch), path))
-
-  /** COMPACT — merge generation rows to ONE summary, committed as a
-    * `replace` generation (the old in-place overwrite's crash window
-    * lost the standing index outright; now pre-compact probes hold
-    * until the marker lands).  The merged row is a valid summary of
-    * the union (mergeability), so probes serve the identical CONTRACT
-    * before and after — the guarantee-level analogue of the
-    * bit-invariance the integer warehouses pin.  Physical reclaim =
-    * CommitLog.vacuum at the retention cadence. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val snap = CommitLog.snapshot(spark, path)
-    val merged = snap.read(path)
-      .agg(MisraGriesMerge(col("hh"), K).as("hh"))
-    CommitLog.transaction(spark, path) { t =>
-      t.replace(merged, path)
-      // replay protection survives compaction (StreamTwin)
-      graft.sources.StreamTwin.compactIds(snap, t, path)
-    }
-  }
-
-  /** The committed-rows read — exposed so specs can assert scan
-    * roots. */
-  private[graft] def summaryRead(spark: SparkSession, path: String): DataFrame =
-    CommitLog.snapshot(spark, path).read(path)
+  /** The (k+1)-th-largest-subtraction merge: the merged row is a valid
+    * summary of the union (mergeability), so probes serve the same
+    * contract before and after `compact` — the guarantee-level
+    * analogue of the bit-invariance the integer warehouses pin. */
+  protected def union(hh: Column): Column = MisraGriesMerge(hh, K)
 
   /** Registered `t_heavy_hitters_probe`: the corpus heavy-hitter
     * report off the summaries at rest — merge the ≤ generations
     * stored rows, explode to (token, est_count).  Never scans
     * documents (plan-asserted). */
   def probe(spark: SparkSession, path: String): DataFrame =
-    summaryRead(spark, path)
-      .agg(MisraGriesMerge(col("hh"), K).as("hh"))
+    merged(spark, path)
       .select(explode(col("hh")).as("h"))
       .select(col("h.token").as("token"), col("h.est").as("est_count"))
-
-  /** The once-per-JVM two-generation build (the Materialized
-    * pattern). */
-  def builtPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("mg_warehouse", dir) { p =>
-      val d = Tables(spark, dir).documents
-      materializeFrom(d.filter(isBaseDoc), p)
-      refresh(spark, d.filter(!isBaseDoc), p)
-    }
-
-  /** The refresh's ONLINE twin at the EXACTLY-ONCE rung (round 13):
-    * each micro-batch's summary commits atomically with the engine
-    * batch id (StreamTwin) — mergeability means any batching serves a
-    * summary satisfying the same bound (spec-pinned), and a
-    * redelivered committed batch folds NOTHING. */
-  def streamingRefresh(docs: DataFrame, path: String,
-      checkpointEvery: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.sources.StreamTwin.exactlyOnce(docs, path, checkpointEvery)(
-      (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
 }

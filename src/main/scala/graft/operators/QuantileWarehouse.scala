@@ -2,10 +2,10 @@ package graft.operators
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.functions.Exact.roundx
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{AdditiveRollup, CommitLog, SketchRollup, Tables}
 
 /** Per-day gas-price VALUE HISTOGRAMS at rest — the warehouse member
   * for the statistic the daily rollup family can't serve EXACTLY over
@@ -54,11 +54,11 @@ import graft.sources.{CommitLog, Tables}
   * gas-price domain admits (reference gas stats round to 4 dp —
   * src/service/treasury and dashboard gas payloads).
   */
-object QuantileWarehouse {
+object QuantileWarehouse extends AdditiveRollup("quantile_warehouse",
+    "event_id", Seq("date", "denom", "q"), "c") {
 
-  /** The events-side base/incoming split (the warehouse family's
-    * mod-10 convention, on event_id). */
-  private[graft] def isBaseEvent = pmod(col("event_id"), lit(10L)) < 8
+  protected def source(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).events
 
   /** Per-(day, denom, quantized-value) integer counts of a batch —
     * the delta rows.  Quantization happens HERE, once, so every
@@ -74,65 +74,10 @@ object QuantileWarehouse {
     * generations at the LOG (readWhere) before the per-day partition
     * pruning even lists the surviving roots — at ingest cadence a
     * window probe's scan set is bounded by the window, not history. */
-  private val DateStats = Seq("date")
+  override protected def statsCols: Seq[String] = Seq("date")
 
-  /** Ingest — also the refresh-equivalence spec's one-shot reference
-    * builder.  Partitioned by date: the window probe's pruning story. */
-  def materializeFrom(events: DataFrame, path: String): Unit =
-    CommitLog.transaction(events.sparkSession, path)(
-      _.replace(deltas(events), path, Seq("date"), statsCols = DateStats))
-
-  /** REFRESH — fold a batch in at rest: append its histogram deltas.
-    * O(batch); no standing row is read or rewritten. */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val done = refreshTxn(spark, batch, path, batchId = None)
-    assert(done, "unreachable: un-id'd refreshes never skip")
-  }
-
-  /** The refresh transaction body, optionally committing a STREAM
-    * BATCH ID as one more part of the SAME transaction — the
-    * exactly-once rung the Bm25 twin introduced (round 12), shared
-    * machinery in StreamTwin: the id commits atomically WITH the
-    * histogram deltas, so an at-least-once redelivery whose external
-    * marker was lost (crash between txn commit and marker write)
-    * still folds NOTHING — the committed `.stream` part is the ground
-    * truth.  Returns false when `batchId` is already committed.  The
-    * dup-check snapshot is taken only on the id'd path — a plain
-    * refresh pays no extra log listing (review r12b). */
-  private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
-      path: String, batchId: Option[Long]): Boolean =
-    graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
-      _.append(deltas(batch), path, Seq("date"), statsCols = DateStats))
-
-  /** RETRACT — the delete verb on the bit-equal rung (round 10; the
-    * BalanceWarehouse contract verbatim — integer counts subtract
-    * exactly): append the removed events' histogram deltas NEGATED.
-    * O(removed), append-only; zero-count keys drop at merge/compact,
-    * making the state literally the rebuild-on-survivors histogram
-    * (QuantileWarehouseSpec pins retract∘refresh == rebuild and the
-    * probe equality that follows).  Precondition: removed ⊆ ingested
-    * (the caller's contract, as everywhere on this rung). */
-  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit =
-    CommitLog.transaction(spark, path)(_.append(deltas(removed)
-      .select(col("date"), col("denom"), col("q"), (-col("c")).as("c")),
-      path, Seq("date"), statsCols = DateStats))
-
-  /** COMPACT — merge delta rows to one per key.  Probes bit-identical
-    * before/after (integer-sum order freedom); fully-retracted keys
-    * fold to 0 and drop (vacuous without retraction); single-writer
-    * maintenance window assumed, as everywhere in the matrix. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val snap = CommitLog.snapshot(spark, path)
-    val merged = snap.read(path)
-      .groupBy(col("date"), col("denom"), col("q")).agg(sum(col("c")).as("c"))
-      .filter(col("c") =!= 0)
-    CommitLog.transaction(spark, path) { t =>
-      t.replace(merged, path, Seq("date"), statsCols = DateStats)
-      // the streaming twin's id part folds to one generation WITHOUT
-      // forgetting ids — replay protection survives compaction
-      graft.sources.StreamTwin.compactIds(snap, t, path)
-    }
-  }
+  /** Partitioned by date: the window probe's pruning story. */
+  override protected def partitionCols: Seq[String] = Seq("date")
 
   /** The raw delta read — exposed un-collapsed so specs can assert
     * scan roots and partition pruning on exactly what probes read. */
@@ -221,32 +166,6 @@ object QuantileWarehouse {
     quantilesOfHist(histReadWindow(spark, path, start, end)
       .filter(col("date").between(lit(start).cast("date"), lit(end).cast("date"))))
 
-  /** The once-per-JVM two-generation build (the Materialized
-    * pattern). */
-  def builtPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("quantile_warehouse", dir) { p =>
-      val e = Tables(spark, dir).events
-      materializeFrom(e.filter(isBaseEvent), p)
-      refresh(spark, e.filter(!isBaseEvent), p)
-    }
-
-  /** The refresh's ONLINE twin at the EXACTLY-ONCE rung (round 12 —
-    * the Bm25 pattern on the second member VERDICT-r11 ask #6 named):
-    * integer-sum associativity makes any batching fold to a bit-equal
-    * histogram, and replay safety comes in layers — the BatchMarkers
-    * fast-skip (one driver FS listing, zero Spark actions) absorbs
-    * the common redelivery; the txn-embedded batch id closes the
-    * residual window (crash between commit marker and external
-    * batchid record: on redelivery the committed id makes refreshTxn
-    * fold NOTHING); the lineage guard fails loudly when the engine's
-    * checkpoint and the marker dir diverge (the silent-mass-skip
-    * trap); and the log self-prunes via the count-triggered
-    * checkpoint, so nothing in the loop grows with stream length. */
-  def streamingRefresh(events: DataFrame, path: String,
-      checkpointEvery: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.sources.StreamTwin.exactlyOnce(events, path, checkpointEvery)(
-      (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
-
   // ---- the SKETCH lane: per-day KLL states (the unbounded-domain
   // fallback the histogram Scaladoc names).  Same layout and
   // maintenance verbs over (date, denom, sk BINARY) rows; the
@@ -254,63 +173,43 @@ object QuantileWarehouse {
   // see KllSketchAgg's Scaladoc), which is exactly why the bounded
   // gas domain runs the exact lane and this one exists as the
   // documented alternative, spec-pinned to its rank-error bound.
+  object Kll extends SketchRollup("quantile_kll_warehouse", "event_id",
+      Seq("date", "denom"), "sk") {
 
-  import graft.functions.KllFunctions.{kllMerge, kllQuantile, kllSketch}
+    import graft.functions.KllFunctions.{kllMerge, kllQuantile, kllSketch}
 
-  /** Per-(day, denom) KLL sketch states of a batch. */
-  private[graft] def sketchDeltas(events: DataFrame): DataFrame =
-    events.select(to_date(col("ts")).as("date"),
-        col("event_type").as("denom"), col("value"))
-      .groupBy(col("date"), col("denom")).agg(kllSketch(col("value")).as("sk"))
+    protected def source(spark: SparkSession, dir: String): DataFrame =
+      Tables(spark, dir).events
 
-  def sketchMaterializeFrom(events: DataFrame, path: String): Unit =
-    CommitLog.transaction(events.sparkSession, path)(
-      _.replace(sketchDeltas(events), path, Seq("date"), statsCols = DateStats))
+    override protected def statsCols: Seq[String] = Seq("date")
+    override protected def partitionCols: Seq[String] = Seq("date")
 
-  def sketchRefresh(spark: SparkSession, batch: DataFrame, path: String): Unit =
-    CommitLog.transaction(spark, path)(
-      _.append(sketchDeltas(batch), path, Seq("date"), statsCols = DateStats))
+    /** Per-(day, denom) KLL sketch states of a batch. */
+    private[graft] def deltas(events: DataFrame): DataFrame =
+      events.select(to_date(col("ts")).as("date"),
+          col("event_type").as("denom"), col("value"))
+        .groupBy(col("date"), col("denom")).agg(kllSketch(col("value")).as("sk"))
 
-  private[graft] def sketchRead(spark: SparkSession, path: String): DataFrame =
-    CommitLog.snapshot(spark, path).read(path)
-      .select(col("date").cast("date").as("date"), col("denom"), col("sk"))
+    protected def union(sk: Column): Column = kllMerge(sk)
 
-  /** Registered `q_gas_quantiles_window_sketch`: the window quantiles
-    * off merged per-day sketch states — fixed test constants, same
-    * window as the exact probe so the two lanes are directly
-    * comparable.  NO oracle (randomized sketch class — the HLL
-    * stance); QuantileWarehouseSpec pins each reported quantile's
-    * EXACT rank within the KLL bound of its target. */
-  def sketchWindowProbe(spark: SparkSession, path: String,
-      start: String = "2024-01-08", end: String = "2024-01-21"): DataFrame =
-    CommitLog.snapshot(spark, path)
-      .readWhere(path, "date", Some(start), Some(end))
-      .map(_.select(col("date").cast("date").as("date"), col("denom"), col("sk")))
-      .getOrElse(sketchRead(spark, path).limit(0))
-      .filter(col("date").between(lit(start).cast("date"), lit(end).cast("date")))
-      .groupBy(col("denom")).agg(kllMerge(col("sk")).as("wsk"))
-      .select(col("denom"),
-        roundx(kllQuantile(col("wsk"), lit(0.5)), 6).as("p50"),
-        roundx(kllQuantile(col("wsk"), lit(0.9)), 6).as("p90"),
-        roundx(kllQuantile(col("wsk"), lit(0.99)), 6).as("p99"))
-
-  /** The once-per-JVM two-generation sketch build. */
-  def sketchBuiltPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("quantile_kll_warehouse", dir) { p =>
-      val e = Tables(spark, dir).events
-      sketchMaterializeFrom(e.filter(isBaseEvent), p)
-      sketchRefresh(spark, e.filter(!isBaseEvent), p)
+    /** Registered `q_gas_quantiles_window_sketch`: the window quantiles
+      * off merged per-day sketch states — fixed test constants, same
+      * window as the exact probe so the two lanes are directly
+      * comparable.  NO oracle (randomized sketch class — the HLL
+      * stance); QuantileWarehouseSpec pins each reported quantile's
+      * EXACT rank within the KLL bound of its target. */
+    def windowProbe(spark: SparkSession, path: String,
+        start: String = "2024-01-08", end: String = "2024-01-21"): DataFrame = {
+      val snap = CommitLog.snapshot(spark, path)
+      snap.readWhere(path, "date", Some(start), Some(end))
+        .getOrElse(snap.read(path).limit(0))
+        .select(col("date").cast("date").as("date"), col("denom"), col("sk"))
+        .filter(col("date").between(lit(start).cast("date"), lit(end).cast("date")))
+        .groupBy(col("denom")).agg(kllMerge(col("sk")).as("wsk"))
+        .select(col("denom"),
+          roundx(kllQuantile(col("wsk"), lit(0.5)), 6).as("p50"),
+          roundx(kllQuantile(col("wsk"), lit(0.9)), 6).as("p90"),
+          roundx(kllQuantile(col("wsk"), lit(0.99)), 6).as("p99"))
     }
-
-  /** The sketch lane's ONLINE twin: per-batch KLL states appended
-    * inside foreachBatch.  Mergeability is the whole argument — any
-    * batching's probe-time union satisfies the same rank bound
-    * (spec-pinned); like every rung below bit-equal, equality is NOT
-    * claimed, the GUARANTEE is. */
-  def sketchStreamingRefresh(events: DataFrame, path: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) sketchRefresh(batch.sparkSession, batch, path)
-      }
-      .start()
+  }
 }

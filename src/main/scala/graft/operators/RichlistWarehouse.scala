@@ -200,8 +200,8 @@ object RichlistWarehouse {
   def builtPath(spark: SparkSession, dir: String): String =
     graft.sources.Materialized.pathFor("richlist_warehouse", dir) { p =>
       val c = Tables(spark, dir).customer
-      refresh(rowsOf(spark, dir, c.filter(BalanceWarehouse.isBaseCust)), p)
-      refresh(rowsOf(spark, dir, c.filter(!BalanceWarehouse.isBaseCust)), p)
+      refresh(rowsOf(spark, dir, c.filter(BalanceWarehouse.isBase)), p)
+      refresh(rowsOf(spark, dir, c.filter(!BalanceWarehouse.isBase)), p)
     }
 
   /** The refresh's ONLINE twin (the matrix-wide convention): each
@@ -233,8 +233,8 @@ object RichlistWarehouse {
   def builtRetractedPath(spark: SparkSession, dir: String): String =
     graft.sources.Materialized.pathFor("richlist_warehouse_retracted", dir) { p =>
       val c = Tables(spark, dir).customer
-      refresh(rowsOf(spark, dir, c.filter(BalanceWarehouse.isBaseCust)), p)
-      refresh(rowsOf(spark, dir, c.filter(!BalanceWarehouse.isBaseCust)), p)
+      refresh(rowsOf(spark, dir, c.filter(BalanceWarehouse.isBase)), p)
+      refresh(rowsOf(spark, dir, c.filter(!BalanceWarehouse.isBase)), p)
       retract(spark,
         rowsOf(spark, dir, c.filter(BalanceWarehouse.isRetractedCust)), p,
         upstream = rowsOf(spark, dir, c))

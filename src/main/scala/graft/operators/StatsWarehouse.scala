@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.TextFunctions.words
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{AdditiveRollup, Tables}
 
 /** The per-language corpus-profile HISTOGRAM at rest — the profiling
   * leg's warehouse member, and the answer to d_corpus_stats' own
@@ -31,11 +31,11 @@ import graft.sources.{CommitLog, Tables}
   * per key, `compact` merges (probe-bit-identical — integer sums are
   * order-free).
   */
-object StatsWarehouse {
+object StatsWarehouse extends AdditiveRollup("stats_warehouse", "doc_id",
+    Seq("lang", "nw"), "cnt") {
 
-  /** The documents-side base/incoming split (the MinHashWarehouse
-    * doc_id convention). */
-  private[graft] def isBaseDoc = pmod(col("doc_id"), lit(10L)) < 8
+  protected def source(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).documents
 
   /** Per-key integer partial sums of a batch — the delta rows:
     * (lang, nw) → docs at that length, chars at that length. */
@@ -46,79 +46,12 @@ object StatsWarehouse {
       .groupBy(col("lang"), col("nw"))
       .agg(count(lit(1)).as("cnt"), sum(col("nc")).as("ncs"))
 
-  /** Ingest — also the refresh-equivalence spec's one-shot reference
-    * builder.  One CommitLog transaction (round 12 — the sketch lane
-    * joins the shared protocol, VERDICT-r11 ask #1). */
-  def materializeFrom(docs: DataFrame, path: String): Unit = {
-    val d = deltas(docs)
-    CommitLog.transaction(d.sparkSession, path)(_.replace(d, path))
-  }
-
-  /** REFRESH — fold a batch in at rest: append its delta rows as one
-    * committed generation.  O(batch); no standing row is read or
-    * rewritten, and a crash before the marker is invisible. */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val done = refreshTxn(spark, batch, path, batchId = None)
-    assert(done, "unreachable: un-id'd refreshes never skip")
-  }
-
-  /** The refresh transaction body, optionally committing a STREAM
-    * BATCH ID atomically with the deltas — the exactly-once rung
-    * (StreamTwin; round 13 rolls it across the twin matrix). */
-  private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
-      path: String, batchId: Option[Long]): Boolean =
-    graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
-      _.append(deltas(batch), path))
-
-  /** RETRACT — the delete verb on the bit-equal rung (round 10; the
-    * BalanceWarehouse contract verbatim): append the removed docs'
-    * delta rows NEGATED — integer counts and char sums subtract
-    * exactly, zero-count keys drop at merge/compact, so the state is
-    * literally the rebuild-on-survivors histogram (StatsWarehouseSpec
-    * pins it).  Precondition: removed ⊆ ingested with this text. */
-  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit =
-    CommitLog.transaction(spark, path)(_.append(
-      deltas(removed)
-        .select(col("lang"), col("nw"), (-col("cnt")).as("cnt"),
-          (-col("ncs")).as("ncs")), path))
-
-  /** COMPACT — merge delta rows to one per key.  Probes bit-identical
-    * before/after; fully-retracted keys fold to 0 and drop (vacuous
-    * without retraction).  Single-WRITER window as everywhere in the
-    * matrix; concurrent PROBES are safe — they pin the pre-compact
-    * snapshot until the commit marker lands. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    // persist exactly what probes serve: the one merged-reader body,
-    // committed as a `replace` generation — the old in-place
-    // overwrite's crash window lost the standing index; now
-    // pre-compact probes hold until the marker lands (physical
-    // reclaim = CommitLog.vacuum at the retention cadence)
-    val snap = CommitLog.snapshot(spark, path)
-    val merged = mergedHist(spark, path)
-    CommitLog.transaction(spark, path) { t =>
-      t.replace(merged, path)
-      // replay protection survives compaction (StreamTwin)
-      graft.sources.StreamTwin.compactIds(snap, t, path)
-    }
-  }
-
-  /** The delta-merge read — exposed un-checkpointed so the spec can
-    * assert its plan scans ONLY the warehouse (zero documents
-    * scans).  Zero-count keys (fully-retracted lengths) drop: the
-    * merged state equals a rebuild on the survivors, the retract
-    * contract's bit-for-bit claim. */
-  private[graft] def mergedHist(spark: SparkSession, path: String): DataFrame =
-    CommitLog.snapshot(spark, path).read(path)
-      .groupBy(col("lang"), col("nw"))
-      .agg(sum(col("cnt")).as("cnt"), sum(col("ncs")).as("ncs"))
-      .filter(col("cnt") =!= 0)
-
   /** Registered `d_corpus_stats_probe`: the full profile served from
     * the index at rest.  base ∪ incoming = all documents and the
     * histogram preserves the length multiset, so the result equals
     * d_corpus_stats row for row and shares its oracle VERBATIM. */
   def statsProbe(spark: SparkSession, dir: String, path: String): DataFrame =
-    statsOfHist(mergedHist(spark, path))
+    statsOfHist(merged(spark, path))
 
   /** d_corpus_stats' exact output reconstructed from a (lang, nw,
     * cnt, ncs) histogram.  The bracketing-rank percentile numerators
@@ -170,23 +103,4 @@ object StatsWarehouse {
         col("p50_x100"), col("p90_x100"), col("p99_x100"),
         expr("(n_chars * 20000L + n_docs) DIV (2L * n_docs)").as("avg_chars_x10000"))
   }
-
-  /** The once-per-JVM two-generation build (the Materialized
-    * pattern). */
-  def builtPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("stats_warehouse", dir) { p =>
-      val d = Tables(spark, dir).documents
-      materializeFrom(d.filter(isBaseDoc), p)
-      refresh(spark, d.filter(!isBaseDoc), p)
-    }
-
-  /** The refresh's ONLINE twin at the EXACTLY-ONCE rung (round 13):
-    * each micro-batch's histogram deltas commit atomically with the
-    * engine batch id (StreamTwin) — associativity means any batching
-    * serves a bit-equal index (spec-pinned), and a redelivered
-    * committed batch folds NOTHING. */
-  def streamingRefresh(docs: DataFrame, path: String,
-      checkpointEvery: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.sources.StreamTwin.exactlyOnce(docs, path, checkpointEvery)(
-      (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
 }

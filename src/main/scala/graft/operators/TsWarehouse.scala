@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Exact.roundx
-import graft.sources.Tables
+import graft.sources.{AdditiveRollup, Tables}
 
 /** The daily (date, event_type) rollup AT REST — the time-series
   * family's warehouse member, with the PcaWarehouse-class refresh
@@ -12,7 +12,7 @@ import graft.sources.Tables
   * value sums, and DECIMAL sums are ASSOCIATIVE, so folding a batch
   * in by appending its per-key partial sums is BIT-EQUAL to a
   * one-shot rebuild over base ∪ batch — equal row for row to the
-  * last decimal digit (TsWarehouseSpec pins it).
+  * last decimal digit (RollupLawsSpec pins it).
   *
   * Production shape: the four ts legs (corr / window search / anomaly
   * / seasonal) all start from the daily grid, whose ONE corpus-scale
@@ -50,11 +50,11 @@ import graft.sources.Tables
   * the drop-at-zero filter and serves the same (date, event_type, v)
   * grid, so all seven consumers and their verbatim oracles are
   * untouched. */
-object TsWarehouse {
+object TsWarehouse extends AdditiveRollup("ts_warehouse", "event_id",
+    Seq("date", "event_type"), "n") {
 
-  /** The events-side base/incoming split (the warehouse family's
-    * mod-10 convention, on event_id). */
-  private[graft] def isBaseEvent = pmod(col("event_id"), lit(10L)) < 8
+  protected def source(spark: SparkSession, dir: String): DataFrame =
+    Tables(spark, dir).events
 
   /** Per-key (DECIMAL partial sum, exact event count) of a batch —
     * the delta rows.  The UNROUNDED decimal is what's stored:
@@ -72,82 +72,13 @@ object TsWarehouse {
     * — CommitLog's observe node), so window probes skip generations
     * at the LOG (readWhere) and `statsMax` answers "latest day in the
     * rollup" with zero scans. */
-  private val DateStats = Seq("date")
+  override protected def statsCols: Seq[String] = Seq("date")
 
-  /** Ingest — also the refresh-equivalence spec's one-shot reference
-    * builder. */
-  def materializeFrom(events: DataFrame, path: String): Unit =
-    graft.sources.CommitLog.transaction(events.sparkSession, path)(
-      _.replace(deltas(events), path, statsCols = DateStats))
-
-  /** REFRESH — fold a batch in at rest: append its delta rows.
-    * O(batch); no standing row is read or rewritten. */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val done = refreshTxn(spark, batch, path, batchId = None)
-    assert(done, "unreachable: un-id'd refreshes never skip")
-  }
-
-  /** The refresh transaction body, optionally committing a STREAM
-    * BATCH ID atomically with the delta rows — the exactly-once rung
-    * (StreamTwin, shared with Bm25/Quantile): a redelivery whose
-    * external batch marker was lost still folds NOTHING, because the
-    * committed `.stream` part is the ground truth.  Returns false
-    * when `batchId` is already committed.  The dup-check snapshot is
-    * taken only on the id'd path — a plain refresh pays no extra log
-    * listing (review r12b). */
-  private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
-      path: String, batchId: Option[Long]): Boolean =
-    graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
-      _.append(deltas(batch), path, statsCols = DateStats))
-
-  /** RETRACT — remove events from the standing rollup: append their
-    * per-key (vsum, n) deltas NEGATED.  O(removed), append-only like
-    * refresh (no standing row is read or rewritten).  Precondition:
-    * removed ⊆ what was ingested, i.e. counts never go net-negative —
-    * the caller's contract, exactly like refresh's batch-freshness
-    * one (BalanceWarehouse.retract's wording). */
-  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit =
-    graft.sources.CommitLog.transaction(spark, path)(_.append(deltas(removed)
-      .select(col("date"), col("event_type"), (-col("vsum")).as("vsum"),
-        (-col("n")).as("n")), path, statsCols = DateStats))
-
-  /** COMPACT — merge delta rows to one per key.  Probes bit-identical
-    * before/after.  Zero-count keys (fully-retracted days) are
-    * dropped, making the compacted state EQUAL to a rebuild on the
-    * surviving events.  Single-WRITER maintenance window; probes are
-    * free to run concurrently — their pinned CommitLog snapshot keeps
-    * serving the pre-compact generations (round 11). */
-  def compact(spark: SparkSession, path: String): Unit = {
-    // persist exactly the fold probes serve (foldedDeltas is the one
-    // definition of the merged state; mergedDaily is its probe-side
-    // projection)
-    val snap = graft.sources.CommitLog.snapshot(spark, path)
-    graft.sources.CommitLog.transaction(spark, path) { t =>
-      t.replace(foldedDeltas(spark, path), path, statsCols = DateStats)
-      // the streaming twin's id part folds to one generation WITHOUT
-      // forgetting ids — replay protection survives compaction
-      graft.sources.StreamTwin.compactIds(snap, t, path)
-    }
-    // physical reclaim is CommitLog.vacuum on the caller's retention
-    // cadence — never inline here, so a probe snapshot pinned before
-    // this compact keeps serving the pre-compact generations
-  }
-
-  /** The delta-merge read — the probe-side fold that keeps refresh
-    * append-only.  Fully-retracted keys (total n = 0) drop HERE, so
-    * densify sees exactly the key set a rebuild-on-survivors would
-    * produce; the served shape stays (date, event_type, v) — the
-    * count column never reaches a consumer.  Exposed un-checkpointed
-    * so the spec can assert its plan scans ONLY the warehouse (zero
-    * events scans). */
-  private def foldedDeltas(spark: SparkSession, path: String): DataFrame =
-    graft.sources.CommitLog.snapshot(spark, path).read(path)
-      .groupBy(col("date"), col("event_type"))
-      .agg(sum(col("vsum")).as("vsum"), sum(col("n")).as("n"))
-      .filter(col("n") =!= 0)
-
+  /** The probe-side projection of the merged rollup: the single
+    * probe-time 3-dp round over the folded decimal sums; the count
+    * column never reaches a consumer. */
   private[graft] def mergedDaily(spark: SparkSession, path: String): DataFrame =
-    foldedDeltas(spark, path)
+    merged(spark, path)
       .select(col("date"), col("event_type"),
         roundx(col("vsum").cast("double"), 3).as("v"))
 
@@ -211,16 +142,6 @@ object TsWarehouse {
     * Bit-equal grid ⇒ shares q_ts_forecast's oracle VERBATIM. */
   def forecastProbe(spark: SparkSession, path: String): DataFrame =
     TimeSeries.forecastOfGrid(grid(spark, path))
-
-  /** The once-per-JVM two-generation build (the Materialized
-    * pattern): rollup of the base split, then ONE refresh folding in
-    * the incoming split. */
-  def builtPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("ts_warehouse", dir) { p =>
-      val e = Tables(spark, dir).events
-      materializeFrom(e.filter(isBaseEvent), p)
-      refresh(spark, e.filter(!isBaseEvent), p)
-    }
 
   /** The week-grain ingest split the data-skipping demonstration
     * rides — the production refresh cadence (one generation per
@@ -313,10 +234,7 @@ object TsWarehouse {
         val kept = snap.readWhere(path, "date", Some(cutoff), None).getOrElse(
           throw new IllegalStateException( // unreachable: the max-date gen survives
             s"recentWindow: every generation pruned at cutoff $cutoff"))
-        kept.filter(col("date") >= lit(cutoff).cast("date"))
-          .groupBy(col("date"), col("event_type"))
-          .agg(sum(col("vsum")).as("vsum"), sum(col("n")).as("n"))
-          .filter(col("n") =!= 0)
+        merge(kept.filter(col("date") >= lit(cutoff).cast("date")))
           .select(col("date"), col("event_type"),
             roundx(col("vsum").cast("double"), 3).as("v"))
     }
@@ -331,27 +249,7 @@ object TsWarehouse {
 
   /** The retraction build: ingest + refresh as `builtPath`, then
     * retract the cross-cutting slice — grid == rebuild on the
-    * surviving events bit-for-bit (TsWarehouseSpec pins it). */
+    * surviving events bit-for-bit (RollupLawsSpec pins it). */
   def builtRetractedPath(spark: SparkSession, dir: String): String =
-    graft.sources.Materialized.pathFor("ts_warehouse_retracted", dir) { p =>
-      val e = Tables(spark, dir).events
-      materializeFrom(e.filter(isBaseEvent), p)
-      refresh(spark, e.filter(!isBaseEvent), p)
-      retract(spark, e.filter(isRetractedEvent), p)
-    }
-
-  /** The refresh's ONLINE twin at the EXACTLY-ONCE rung — the rollup
-    * maintained in flight: each micro-batch's per-key decimal partial
-    * sums fold in one transaction that also commits the engine batch
-    * id (associativity makes any batching serve a bit-equal grid; the
-    * BatchMarkers fast-skip absorbs common replays with zero Spark
-    * actions; the txn-embedded id closes the marker-lost crash
-    * window; the lineage guard makes checkpoint/marker divergence a
-    * loud failure; the count-triggered log checkpoint bounds marker
-    * I/O).  TsWarehouseSpec drives a MemoryStream in two batches ==
-    * the one-shot fold, plus a redelivered committed batch. */
-  def streamingRefresh(events: DataFrame, path: String,
-      checkpointEvery: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.sources.StreamTwin.exactlyOnce(events, path, checkpointEvery)(
-      (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
+    builtRetracted(spark, dir, isRetractedEvent)
 }

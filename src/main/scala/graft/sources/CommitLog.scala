@@ -872,7 +872,7 @@ object CommitLog {
         // members with a streaming twin fold the `.stream` id part to
         // one generation in the SAME transaction — replay protection
         // survives compaction without the id generations accumulating
-        // (the HllWarehouse.compact convention, shared here for the
+        // (the Rollup.compact convention, shared here for the
         // tombstone-keyed members)
         if (foldStreamIds) StreamTwin.compactIds(snap, t, base)
       }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BalanceWarehouse, Staking}
@@ -15,32 +14,26 @@ import graft.sources.Tables
   * rescans the accounts table, compaction is probe-invariant, and the
   * streaming twin folds micro-batches to the same histogram.
   */
-class BalanceWarehouseSpec extends GraftSpec {
+class BalanceWarehouseSpec extends RollupLawRows {
 
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-balw-$tag").resolve("idx").toString
 
-  private def balances = Tables(spark, Dir).customer
-    .join(broadcast(Tables(spark, Dir).nation),
-      col("c_nationkey") === col("n_nationkey"))
-    .select(col("c_custkey"), col("n_name").as("denom"),
-      col("c_acctbal").as("bal"))
-
   private def histOf(path: String): Set[(String, Long, Long)] =
-    BalanceWarehouse.mergedHist(spark, path).collect()
+    BalanceWarehouse.merged(spark, path).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
-  test("refresh equals the one-shot rebuild bit-for-bit") {
-    val b = balances
-    val base = b.filter(pmod(col("c_custkey"), lit(10L)) < 8)
-    val inc = b.filter(pmod(col("c_custkey"), lit(10L)) >= 8)
-    val a = tmp("refresh")
-    BalanceWarehouse.materializeFrom(base, a)
-    BalanceWarehouse.refresh(spark, inc, a)
-    val one = tmp("oneshot")
-    BalanceWarehouse.materializeFrom(b, one)
-    assert(histOf(a) == histOf(one), "refreshed histogram diverges from rebuild")
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("refresh equals the one-shot rebuild bit-for-bit",
+    RollupLaws.Refresh, "balance")
+  lawRow("the probe-side merge scans ONLY the warehouse — zero customer scans",
+    RollupLaws.Scan, "balance")
+  lawRow("compaction is probe-bit-invariant and leaves one row per key",
+    RollupLaws.Compact, "balance")
+  lawRow("retract ∘ refresh == rebuild-on-(base ∖ removed), BIT-FOR-BIT on the merged state",
+    RollupLaws.Retract, "balance")
+  lawRow("streaming refresh across micro-batches equals the one-shot fold",
+    RollupLaws.Stream, "balance")
 
   test("histogram-served Gini probe equals the inline query row-for-row") {
     val path = BalanceWarehouse.builtPath(spark, Dir)
@@ -50,58 +43,6 @@ class BalanceWarehouseSpec extends GraftSpec {
     assert(probe == rows(Staking.richlistGini(spark, Dir)),
       "gini probe diverges from inline")
     assert(probe.nonEmpty)
-  }
-
-  test("the probe-side merge scans ONLY the warehouse — zero customer scans") {
-    val path = BalanceWarehouse.builtPath(spark, Dir)
-    val scans = BalanceWarehouse.mergedHist(spark, path)
-      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "expected a warehouse scan")
-    val roots = scans.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.forall(_.contains(path)), s"unexpected scan roots: $roots")
-    assert(!roots.exists(r => r.contains("customer") || r.contains("nation")),
-      "probe merge re-reads raw account tables")
-  }
-
-  test("compaction is probe-bit-invariant and leaves one row per key") {
-    val b = balances
-    val p = tmp("compact")
-    BalanceWarehouse.materializeFrom(
-      b.filter(pmod(col("c_custkey"), lit(10L)) < 8), p)
-    BalanceWarehouse.refresh(spark,
-      b.filter(pmod(col("c_custkey"), lit(10L)) >= 8), p)
-    val before = histOf(p)
-    def rawCount() = sources.CommitLog.snapshot(spark, p).read(p).count()
-    val preCount = rawCount()
-    BalanceWarehouse.compact(spark, p)
-    val after = histOf(p)
-    val postCount = rawCount()
-    assert(before == after, "compaction changed the merged histogram")
-    assert(postCount == after.size && postCount <= preCount,
-      s"compact left $postCount rows for ${after.size} keys (pre $preCount)")
-  }
-
-  test("retract ∘ refresh == rebuild-on-(base ∖ removed), BIT-FOR-BIT on the merged state") {
-    val b = balances
-    val removed = b.filter(pmod(col("c_custkey"), lit(3L)) === 0)
-    val retracted = tmp("retract")
-    BalanceWarehouse.materializeFrom(
-      b.filter(pmod(col("c_custkey"), lit(10L)) < 8), retracted)
-    BalanceWarehouse.refresh(spark,
-      b.filter(pmod(col("c_custkey"), lit(10L)) >= 8), retracted)
-    BalanceWarehouse.retract(spark, removed, retracted)
-    val rebuilt = tmp("rebuilt")
-    BalanceWarehouse.materializeFrom(
-      b.filter(pmod(col("c_custkey"), lit(3L)) =!= 0), rebuilt)
-    // STATE equality, not just probe equality: zero-count keys fold
-    // out at merge, so the two histograms are literally the same rows
-    assert(histOf(retracted) == histOf(rebuilt),
-      "retracted state diverges from rebuild on the survivors")
-    // and compaction physically erases the retracted keys' rows
-    BalanceWarehouse.compact(spark, retracted)
-    assert(histOf(retracted) == histOf(rebuilt), "compaction broke the retracted state")
-    assert(sources.CommitLog.snapshot(spark, retracted).read(retracted).count()
-      == histOf(rebuilt).size)
   }
 
   test("retracted Gini probe equals the inline query over the surviving accounts") {
@@ -138,38 +79,13 @@ class BalanceWarehouseSpec extends GraftSpec {
       .filter(col("q") >= 9000L)
       .groupBy(col("denom"), col("q")).agg(sum(col("c")).as("c"))
       .collect().map(_.toString).toSet
-    val want = BalanceWarehouse.mergedHist(spark, p)
+    val want = BalanceWarehouse.merged(spark, p)
       .filter(col("q") >= 9000L).collect().map(_.toString).toSet
     assert(got == want && got.nonEmpty, "band read diverges from the full fold")
     // compact re-records q stats from the folded survivors
     BalanceWarehouse.compact(spark, p)
     assert(sources.CommitLog.snapshot(spark, p).statsMax(p, "q")
       .contains("15000"), "compact must re-record q stats")
-  }
-
-  test("streaming refresh across micro-batches equals the one-shot fold") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = balances.select(col("denom"), col("bal"))
-      .limit(300).collect()
-      .map(r => (r.getString(0), r.getDouble(1)))
-    val p = tmp("stream")
-    val mem = MemoryStream[(String, Double)]
-    val q = BalanceWarehouse.streamingRefresh(
-      mem.toDF().toDF("denom", "bal"), p)
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 3)
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val oneShot = tmp("stream-ref")
-    BalanceWarehouse.materializeFrom(
-      rows.toIndexedSeq.toDF("denom", "bal"), oneShot)
-    assert(histOf(p) == histOf(oneShot), "streamed fold diverges from one-shot")
   }
 
   test("CDC twin: an insert/update/delete change stream folds to the final-state histogram") {

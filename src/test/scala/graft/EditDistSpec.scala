@@ -9,23 +9,33 @@ import graft.dedup.EditDist
 class EditDistSpec extends GraftSpec {
   import spark.implicits._
 
+  /** The all-pairs reference: unbanded levenshtein on every pair
+    * within the length band.  The band pairs are pinned first, so the
+    * distance runs on those pairs only — never inside the nested-loop
+    * join, where the optimizer may evaluate it on every pair. */
   private def naive(docs: org.apache.spark.sql.DataFrame, d: Int) = {
     val t = docs.select(col("doc_id"), col("text"), length(col("text")).as("len"))
     t.as("a").join(t.as("b"), col("a.doc_id") < col("b.doc_id") &&
         abs(col("a.len") - col("b.len")) <= d)
-      .withColumn("ed", levenshtein(col("a.text"), col("b.text")))
-      .filter(col("ed") <= d)
       .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        col("ed").cast("bigint").as("ed"))
+        col("a.text").as("a_text"), col("b.text").as("b_text"))
+      .localCheckpoint()
+      .withColumn("ed", levenshtein(col("a_text"), col("b_text")))
+      .filter(col("ed") <= d)
+      .select(col("a_id"), col("b_id"), col("ed").cast("bigint").as("ed"))
   }
 
   private def asSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
+  private lazy val corpus = graft.sources.Tables(spark, Dir).documents
+
+  /** The corpus reference at d = 10, computed once per suite. */
+  private lazy val corpusNaive = asSet(naive(corpus, d = 10))
+
   test("staged pairs equal the naive join on the corpus") {
-    val docs = graft.sources.Tables(spark, Dir).documents
-    val staged = asSet(EditDist.stages(docs, d = 10).pairs)
-    val expected = asSet(naive(docs, d = 10))
+    val staged = asSet(EditDist.stages(corpus, d = 10).pairs)
+    val expected = corpusNaive
     assert(expected.nonEmpty, "corpus has no ed<=10 pairs - test is vacuous")
     assert(staged == expected,
       s"missed ${(expected -- staged).size}, extra ${(staged -- expected).size}")
@@ -57,15 +67,14 @@ class EditDistSpec extends GraftSpec {
   }
 
   test("prefix index is bounded: <= q*d+1 rows per doc regardless of length") {
-    val docs = graft.sources.Tables(spark, Dir).documents
-    val st = EditDist.stages(docs, d = 10)
-    val nDocs = docs.count()
+    val st = EditDist.stages(corpus, d = 10)
+    val nDocs = corpus.count()
     val perDocMax = st.prefix.groupBy(col("doc_id")).count()
       .agg(max(col("count"))).head().getLong(0)
     assert(perDocMax <= 4 * 10 + 1,
       s"per-doc prefix $perDocMax exceeds q*d+1") // q=4, d=10
     assert(st.prefix.count() <= nDocs * (4 * 10 + 1))
-    assert(st.collisions.count() > 0 && naive(docs, 10).count() > 0)
+    assert(st.collisions.count() > 0 && corpusNaive.nonEmpty)
   }
 
   test("cap-starved boilerplate docs still pair (quadratic fallback)") {

@@ -188,6 +188,22 @@ class ExpressionPropertySpec extends GraftSpec {
     })
   }
 
+  test("SumxArrAgg fails loudly past its 2^63-unscaled-unit ceiling (~9.22e12)") {
+    val s = spark
+    import s.implicits._
+    import graft.functions.VectorFunctions.sumxArr
+    // 5e12 + 5e12 = 1e13 unscaled-at-6dp overflows the long accumulator;
+    // 4e12 + 4e12 = 8e12 still sums exactly
+    val under = Seq(Seq(4e12), Seq(4e12)).toDF("v").agg(sumxArr(col("v")))
+      .head().getSeq[Double](0)
+    assert(under == Seq(8e12))
+    val e = intercept[Exception](
+      Seq(Seq(5e12), Seq(5e12)).toDF("v").agg(sumxArr(col("v"))).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[ArithmeticException]),
+      s"expected an ArithmeticException in the cause chain, got $e")
+  }
+
   test("GramHashes positional/distinct modes agree on gram identity") {
     val s = spark
     import s.implicits._

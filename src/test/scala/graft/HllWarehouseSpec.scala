@@ -15,7 +15,7 @@ import graft.sources.Tables
   * probe-invariant, the probe plan never rescans events, and the
   * streaming twin folds to probe-identical estimates.
   */
-class HllWarehouseSpec extends GraftSpec {
+class HllWarehouseSpec extends RollupLawRows {
 
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-hll-$tag").resolve("idx").toString
@@ -25,16 +25,15 @@ class HllWarehouseSpec extends GraftSpec {
       .map(r => r.getDate(0).toString ->
         (r.getLong(1), r.getLong(2))).toMap
 
-  test("refreshed index probes identically to the one-shot build") {
-    val e = Tables(spark, Dir).events
-    val a = tmp("refresh")
-    HllWarehouse.materializeFrom(e.filter(HllWarehouse.isBaseEvent), a)
-    HllWarehouse.refresh(spark, e.filter(!HllWarehouse.isBaseEvent), a)
-    val b = tmp("oneshot")
-    HllWarehouse.materializeFrom(e, b)
-    assert(estimates(a) == estimates(b),
-      "union of generation sketches diverges from the one-shot registers")
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("refreshed index probes identically to the one-shot build",
+    RollupLaws.Refresh, "hll")
+  lawRow("compaction is probe-invariant and leaves one sketch per day",
+    RollupLaws.Compact, "hll")
+  lawRow("the probe-side merge scans ONLY the warehouse — zero events scans",
+    RollupLaws.Scan, "hll")
+  lawRow("streaming refresh across micro-batches probes identically to one-shot",
+    RollupLaws.Stream, "hll")
 
   test("daily and trailing-7d estimates track exact distincts within 2%") {
     val path = HllWarehouse.builtPath(spark, Dir)
@@ -196,58 +195,4 @@ class HllWarehouseSpec extends GraftSpec {
       HllWarehouse.windowProbe(spark, tmp("never-built")))
   }
 
-  test("compaction is probe-invariant and leaves one sketch per day") {
-    val e = Tables(spark, Dir).events
-    val p = tmp("compact")
-    HllWarehouse.materializeFrom(e.filter(HllWarehouse.isBaseEvent), p)
-    HllWarehouse.refresh(spark, e.filter(!HllWarehouse.isBaseEvent), p)
-    val before = estimates(p)
-    val preCount = graft.sources.CommitLog.snapshot(spark, p).read(p).count()
-    HllWarehouse.compact(spark, p)
-    val after = estimates(p)
-    val postCount = graft.sources.CommitLog.snapshot(spark, p).read(p).count()
-    assert(before == after, "compaction changed probe estimates")
-    assert(postCount == after.size && postCount < preCount,
-      s"compact left $postCount rows for ${after.size} days (pre $preCount)")
-  }
-
-  test("the probe-side merge scans ONLY the warehouse — zero events scans") {
-    val path = HllWarehouse.builtPath(spark, Dir)
-    val scans = HllWarehouse.mergedDaily(spark, path)
-      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "expected a warehouse scan")
-    val roots = scans.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.forall(_.contains(path)), s"unexpected scan roots: $roots")
-    assert(!roots.exists(_.contains("events")), "probe merge re-reads raw events")
-  }
-
-  test("streaming refresh across micro-batches probes identically to one-shot") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = Tables(spark, Dir).events
-      .select(col("ts"), col("user_id"))
-      .limit(300).collect()
-      .map(r => (r.getTimestamp(0), r.getLong(1)))
-    val p = tmp("stream")
-    val mem = MemoryStream[(java.sql.Timestamp, Long)]
-    val q = HllWarehouse.streamingRefresh(
-      mem.toDF().toDF("ts", "user_id"), p)
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 3)
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val oneShot = tmp("stream-ref")
-    HllWarehouse.materializeFrom(
-      rows.toIndexedSeq.toDF("ts", "user_id"), oneShot)
-    def ests(path: String): Map[String, Long] =
-      HllWarehouse.mergedDaily(spark, path)
-        .select(col("date"), expr("hll_sketch_estimate(sk)").as("n")).collect()
-        .map(r => r.getDate(0).toString -> r.getLong(1)).toMap
-    assert(ests(p) == ests(oneShot), "streamed fold diverges from one-shot")
-  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions.words
@@ -17,7 +16,7 @@ import graft.sources.Tables
   * serving the same contract, the probe never scans documents, and
   * the streaming twin's fold satisfies the identical bound.
   */
-class MgWarehouseSpec extends GraftSpec {
+class MgWarehouseSpec extends RollupLawRows {
 
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-mgw-$tag").resolve("idx").toString
@@ -51,25 +50,11 @@ class MgWarehouseSpec extends GraftSpec {
     assertContract(probeMap(MgWarehouse.builtPath(spark, Dir)), "refreshed")
   }
 
-  test("compaction leaves one row and the probe keeps the contract") {
-    val d = Tables(spark, Dir).documents
-    val p = tmp("compact")
-    MgWarehouse.materializeFrom(d.filter(MgWarehouse.isBaseDoc), p)
-    MgWarehouse.refresh(spark, d.filter(!MgWarehouse.isBaseDoc), p)
-    MgWarehouse.compact(spark, p)
-    assert(graft.sources.CommitLog.snapshot(spark, p).read(p).count() == 1, "compact left more than one row")
-    assertContract(probeMap(p), "compacted")
-  }
-
-  test("the probe scans ONLY the warehouse — zero documents scans") {
-    val path = MgWarehouse.builtPath(spark, Dir)
-    val scans = MgWarehouse.summaryRead(spark, path)
-      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "expected a warehouse scan")
-    val roots = scans.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.forall(_.contains(path)), s"unexpected scan roots: $roots")
-    assert(!roots.exists(_.contains("documents")), "probe re-reads documents")
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("compaction leaves one row and the probe keeps the contract",
+    RollupLaws.Compact, "mg")
+  lawRow("the probe scans ONLY the warehouse — zero documents scans",
+    RollupLaws.Scan, "mg")
 
   test("streaming refresh across micro-batches keeps the contract") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -78,8 +63,8 @@ class MgWarehouseSpec extends GraftSpec {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
     val docs = Tables(spark, Dir).documents
     val p = tmp("stream")
-    MgWarehouse.materializeFrom(docs.filter(MgWarehouse.isBaseDoc), p)
-    val incoming = docs.filter(!MgWarehouse.isBaseDoc)
+    MgWarehouse.materializeFrom(docs.filter(MgWarehouse.isBase), p)
+    val incoming = docs.filter(!MgWarehouse.isBase)
       .select(col("doc_id"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     val mem = MemoryStream[(Long, String)]

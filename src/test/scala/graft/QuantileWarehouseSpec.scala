@@ -18,25 +18,24 @@ import graft.sources.Tables
   * same histogram.  (The DuckDB row_number oracle is the driver-side
   * gate; these pins cover the warehouse mechanics it can't see.)
   */
-class QuantileWarehouseSpec extends GraftSpec {
+class QuantileWarehouseSpec extends RollupLawRows {
 
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-quantw-$tag").resolve("idx").toString
 
-  private def histOf(path: String): Set[(String, String, Long, Long)] =
-    QuantileWarehouse.histRead(spark, path).collect()
-      .map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2), r.getLong(3)))
-      .toSet
-
-  test("refresh equals the one-shot rebuild bit-for-bit") {
-    val e = Tables(spark, Dir).events
-    val a = tmp("refresh")
-    QuantileWarehouse.materializeFrom(e.filter(QuantileWarehouse.isBaseEvent), a)
-    QuantileWarehouse.refresh(spark, e.filter(!QuantileWarehouse.isBaseEvent), a)
-    val one = tmp("oneshot")
-    QuantileWarehouse.materializeFrom(e, one)
-    assert(histOf(a) == histOf(one), "refreshed histogram diverges from rebuild")
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("refresh equals the one-shot rebuild bit-for-bit",
+    RollupLaws.Refresh, "quantile")
+  lawRow("the probe scans ONLY the warehouse — zero events scans",
+    RollupLaws.Scan, "quantile")
+  lawRow("compaction is probe-bit-invariant and leaves one row per key",
+    RollupLaws.Compact, "quantile")
+  lawRow("streaming refresh across micro-batches equals the one-shot fold",
+    RollupLaws.Stream, "quantile")
+  lawRow("streaming exactly-once: a redelivered committed batch folds nothing, even after compact",
+    RollupLaws.Replay, "quantile")
+  lawRow("RETRACT: negative deltas + compact == rebuild-on-survivors, bit-for-bit",
+    RollupLaws.Retract, "quantile")
 
   test("quantile tail: hand-computed interpolation on a planted histogram") {
     import spark.implicits._
@@ -112,40 +111,10 @@ class QuantileWarehouseSpec extends GraftSpec {
       s"pruned generations leaked into the window read: ${files.toSeq}")
   }
 
-  test("the probe scans ONLY the warehouse — zero events scans") {
-    val path = QuantileWarehouse.builtPath(spark, Dir)
-    val scans = QuantileWarehouse.histRead(spark, path)
-      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "expected a warehouse scan")
-    val roots = scans.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.forall(_.contains(path)), s"unexpected scan roots: $roots")
-    assert(!roots.exists(_.contains("events")), "probe re-reads raw events")
-  }
-
-  test("compaction is probe-bit-invariant and leaves one row per key") {
-    val e = Tables(spark, Dir).events
-    val p = tmp("compact")
-    QuantileWarehouse.materializeFrom(e.filter(QuantileWarehouse.isBaseEvent), p)
-    QuantileWarehouse.refresh(spark, e.filter(!QuantileWarehouse.isBaseEvent), p)
-    val before = histOf(p)
-    val beforeQuants = QuantileWarehouse.probe(spark, p)
-      .collect().map(_.toString).toSet
-    def rawCount() = sources.CommitLog.snapshot(spark, p).read(p).count()
-    val preCount = rawCount()
-    QuantileWarehouse.compact(spark, p)
-    val after = histOf(p)
-    val postCount = rawCount()
-    assert(before == after, "compaction changed the merged histogram")
-    assert(postCount == after.size && postCount <= preCount,
-      s"compact left $postCount rows for ${after.size} keys (pre $preCount)")
-    assert(QuantileWarehouse.probe(spark, p).collect().map(_.toString).toSet
-      == beforeQuants, "compaction changed probe output")
-  }
-
   test("sketch lane: window quantiles land within the KLL rank bound of exact") {
-    val path = QuantileWarehouse.sketchBuiltPath(spark, Dir)
+    val path = QuantileWarehouse.Kll.builtPath(spark, Dir)
     val (start, end) = ("2024-01-08", "2024-01-21")
-    val got = QuantileWarehouse.sketchWindowProbe(spark, path, start, end)
+    val got = QuantileWarehouse.Kll.windowProbe(spark, path, start, end)
       .collect().map(r => r.getString(0) ->
         Seq(0.5 -> r.getDouble(1), 0.9 -> r.getDouble(2), 0.99 -> r.getDouble(3)))
       .toMap
@@ -165,13 +134,6 @@ class QuantileWarehouseSpec extends GraftSpec {
           s"$denom p$p: reported $v has exact rank $rank (n=${n.toInt})")
       }
     }
-    // zero events scans: the probe's input read is warehouse-only
-    val roots = QuantileWarehouse.sketchRead(spark, path)
-      .queryExecution.sparkPlan.collect {
-        case f: FileSourceScanExec => f
-      }.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.nonEmpty && roots.forall(_.contains(path)),
-      s"unexpected scan roots: $roots")
   }
 
   test("sketch lane streaming refresh keeps the rank bound across micro-batches") {
@@ -184,7 +146,7 @@ class QuantileWarehouseSpec extends GraftSpec {
       .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
     val p = tmp("skstream")
     val mem = MemoryStream[(String, String, Double)]
-    val q = QuantileWarehouse.sketchStreamingRefresh(
+    val q = QuantileWarehouse.Kll.streamingRefresh(
       mem.toDF().toDF("ts", "event_type", "value")
         .withColumn("ts", col("ts").cast("timestamp")), p)
     try {
@@ -195,7 +157,7 @@ class QuantileWarehouseSpec extends GraftSpec {
       q.processAllAvailable()
     } finally q.stop()
     // all-days window covers the full corpus: bound vs exact ranks
-    val got = QuantileWarehouse.sketchWindowProbe(spark, p,
+    val got = QuantileWarehouse.Kll.windowProbe(spark, p,
         "2024-01-01", "2024-12-31")
       .collect().map(r => r.getString(0) ->
         Seq(0.5 -> r.getDouble(1), 0.9 -> r.getDouble(2), 0.99 -> r.getDouble(3)))
@@ -210,89 +172,4 @@ class QuantileWarehouseSpec extends GraftSpec {
     }
   }
 
-  test("streaming refresh across micro-batches equals the one-shot fold") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = Tables(spark, Dir).events
-      .select(col("ts").cast("string"), col("event_type"), col("value"))
-      .limit(300).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
-    val p = tmp("stream")
-    val mem = MemoryStream[(String, String, Double)]
-    val q = QuantileWarehouse.streamingRefresh(
-      mem.toDF().toDF("ts", "event_type", "value")
-        .withColumn("ts", col("ts").cast("timestamp")), p)
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 3)
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val oneShot = tmp("stream-ref")
-    QuantileWarehouse.materializeFrom(
-      rows.toIndexedSeq.toDF("ts", "event_type", "value")
-        .withColumn("ts", col("ts").cast("timestamp")), oneShot)
-    assert(histOf(p) == histOf(oneShot), "streamed fold diverges from one-shot")
-  }
-
-  test("streaming exactly-once: a redelivered committed batch folds nothing, even after compact") {
-    def folded(path: String): Set[(String, String, Long, Long)] =
-      QuantileWarehouse.histRead(spark, path)
-        .groupBy(col("date"), col("denom"), col("q")).agg(sum(col("c")).as("c"))
-        .collect()
-        .map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2),
-          r.getLong(3))).toSet
-    val e = Tables(spark, Dir).events
-    val p = tmp("xonce")
-    QuantileWarehouse.materializeFrom(e.filter(QuantileWarehouse.isBaseEvent), p)
-    val batch = e.filter(!QuantileWarehouse.isBaseEvent)
-    // first delivery folds
-    assert(QuantileWarehouse.refreshTxn(spark, batch, p, batchId = Some(7L)))
-    val after = folded(p)
-    // the fold equals the mod-10 two-generation build (same events)
-    assert(after == folded(QuantileWarehouse.builtPath(spark, Dir)),
-      "id'd refresh diverges from the plain two-generation build")
-    // redelivery: the committed `.stream` id makes the verb fold NOTHING
-    assert(!QuantileWarehouse.refreshTxn(spark, batch, p, batchId = Some(7L)),
-      "redelivered committed batch must skip")
-    assert(folded(p) == after, "redelivery changed the histogram")
-    // compaction folds the id part without forgetting ids
-    QuantileWarehouse.compact(spark, p)
-    assert(folded(p) == after, "compaction changed the histogram")
-    assert(!QuantileWarehouse.refreshTxn(spark, batch, p, batchId = Some(7L)),
-      "compaction forgot a committed batch id")
-    // a genuinely new id still folds
-    assert(QuantileWarehouse.refreshTxn(spark,
-      e.filter(QuantileWarehouse.isBaseEvent).limit(50), p, batchId = Some(8L)))
-  }
-
-  test("RETRACT: negative deltas + compact == rebuild-on-survivors, bit-for-bit") {
-    val e = Tables(spark, Dir).events
-    val removed = e.filter(pmod(col("event_id"), lit(3L)) === 0)
-    val retracted = Files.createTempDirectory("graft-qw-retr-").resolve("h").toString
-    QuantileWarehouse.materializeFrom(
-      e.filter(pmod(col("event_id"), lit(10L)) < 8), retracted)
-    QuantileWarehouse.refresh(spark,
-      e.filter(pmod(col("event_id"), lit(10L)) >= 8), retracted)
-    QuantileWarehouse.retract(spark, removed, retracted)
-    val rebuilt = Files.createTempDirectory("graft-qw-rebuilt-").resolve("h").toString
-    QuantileWarehouse.materializeFrom(
-      e.filter(pmod(col("event_id"), lit(3L)) =!= 0), rebuilt)
-    def probeRows(p: String): Set[Seq[Any]] =
-      QuantileWarehouse.probe(spark, p).collect().map(_.toSeq).toSet
-    val r = probeRows(retracted)
-    assert(r.nonEmpty && r == probeRows(rebuilt),
-      "retracted quantiles diverge from the rebuild-on-survivors probe")
-    // compact folds zero-count keys out: state == rebuild state
-    QuantileWarehouse.compact(spark, retracted)
-    QuantileWarehouse.compact(spark, rebuilt)
-    def hist(p: String): Set[Seq[Any]] =
-      QuantileWarehouse.histRead(spark, p).collect().map(_.toSeq).toSet
-    assert(hist(retracted) == hist(rebuilt),
-      "compacted retracted state diverges from the rebuild state")
-    assert(probeRows(retracted) == r, "compact changed the probe")
-  }
 }

@@ -33,7 +33,7 @@ class SnapshotLogSpec extends GraftSpec {
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
   private def flatHist(path: String): Set[(String, Long, Long)] =
-    BalanceWarehouse.mergedHist(spark, path).collect()
+    BalanceWarehouse.merged(spark, path).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
 
   /** A fresh three-generation log (base / incoming / retraction) the
@@ -42,9 +42,9 @@ class SnapshotLogSpec extends GraftSpec {
   private def freshGenLog(): String = {
     val p = tmp("log")
     val b = balances
-    BalanceWarehouse.refreshGen(b.filter(BalanceWarehouse.isBaseCust), p)
-    BalanceWarehouse.refreshGen(b.filter(!BalanceWarehouse.isBaseCust), p)
-    BalanceWarehouse.retractGen(b.filter(BalanceWarehouse.isRetractedCust), p)
+    BalanceWarehouse.refresh(spark, b.filter(BalanceWarehouse.isBase), p)
+    BalanceWarehouse.refresh(spark, b.filter(!BalanceWarehouse.isBase), p)
+    BalanceWarehouse.retract(spark, b.filter(BalanceWarehouse.isRetractedCust), p)
     p
   }
 
@@ -52,7 +52,7 @@ class SnapshotLogSpec extends GraftSpec {
     val p = BalanceWarehouse.builtGenPath(spark, Dir)
     val b = balances
     val baseOnly = tmp("base")
-    BalanceWarehouse.materializeFrom(b.filter(BalanceWarehouse.isBaseCust), baseOnly)
+    BalanceWarehouse.materializeFrom(b.filter(BalanceWarehouse.isBase), baseOnly)
     assert(histAsOf(p, 0) == flatHist(baseOnly),
       "asOf(0) diverges from the base-only rebuild")
     val full = tmp("full")

@@ -1,12 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{CorpusStats, StatsWarehouse}
-import graft.sources.Tables
 
 /** The length-histogram warehouse contract: refresh == one-shot
   * rebuild bit-for-bit (integer-sum associativity), the
@@ -16,27 +12,19 @@ import graft.sources.Tables
   * documents, compaction is probe-invariant, and the streaming twin
   * folds micro-batches to the same index.
   */
-class StatsWarehouseSpec extends GraftSpec {
+class StatsWarehouseSpec extends RollupLawRows {
 
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-stw-$tag").resolve("idx").toString
-
-  private def rowsOf(path: String): Set[(String, Long, Long, Long)] =
-    graft.sources.CommitLog.snapshot(spark, path).read(path)
-      .groupBy(col("lang"), col("nw"))
-      .agg(sum(col("cnt")).as("cnt"), sum(col("ncs")).as("ncs"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-
-  test("refresh equals the one-shot rebuild bit-for-bit") {
-    val d = Tables(spark, Dir).documents
-    val a = tmp("refresh")
-    StatsWarehouse.materializeFrom(d.filter(StatsWarehouse.isBaseDoc), a)
-    StatsWarehouse.refresh(spark, d.filter(!StatsWarehouse.isBaseDoc), a)
-    val b = tmp("oneshot")
-    StatsWarehouse.materializeFrom(d, b)
-    assert(rowsOf(a) == rowsOf(b), "refreshed histogram diverges from rebuild")
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("refresh equals the one-shot rebuild bit-for-bit",
+    RollupLaws.Refresh, "stats")
+  lawRow("the probe-side merge scans ONLY the warehouse — zero documents scans",
+    RollupLaws.Scan, "stats")
+  lawRow("compaction is probe-bit-invariant and leaves one row per key",
+    RollupLaws.Compact, "stats")
+  lawRow("streaming refresh across micro-batches equals the one-shot fold",
+    RollupLaws.Stream, "stats")
+  lawRow("RETRACT: negative deltas == rebuild-on-survivors, bit-for-bit on the merged state",
+    RollupLaws.Retract, "stats")
 
   test("histogram-served profile equals inline d_corpus_stats row-for-row") {
     val path = StatsWarehouse.builtPath(spark, Dir)
@@ -100,77 +88,4 @@ class StatsWarehouseSpec extends GraftSpec {
     }
   }
 
-  test("the probe-side merge scans ONLY the warehouse — zero documents scans") {
-    val path = StatsWarehouse.builtPath(spark, Dir)
-    val scans = StatsWarehouse.mergedHist(spark, path)
-      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "expected a warehouse scan")
-    val roots = scans.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.forall(_.contains(path)), s"unexpected scan roots: $roots")
-    assert(!roots.exists(_.contains("documents")), "probe merge re-reads documents")
-  }
-
-  test("compaction is probe-bit-invariant and leaves one row per key") {
-    val d = Tables(spark, Dir).documents
-    val p = tmp("compact")
-    StatsWarehouse.materializeFrom(d.filter(StatsWarehouse.isBaseDoc), p)
-    StatsWarehouse.refresh(spark, d.filter(!StatsWarehouse.isBaseDoc), p)
-    val before = rowsOf(p)
-    val preCount = graft.sources.CommitLog.snapshot(spark, p).read(p).count()
-    StatsWarehouse.compact(spark, p)
-    val after = rowsOf(p)
-    val postCount = graft.sources.CommitLog.snapshot(spark, p).read(p).count()
-    assert(before == after, "compaction changed the merged histogram")
-    assert(postCount == after.size && postCount < preCount,
-      s"compact left $postCount rows for ${after.size} keys (pre $preCount)")
-  }
-
-  test("streaming refresh across micro-batches equals the one-shot fold") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = Tables(spark, Dir).documents
-      .select(col("doc_id"), col("text"), col("lang"))
-      .limit(200).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val p = tmp("stream")
-    val mem = MemoryStream[(Long, String, String)]
-    val q = StatsWarehouse.streamingRefresh(
-      mem.toDF().toDF("doc_id", "text", "lang"), p)
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 3)
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val oneShot = tmp("stream-ref")
-    StatsWarehouse.materializeFrom(
-      rows.toIndexedSeq.toDF("doc_id", "text", "lang"), oneShot)
-    assert(rowsOf(p) == rowsOf(oneShot), "streamed fold diverges from one-shot")
-  }
-
-  test("RETRACT: negative deltas == rebuild-on-survivors, bit-for-bit on the merged state") {
-    val docs = sources.Tables(spark, Dir).documents
-    val retracted = java.nio.file.Files
-      .createTempDirectory("graft-sw-retr-").resolve("h").toString
-    graft.operators.StatsWarehouse.materializeFrom(
-      docs.filter(pmod(col("doc_id"), lit(10L)) < 8), retracted)
-    graft.operators.StatsWarehouse.refresh(spark,
-      docs.filter(pmod(col("doc_id"), lit(10L)) >= 8), retracted)
-    graft.operators.StatsWarehouse.retract(spark,
-      docs.filter(pmod(col("doc_id"), lit(3L)) === 0), retracted)
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft-sw-rebuilt-").resolve("h").toString
-    graft.operators.StatsWarehouse.materializeFrom(
-      docs.filter(pmod(col("doc_id"), lit(3L)) =!= 0), rebuilt)
-    def hist(p: String): Set[Seq[Any]] =
-      graft.operators.StatsWarehouse.mergedHist(spark, p)
-        .collect().map(_.toSeq).toSet
-    assert(hist(retracted).nonEmpty && hist(retracted) == hist(rebuilt),
-      "retracted stats state diverges from the rebuild on survivors")
-    graft.operators.StatsWarehouse.compact(spark, retracted)
-    assert(hist(retracted) == hist(rebuilt), "compact broke the retracted state")
-  }
 }

@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BalanceWarehouse, HllWarehouse, JoinViewWarehouse,
-  MgWarehouse, RichlistWarehouse, StatsWarehouse}
+import graft.operators.{BalanceWarehouse, JoinViewWarehouse, RichlistWarehouse}
 import graft.similarity.{KnnGraphWarehouse, Knn, PcaWarehouse}
 import graft.sources.Tables
 
@@ -17,10 +16,11 @@ import graft.sources.Tables
   * (StreamTwin.refreshTxnWith / exactlyOnce / compactIds), so one
   * member's green is not another's — each member's verb body routes
   * its own parts through the txn, and each is pinned here.
-  * Bm25/Ts/Quantile (the round-12 rung) keep their pins in their own
-  * suites; KnnGraphWarehouse additionally gets the MemoryStream
-  * end-to-end drive (stream == one-shot build). */
-class StreamTwinSpec extends GraftSpec {
+  * The Rollup members run the shared Replay law (RollupLawsSpec);
+  * Bm25 keeps its pin in its own suite; KnnGraphWarehouse
+  * additionally gets the MemoryStream end-to-end drive (stream ==
+  * one-shot build). */
+class StreamTwinSpec extends RollupLawRows {
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-twin-$tag").resolve("wh").toString
@@ -50,26 +50,13 @@ class StreamTwinSpec extends GraftSpec {
   private lazy val events = Tables(spark, Dir).events.limit(300).localCheckpoint()
   private lazy val docs = Tables(spark, Dir).documents.limit(200).localCheckpoint()
 
-  test("hll twin: redelivered committed batch folds nothing, survives compact") {
-    drill("hll",
-      (p, id) => HllWarehouse.refreshTxn(spark, events, p, id),
-      p => HllWarehouse.compact(spark, p),
-      p => rows(HllWarehouse.probe(spark, p)))
-  }
-
-  test("mg twin: redelivered committed batch folds nothing, survives compact") {
-    drill("mg",
-      (p, id) => MgWarehouse.refreshTxn(spark, docs, p, id),
-      p => MgWarehouse.compact(spark, p),
-      p => rows(MgWarehouse.probe(spark, p)))
-  }
-
-  test("stats twin: redelivered committed batch folds nothing, survives compact") {
-    drill("stats",
-      (p, id) => StatsWarehouse.refreshTxn(spark, docs, p, id),
-      p => StatsWarehouse.compact(spark, p),
-      p => rows(StatsWarehouse.mergedHist(spark, p)))
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("hll twin: redelivered committed batch folds nothing, survives compact",
+    RollupLaws.Replay, "hll")
+  lawRow("mg twin: redelivered committed batch folds nothing, survives compact",
+    RollupLaws.Replay, "mg")
+  lawRow("stats twin: redelivered committed batch folds nothing, survives compact",
+    RollupLaws.Replay, "stats")
 
   test("pca twin: redelivered committed batch folds nothing, survives compact") {
     val emb = Tables(spark, Dir).embeddings.limit(100).localCheckpoint()
@@ -85,17 +72,14 @@ class StreamTwinSpec extends GraftSpec {
         col("c_nationkey") === col("n_nationkey"))
       .select(col("n_name").as("denom"), col("c_acctbal").as("bal"))
       .localCheckpoint()
-    drill("balance",
-      (p, id) => BalanceWarehouse.refreshTxn(spark, bal, p, id),
-      p => BalanceWarehouse.compact(spark, p),
-      p => rows(BalanceWarehouse.mergedHist(spark, p)))
+    RollupLaws.check(spark, Dir, RollupLaws.Replay, "balance")
     // the CDC ledger: replaying a committed change batch would
     // re-apply −/+ halves — corruption, not noise; it must skip
     val changes = bal.withColumn("op", lit(1)).localCheckpoint()
     drill("balance-cdc",
       (p, id) => BalanceWarehouse.changesTxn(spark, changes, p, id),
       p => BalanceWarehouse.compact(spark, p),
-      p => rows(BalanceWarehouse.mergedHist(spark, p)))
+      p => rows(BalanceWarehouse.merged(spark, p)))
   }
 
   test("richlist twin: redelivery folds nothing (duplicated totals would shift every share)") {

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.{TimeSeries, TsWarehouse}
@@ -15,29 +14,24 @@ import graft.sources.Tables
   * probe-invariant, and the streaming twin folds micro-batches to the
   * same grid.
   */
-class TsWarehouseSpec extends GraftSpec {
+class TsWarehouseSpec extends RollupLawRows {
 
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-tsw-$tag").resolve("idx").toString
 
-  private def rowsOf(path: String): Set[(String, String, java.math.BigDecimal, Long)] =
-    sources.CommitLog.snapshot(spark, path).read(path)
-      .groupBy(col("date"), col("event_type"))
-      .agg(sum(col("vsum")).as("vsum"), sum(col("n")).as("n"))
-      .filter(col("n") =!= 0)
-      .collect()
-      .map(r => (r.getDate(0).toString, r.getString(1), r.getDecimal(2),
-        r.getLong(3))).toSet
-
-  test("refresh equals the one-shot rebuild bit-for-bit") {
-    val e = Tables(spark, Dir).events
-    val a = tmp("refresh")
-    TsWarehouse.materializeFrom(e.filter(TsWarehouse.isBaseEvent), a)
-    TsWarehouse.refresh(spark, e.filter(!TsWarehouse.isBaseEvent), a)
-    val b = tmp("oneshot")
-    TsWarehouse.materializeFrom(e, b)
-    assert(rowsOf(a) == rowsOf(b), "refreshed index diverges from rebuild")
-  }
+  // lifecycle laws — defined once in RollupLawsSpec
+  lawRow("refresh equals the one-shot rebuild bit-for-bit",
+    RollupLaws.Refresh, "ts")
+  lawRow("the probe-side merge scans ONLY the warehouse — zero events scans",
+    RollupLaws.Scan, "ts")
+  lawRow("compaction is probe-bit-invariant and leaves one row per key",
+    RollupLaws.Compact, "ts")
+  lawRow("retract ∘ refresh equals rebuild-on-survivors bit-for-bit — the (vsum, n) cure",
+    RollupLaws.Retract, "ts")
+  lawRow("streaming exactly-once: a redelivered committed batch folds nothing, even after compact",
+    RollupLaws.Replay, "ts")
+  lawRow("streaming refresh across micro-batches equals the one-shot fold",
+    RollupLaws.Stream, "ts")
 
   test("rollup-served anomaly probe equals the inline query row-for-row") {
     val path = TsWarehouse.builtPath(spark, Dir)
@@ -99,50 +93,6 @@ class TsWarehouseSpec extends GraftSpec {
     assert(probe == rows(TimeSeries.tsForecast(spark, Dir)),
       "forecast probe diverges from inline")
     assert(probe.nonEmpty)
-  }
-
-  test("the probe-side merge scans ONLY the warehouse — zero events scans") {
-    val path = TsWarehouse.builtPath(spark, Dir)
-    val scans = TsWarehouse.mergedDaily(spark, path)
-      .queryExecution.sparkPlan.collect { case f: FileSourceScanExec => f }
-    assert(scans.nonEmpty, "expected a warehouse scan")
-    val roots = scans.flatMap(_.relation.location.rootPaths).map(_.toString)
-    assert(roots.forall(r => r.contains(path)), s"unexpected scan roots: $roots")
-    assert(!roots.exists(_.contains("events")), "probe merge re-reads raw events")
-  }
-
-  test("compaction is probe-bit-invariant and leaves one row per key") {
-    val e = Tables(spark, Dir).events
-    val p = tmp("compact")
-    TsWarehouse.materializeFrom(e.filter(TsWarehouse.isBaseEvent), p)
-    TsWarehouse.refresh(spark, e.filter(!TsWarehouse.isBaseEvent), p)
-    val before = rowsOf(p)
-    def rawCount() = sources.CommitLog.snapshot(spark, p).read(p).count()
-    val preCount = rawCount()
-    TsWarehouse.compact(spark, p)
-    val after = rowsOf(p)
-    val postCount = rawCount()
-    assert(before == after, "compaction changed the merged statistic")
-    assert(postCount == after.size && postCount < preCount,
-      s"compact left $postCount rows for ${after.size} keys (pre $preCount)")
-  }
-
-  test("retract ∘ refresh equals rebuild-on-survivors bit-for-bit — the (vsum, n) cure") {
-    val e = Tables(spark, Dir).events
-    val a = tmp("retract")
-    TsWarehouse.materializeFrom(e.filter(TsWarehouse.isBaseEvent), a)
-    TsWarehouse.refresh(spark, e.filter(!TsWarehouse.isBaseEvent), a)
-    TsWarehouse.retract(spark, e.filter(TsWarehouse.isRetractedEvent), a)
-    val b = tmp("survivors")
-    TsWarehouse.materializeFrom(e.filter(!TsWarehouse.isRetractedEvent), b)
-    assert(rowsOf(a) == rowsOf(b), "retracted index diverges from rebuild-on-survivors")
-    // and the probe-side grid (post-merge, post-densify) agrees too
-    def grid(p: String): Set[String] =
-      TsWarehouse.grid(spark, p).collect().map(_.toString).toSet
-    assert(grid(a) == grid(b), "retracted grid diverges from rebuild grid")
-    // compaction commutes with the retraction (zero-count keys purge)
-    TsWarehouse.compact(spark, a)
-    assert(rowsOf(a) == rowsOf(b), "compaction after retract changed the statistic")
   }
 
   test("a fully-retracted key drops; a zero-sum day survives — the n column's job") {
@@ -302,50 +252,4 @@ class TsWarehouseSpec extends GraftSpec {
       s"scan fallback must still serve the window: $served")
   }
 
-  test("streaming exactly-once: a redelivered committed batch folds nothing, even after compact") {
-    val e = Tables(spark, Dir).events
-    val p = tmp("xonce")
-    TsWarehouse.materializeFrom(e.filter(TsWarehouse.isBaseEvent), p)
-    val batch = e.filter(!TsWarehouse.isBaseEvent)
-    assert(TsWarehouse.refreshTxn(spark, batch, p, batchId = Some(7L)))
-    val after = rowsOf(p)
-    // redelivery: the committed `.stream` id makes the verb fold NOTHING
-    assert(!TsWarehouse.refreshTxn(spark, batch, p, batchId = Some(7L)),
-      "redelivered committed batch must skip")
-    assert(rowsOf(p) == after, "redelivery changed the rollup")
-    // compaction folds the id part without forgetting ids
-    TsWarehouse.compact(spark, p)
-    assert(rowsOf(p) == after, "compaction changed the rollup")
-    assert(!TsWarehouse.refreshTxn(spark, batch, p, batchId = Some(7L)),
-      "compaction forgot a committed batch id")
-    // a genuinely new id still folds
-    assert(TsWarehouse.refreshTxn(spark,
-      e.filter(TsWarehouse.isBaseEvent).limit(50), p, batchId = Some(8L)))
-  }
-
-  test("streaming refresh across micro-batches equals the one-shot fold") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val s = spark
-    import s.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-    val rows = Tables(spark, Dir).events
-      .select(col("ts"), col("event_type"), col("value"))
-      .limit(200).collect()
-      .map(r => (r.getTimestamp(0), r.getString(1), r.getDouble(2)))
-    val p = tmp("stream")
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val q = TsWarehouse.streamingRefresh(
-      mem.toDF().toDF("ts", "event_type", "value"), p)
-    try {
-      val (b1, b2) = rows.splitAt(rows.length / 3)
-      mem.addData(b1.toIndexedSeq)
-      q.processAllAvailable()
-      mem.addData(b2.toIndexedSeq)
-      q.processAllAvailable()
-    } finally q.stop()
-    val oneShot = tmp("stream-ref")
-    TsWarehouse.materializeFrom(
-      rows.toIndexedSeq.toDF("ts", "event_type", "value"), oneShot)
-    assert(rowsOf(p) == rowsOf(oneShot), "streamed fold diverges from one-shot")
-  }
 }

@@ -190,8 +190,8 @@ class WarehouseCommitSpec extends GraftSpec {
     import graft.operators.StatsWarehouse
     val d = t.documents
     val p = tmp("stats")
-    StatsWarehouse.materializeFrom(d.filter(StatsWarehouse.isBaseDoc), p)
-    StatsWarehouse.refresh(spark, d.filter(!StatsWarehouse.isBaseDoc), p)
+    StatsWarehouse.materializeFrom(d.filter(StatsWarehouse.isBase), p)
+    StatsWarehouse.refresh(spark, d.filter(!StatsWarehouse.isBase), p)
     def probe() = StatsWarehouse.statsProbe(spark, Dir, p)
       .collect().map(_.toString).toSet
     val before = probe()
@@ -211,8 +211,8 @@ class WarehouseCommitSpec extends GraftSpec {
     import graft.operators.HllWarehouse
     val e = t.events
     val hp = tmp("hll")
-    HllWarehouse.materializeFrom(e.filter(HllWarehouse.isBaseEvent), hp)
-    HllWarehouse.refresh(spark, e.filter(!HllWarehouse.isBaseEvent), hp)
+    HllWarehouse.materializeFrom(e.filter(HllWarehouse.isBase), hp)
+    HllWarehouse.refresh(spark, e.filter(!HllWarehouse.isBase), hp)
     def hprobe() = HllWarehouse.probe(spark, hp)
       .collect().map(_.toString).toSet
     val hBefore = hprobe()
@@ -224,10 +224,10 @@ class WarehouseCommitSpec extends GraftSpec {
     // QuantileWarehouse — the windowed-exact shape
     val e = t.events
     val qp = tmp("conc-q")
-    QuantileWarehouse.materializeFrom(e.filter(QuantileWarehouse.isBaseEvent), qp)
+    QuantileWarehouse.materializeFrom(e.filter(QuantileWarehouse.isBase), qp)
     val pinnedQ = QuantileWarehouse.probe(spark, qp) // snapshot pinned NOW
     val beforeQ = pinnedQ.collect().map(_.toString).toSet
-    QuantileWarehouse.refresh(spark, e.filter(!QuantileWarehouse.isBaseEvent), qp)
+    QuantileWarehouse.refresh(spark, e.filter(!QuantileWarehouse.isBase), qp)
     // collected AFTER the commit: the pinned plan still serves the old state
     assert(pinnedQ.collect().map(_.toString).toSet == beforeQ,
       "a committed refresh tore a pinned quantile probe")
