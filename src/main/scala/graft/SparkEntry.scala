@@ -701,7 +701,7 @@ object SparkEntry {
     // (StatsWarehouse): integer counts, bit-equal refresh, EXACT
     // reconstruction — shares d_corpus_stats' oracle verbatim
     "d_corpus_stats_probe" -> ((s: SparkSession, d: String) =>
-      StatsWarehouse.statsProbe(s, d, StatsWarehouse.builtPath(s, d))),
+      StatsWarehouse.statsProbe(s, StatsWarehouse.builtPath(s, d))),
     "t_token_rarity" -> (CorpusStats.tokenRarity _),
     "t_perplexity" -> (CorpusStats.perplexity _),
     "t_perplexity_bigram" -> (BigramLm.perplexityBigram _),

@@ -50,7 +50,7 @@ object StatsWarehouse extends AdditiveRollup("stats_warehouse", "doc_id",
     * the index at rest.  base ∪ incoming = all documents and the
     * histogram preserves the length multiset, so the result equals
     * d_corpus_stats row for row and shares its oracle VERBATIM. */
-  def statsProbe(spark: SparkSession, dir: String, path: String): DataFrame =
+  def statsProbe(spark: SparkSession, path: String): DataFrame =
     statsOfHist(merged(spark, path))
 
   /** d_corpus_stats' exact output reconstructed from a (lang, nw,

@@ -70,6 +70,29 @@ object Logreg {
     lit(1.0) / (lit(1.0) +
       exp(-(dot(col("vn"), lit(w)) + element_at(lit(Array(b)), 1))))
 
+  /** Rows violating the trainers' input contract: `vn` null or not
+    * exactly `dims` wide.  Such a row would fold silently into the
+    * gradient sums, so it rides the trainer's count job and fails the
+    * run (`checkedN`) instead. */
+  private def badVn(dims: Int) =
+    count(when(col("vn").isNull || size(col("vn")) =!= dims, 1))
+
+  /** The training-set size `n`, or a loud failure when `bad` rows break
+    * the input contract. */
+  private def checkedN(n: Long, bad: Long, dims: Int): Double = {
+    if (bad > 0) throw new IllegalArgumentException(
+      s"Logreg: $bad of $n training rows have a null vn or one whose " +
+        s"size is not dims = $dims")
+    n.toDouble
+  }
+
+  /** `checkedN` of `eN`: its size and its contract violations in one
+    * aggregate, so the check costs no job beyond the count. */
+  private def checkedCount(eN: DataFrame, dims: Int): Double = {
+    val r = eN.agg(count(lit(1)), badVn(dims)).head()
+    checkedN(r.getLong(0), r.getLong(1), dims)
+  }
+
   /** Full-batch GD for `iters` rounds at rate `lr`.  Returns
     * ((weights, bias), history(iter, loss)).
     *
@@ -95,7 +118,7 @@ object Logreg {
     * single-machine-gradient and determinism tests. */
   def train(eN: DataFrame, dims: Int, iters: Int, lr: Double)
       : ((Array[Double], Double), Seq[(Long, Double)]) = {
-    val n = eN.count().toDouble
+    val n = checkedCount(eN, dims)
     var w = Array.fill(dims)(0.0)
     var b = 0.0
     val hist = Seq.newBuilder[(Long, Double)]
@@ -171,9 +194,10 @@ object Logreg {
   def trainOvr(eN: DataFrame, labels: Seq[Long], dims: Int, iters: Int, lr: Double,
       nOpt: Option[Double] = None)
       : (Array[Array[Double]], Array[Double]) = {
-    // callers that already counted the frame (logregOvrIters' fused
-    // label+count pass) hand n in — one fewer job, identical value
-    val n = nOpt.getOrElse(eN.count().toDouble)
+    // callers that already counted and checked the frame
+    // (logregOvrIters' fused label+count pass) hand n in — one fewer
+    // job, identical value
+    val n = nOpt.getOrElse(checkedCount(eN, dims))
     val k = labels.size
     val ws = Array.fill(k)(Array.fill(dims)(0.0))
     val bs = Array.fill(k)(0.0)
@@ -222,13 +246,15 @@ object Logreg {
 
   private def logregOvrIters(spark: SparkSession, dir: String, iters: Int): DataFrame = {
     val eN = preparedAll(spark, dir).localCheckpoint()
-    // K-row metadata; label counts and the training-set size in ONE
-    // job (optimization r15 — the old shape paid a distinct-collect
-    // AND a count() inside trainOvr)
-    val labCounts = eN.groupBy(col("label")).agg(count(lit(1)).as("c"))
+    // K-row metadata; label counts, the training-set size and the vn
+    // contract check in ONE job (no distinct-collect, no count() inside
+    // trainOvr)
+    val labCounts = eN.groupBy(col("label"))
+      .agg(count(lit(1)).as("c"), badVn(Dims).as("bad"))
       .collect()
     val labels = labCounts.map(_.getLong(0)).sorted.toSeq
-    val n = labCounts.map(_.getLong(1)).sum.toDouble
+    val n = checkedN(labCounts.map(_.getLong(1)).sum,
+      labCounts.map(_.getLong(2)).sum, Dims)
     val (ws, bs) = trainOvr(eN, labels, Dims, iters, OvrLr, nOpt = Some(n))
     val scores = array(labels.indices.map(j => scoreCol(ws(j), bs(j))): _*)
     val labArr = array(labels.map(lit): _*)

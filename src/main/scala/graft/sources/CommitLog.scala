@@ -346,9 +346,15 @@ object CommitLog {
       // discovery (and therefore partition PRUNING) is per-root, which
       // a single multi-root read cannot give — Spark refuses mixed
       // partition depths under one inferred table root
-      else Some(gens.map(g => spark.read.parquet(genDir(part, g)))
-        .reduce(_.unionByName(_)))
+      else Some(gens.map(g => readGen(part, g)).reduce(_.unionByName(_)))
     }
+
+    /** One committed generation directory.  The protocol never writes
+      * a committed directory again, so its relation is resolved once
+      * per session (`Relations`); a rebuilt base gets a new directory
+      * status and resolves afresh. */
+    private def readGen(part: String, gen: Long): DataFrame =
+      Relations.parquet(spark, genDir(part, gen), committed = true)
 
     /** The newest LIVE generation of `part` at the cut BY EFFECTIVE
       * POSITION — the version pointer for members whose generations
@@ -402,8 +408,7 @@ object CommitLog {
         hi: Option[String], asOfGen: Long = Long.MaxValue): Option[DataFrame] = {
       val (kept, _) = partitionGens(part, column, lo, hi, asOfGen)
       if (kept.isEmpty) None
-      else Some(kept.map(g => spark.read.parquet(genDir(part, g)))
-        .reduce(_.unionByName(_)))
+      else Some(kept.map(g => readGen(part, g)).reduce(_.unionByName(_)))
     }
 
     /** The exact maximum of `column` over the live generations,

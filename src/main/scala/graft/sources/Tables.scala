@@ -7,16 +7,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale design: at 100 TB the fact tables (`lineitem`, `events`) are
   * date-partitioned parquet; we keep loaders as plain declarative
-  * `spark.read.parquet` so Catalyst pushes filters/projections into the
+  * parquet reads so Catalyst pushes filters/projections into the
   * scan (visible as PushedFilters / ReadSchema in explain) and prunes
-  * partitions — no imperative pre-filtering here.
+  * partitions — no imperative pre-filtering here.  A table that is one
+  * parquet file is resolved once per session (`Relations.parquet`); a
+  * table directory is resolved on every read.
   *
   * Dimension tables (`region nation supplier part customer`) are small
   * relative to facts; query code wraps them in `broadcast()` at join
   * sites so fact tables never shuffle for dim joins.
   */
 final class Tables(val spark: SparkSession, val dir: String) {
-  def table(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def table(name: String): DataFrame = Relations.parquet(spark, s"$dir/$name.parquet")
 
   def region: DataFrame = table("region")
   def nation: DataFrame = table("nation")

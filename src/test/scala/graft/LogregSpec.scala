@@ -61,6 +61,22 @@ class LogregSpec extends GraftSpec {
     assert(math.abs(b1 - lr / n * rows.map { case (_, y) => y - 0.5 }.sum) < 1e-6)
   }
 
+  test("the trainers fail loudly on a short or null vn") {
+    val s = spark
+    import s.implicits._
+    val ok = Seq(0.6, 0.8, 0.0)
+    val eN = Seq((1L, 1.0, ok), (2L, 0.0, ok.take(2)), (2L, 0.0, null))
+      .toDF("label", "y", "vn")
+    val bin = intercept[IllegalArgumentException](Logreg.train(eN, 3, iters = 1, lr = 1.0))
+    assert(bin.getMessage.contains("2 of 3 training rows"), bin.getMessage)
+    val ovr = intercept[IllegalArgumentException](
+      Logreg.trainOvr(eN, Seq(1L, 2L), 3, iters = 1, lr = 1.0))
+    assert(ovr.getMessage.contains("2 of 3 training rows"), ovr.getMessage)
+    // the contract holds for well-formed rows of the same shape
+    val ((w, _), _) = Logreg.train(eN.filter(col("label") === 1L), 3, iters = 1, lr = 1.0)
+    assert(w.length == 3)
+  }
+
   test("scores are deterministic and separate the classes in direction") {
     val a = Logreg.logregScore(spark, Dir).localCheckpoint()
     val b = Logreg.logregScore(spark, Dir)

@@ -31,7 +31,7 @@ class StatsWarehouseSpec extends RollupLawRows {
     def key(r: org.apache.spark.sql.Row) =
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
         r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8))
-    val probe = StatsWarehouse.statsProbe(spark, Dir, path)
+    val probe = StatsWarehouse.statsProbe(spark, path)
       .collect().map(key).toSet
     val inline = CorpusStats.corpusStats(spark, Dir).collect().map(key).toSet
     assert(probe == inline,

@@ -192,7 +192,7 @@ class WarehouseCommitSpec extends GraftSpec {
     val p = tmp("stats")
     StatsWarehouse.materializeFrom(d.filter(StatsWarehouse.isBase), p)
     StatsWarehouse.refresh(spark, d.filter(!StatsWarehouse.isBase), p)
-    def probe() = StatsWarehouse.statsProbe(spark, Dir, p)
+    def probe() = StatsWarehouse.statsProbe(spark, p)
       .collect().map(_.toString).toSet
     val before = probe()
     // compact writes 1 part (the merged replace)
