@@ -16,4 +16,10 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
+      // Spark keeps 100 compiled codegen classes by default.  One pass
+      // over the ten dashboard queries needs about 170, so under its
+      // least-recently-used eviction a repeated query mix recompiled
+      // 64–104 classes per pass, and how many depended on the order
+      // of the queries.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 }
