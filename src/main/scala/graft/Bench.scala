@@ -1,206 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Benchmark main: runs the SURVEY §6 headline queries on
-  * SPARK_GRAFT_SF_DIR, prints one JSON line.
-  *
-  * Results are forced through the noop sink — unlike count(), which
-  * would let Catalyst prune the aggregates away, noop materializes
-  * every output column.
-  */
+/** Benchmark main: times the registry's headline and probe rows
+  * (`SparkEntry.registry`) on SPARK_GRAFT_SF_DIR through `Measure`,
+  * then prints a detail JSON line and a byte-budgeted digest line. */
 object Bench {
-  private val Headliners = Seq(
-    "q1_pricing_summary", "q3_shipping_priority", "q5_local_supplier",
-    "q_txvol_daily", "q_account_growth", "q_asof_join", "q_sessionize",
-    "d_dedup_exact", "d_dedup_minhash", "s_knn_brute", "q_stream_window",
-    "q_msg_parse", "q_account_tx_fanout",
-    // the heavy dedup/CC family — the most expensive plans in the
-    // engine; benched so regressions in them are visible round-over-round
-    "d_dedup_ngram", "d_dedup_simhash", "d_dedup_minhash_verified",
-    "d_neardup_cosine", "d_dedup_groups",
-    // round-3 additions heavy enough to regression-track
-    "d_corpus_funnel", "d_substring_overlap", "s_knn_pq",
-    // round-4 additions: span report + excision rewrite, simhash exact
-    // verify, the iterative BPE trainer (8 merge rounds per run)
-    "d_substring_spans", "d_substring_excised",
-    "d_dedup_simhash_verified", "t_bpe_merges",
-    // round-5 additions: chunk-level dedup (corpus-wide window over the
-    // chunk hash), banded range search, the MG sketch pass, and the
-    // iterative LR trainer (8 GD rounds per run)
-    "d_dedup_chunk", "s_range_search_lsh", "t_heavy_hitters", "s_logreg",
-    // round-5: incremental dedup vs the index at rest (materialize cost
-    // lands on the first timed pass's warehouse build — once per JVM —
-    // so min-of-3 times the PROBE, the path that exists in production)
-    // and the tokenizer application pass (train once per run + encode)
-    "d_dedup_incremental", "t_bpe_encode",
-    // two-stage serving, per-domain caps, eval-side contamination
-    // (s_logreg_ovr stays OUT: 40 eager GD rounds ≈ 47 s/run would
-    // dominate the suite for a trainer that s_logreg already tracks)
-    "s_knn_pq_refined", "d_domain_cap", "d_contamination_report",
-    // round-6: the 5-round OvR cost probe — times the K-independent-
-    // one-shuffle-per-round claim at a cost linear in rounds, the
-    // periodic registered-accounts series, and the lexical+hybrid
-    // retrieval pair (inverted-index BM25, RRF fusion with knnBatch)
-    // s_bm25_probe: Materialized caches the index build per JVM, so
-    // min-of-3 times the PROBE — the d_dedup_incremental precedent
-    "s_logreg_ovr5", "q_registered_accounts", "s_bm25", "s_hybrid_rrf",
-    "s_bm25_probe",
-    // round-6: distribution-matching selection (hashed-bucket λ model,
-    // TakeOrderedAndProject top-k), unigram-LM quality scoring
-    // (vocab-bounded LM join — the s_bm25 df-side shape), and the
-    // group-atomic split (CC labels + one keyed join)
-    // t_perplexity_probe: Materialized caches the LM build per JVM,
-    // so min-of-3 times the PROBE — the s_bm25_probe precedent
-    "d_dsir_sample", "t_perplexity", "d_split_leakage_safe",
-    "t_perplexity_probe",
-    // round-7: the Ed-Join character-edit family member (gram
-    // self-join + banded levenshtein verify — heavy enough to track),
-    // the two newest dashboard queries, the two-stage IVF-PQ, and the
-    // refreshed-index probe (Materialized caches the two-generation
-    // build per JVM, so min-of-3 times the PROBE — the
-    // d_dedup_incremental precedent)
-    "d_dedup_editdist", "q_retention_cohort", "q_funnel_steps",
-    "s_knn_ivfpq_refined", "d_dedup_refresh",
-    // round-7 late additions: the compacted-index probe (tracks the
-    // probe cost compaction buys back vs s_bm25_probe's delta-summing
-    // layout — build+refresh+compact amortize per JVM via Materialized,
-    // min-of-3 times the probe) and the incremental CC fold (the
-    // grouping leg of the crawl loop; edge-gen + base CC + fold, vs
-    // d_dedup_groups' full recompute over the same edges)
-    "s_bm25_probe_compacted", "d_dedup_groups_incremental",
-    // round-7 PCA family: the 2080-group moment aggregation (one scan,
-    // map-side collapse), the PCA-shortlist ANN, the moments-at-rest
-    // probe (two-generation build amortizes per JVM via Materialized —
-    // min-of-3 times the delta-sum + final projection), and the
-    // context-aware bigram LM (token self-join + two count joins)
-    "s_embed_cov", "s_knn_pca", "s_embed_cov_probe", "t_perplexity_bigram",
-    // round-7 time-series legs: one (date, etype) shuffle each, then
-    // calendar×series metadata math — benched to keep the grid
-    // aggregation's cost visible; q_ts_anomaly completes the trio
-    // (round-8: it was the only oracled operator not drift-tracked)
-    "q_ts_corr", "q_ts_window_search", "q_ts_anomaly",
-    // round-8: the grouping scale path — CC over exact + LSH-verified +
-    // ed edges (vs d_dedup_groups' exact AllPairs channel); benched so
-    // the exact-vs-banded cost gap is driver-visible round-over-round
-    "d_dedup_groups_lsh")
+  private def rowsIn(role: SparkEntry.Role): Seq[String] =
+    SparkEntry.registry.filter(_.role == role).map(_.name)
 
-  /** Exposed for BenchDigestSpec's budget pin. */
-  private[graft] def headlinerNames: Seq[String] = Headliners
+  /** The headline rounds' queries, in registry order. */
+  private[graft] val headlinerNames: Seq[String] = rowsIn(SparkEntry.Headline)
 
-  /** Exposed for BenchDigestSpec's probes-all-ride pin. */
-  private[graft] def probeNames: Seq[String] = Probes
+  /** At-rest probe drift tracking: each probe row, min-of-3, rides the
+    * detail line's `probes` map and the digest's `probes_cs`, so a
+    * probe-path regression (pruning lost, a probe rescanning its
+    * corpus) is visible in every run. */
+  private[graft] val probeNames: Seq[String] = rowsIn(SparkEntry.Probe)
 
-  /** At-rest probe drift tracking (round-8 VERDICT ask): every
-    * warehouse-served probe plus the two round-8 non-probe additions
-    * that had no bench row, each min-of-3 — carried in the DETAIL
-    * line's `probes` map only, so the byte-budgeted digest is
-    * untouched.  A probe-path regression (pruning lost, a probe
-    * silently rescanning its corpus) becomes driver-visible data
-    * instead of a SURVEY one-shot. */
-  private val Probes = Seq(
-    "q_ts_anomaly_probe", "q_ts_corr_probe", "q_ts_seasonal_probe",
-    "q_ts_decompose_probe", "q_ts_forecast_probe",
-    "q_ts_anomaly_seasonal_probe", "q_ts_forecast_backtest_probe",
-    "d_corpus_stats_probe",
-    "q_active_accounts_probe",
-    "q_active_accounts_window", "d_bloom_decontaminate_probe",
-    "d_semdedup_probe", "q_richlist_gini_probe",
-    "q_gas_quantiles_probe", "q_gas_quantiles_window",
-    "q_gas_quantiles_window_sketch", "t_heavy_hitters_probe",
-    "d_dedup_lines", "q_ts_decompose",
-    // round 10: the retraction family's registered demonstrations —
-    // each min-of-3 times the probe against the retracted state (the
-    // builds amortize per JVM via Materialized)
-    "q_richlist_gini_retracted", "d_dedup_retracted",
-    "s_bm25_probe_retracted", "t_perplexity_probe_retracted",
-    "d_dedup_groups_retracted", "q_proposals_page", "q_txvol_salted_join",
-    // round-10 second arc: the rollup's (vsum, n) retract and the
-    // join-view family (probe + retracted twin)
-    "q_ts_anomaly_probe_retracted",
-    "q_revenue_view_probe", "q_revenue_view_retracted",
-    // round-10 third arc: the snapshot log's as-of read (gen-pruned),
-    // the top-k warehouse's probe + retracted twin, and the two
-    // selection verbs (representative choice over warehouse labels,
-    // budgeted selection via the threshold decomposition)
-    "q_richlist_gini_asof", "q_richlist_probe", "q_richlist_retracted",
-    "d_dedup_keep_best", "d_budget_select",
-    // the doc-keyed as-of (bitemporal tombstones) and the context
-    // LM's delete verb
-    "d_dedup_asof", "t_perplexity_bigram_probe_retracted",
-    // the ANN family's delete verb + the banded layout at rest
-    "s_range_search_probe", "s_range_search_retracted",
-    // round 11: the end-to-end funnel composition and the IVF
-    // family's delete verb
-    "d_pipeline_e2e", "s_knn_ivf_retracted",
-    // round 12: the retention demonstration — probe after
-    // compact + vacuum + log checkpoint (must price like the
-    // compacted probe: vacuum touches only dead state)
-    "s_bm25_probe_vacuumed",
-    // round 12 second arc: the log-level data-skipping probe — the
-    // trailing window over the week-cadence rollup build (must price
-    // like a two-generation read: three of five gens never listed)
-    "q_ts_recent_window",
-    // round 13: the ANN recall monitor AT REST — one brute pass over
-    // the standing vectors + the two warehouses' own pruned probes
-    // (builds amortize per JVM via Materialized; min-of-3 times the
-    // monitor read itself)
-    "s_knn_recall_report_probe",
-    // round 13: the trailing-years window over the year-cadence view
-    // (must price like a two-generation read — earlier years never
-    // listed, the q_ts_recent_window contract on the binary member)
-    "q_revenue_view_recent",
-    // round 13 second arc: the drift-repair loop (two ivf builds +
-    // one recluster amortize per JVM; min-of-3 times the two-phase
-    // monitor read) and the frozen-tokenizer application pass (train
-    // once per JVM; min-of-3 times the pure encode scan)
-    "s_knn_recall_drift_repair", "t_bpe_encode_probe",
-    // round 14: the PQ lane's at-rest monitor (raw ADC + refined
-    // stages over the refreshed+retracted+compacted code table — the
-    // quantized family's recall numbers as driver-visible data; the
-    // build amortizes per JVM, min-of-3 times the monitor read)
-    "s_knn_recall_report_pq",
-    // round 15: the PQ repair loop gated (drifted build + the full
-    // requantize + both grades amortize per JVM via Materialized;
-    // min-of-3 times the cached one-row verdict read)
-    "s_knn_requantize_gated",
-    // round 15: the PCA lane's at-rest monitor (one brute truth pass +
-    // the R-dim shortlist serving probe over the drifted projection
-    // index) and its gated reproject verdict (cached one-row read)
-    "s_knn_recall_report_pca", "s_knn_reproject_gated")
-
-  /** Measurement-boundary documentation (ADVICE r08): queries whose
-    * min-of-3 times an AT-REST read after a once-per-JVM warehouse
-    * build (the first rep pays the build, the min drops it).  Carried
-    * in the detail line so round-over-round drift analysis can tell a
-    * warehouse-read speedup from a plan-level one. */
-  private val Warehoused = Seq(
-    "d_dedup_groups", "d_dedup_groups_incremental", "d_split_leakage_safe",
-    "d_dedup_incremental", "d_dedup_refresh", "s_bm25_probe",
-    "s_bm25_probe_compacted", "t_perplexity_probe", "s_embed_cov_probe",
-    "q_ts_anomaly_probe", "q_ts_corr_probe", "q_ts_seasonal_probe",
-    "q_ts_decompose_probe", "q_ts_forecast_probe",
-    "q_ts_anomaly_seasonal_probe", "q_ts_forecast_backtest_probe",
-    "d_corpus_stats_probe",
-    "q_active_accounts_probe",
-    "q_active_accounts_window", "d_bloom_decontaminate_probe",
-    "d_semdedup_probe", "q_richlist_gini_probe",
-    "q_gas_quantiles_probe", "q_gas_quantiles_window",
-    "q_gas_quantiles_window_sketch", "t_heavy_hitters_probe",
-    "q_richlist_gini_retracted", "d_dedup_retracted",
-    "s_bm25_probe_retracted", "t_perplexity_probe_retracted",
-    "d_dedup_groups_retracted", "q_ts_anomaly_probe_retracted",
-    "q_revenue_view_probe", "q_revenue_view_retracted",
-    "q_richlist_gini_asof", "q_richlist_probe", "q_richlist_retracted",
-    "d_dedup_keep_best", "d_dedup_asof",
-    "t_perplexity_bigram_probe_retracted",
-    "s_range_search_probe", "s_range_search_retracted",
-    "d_pipeline_e2e", "s_knn_ivf_retracted", "s_bm25_probe_vacuumed",
-    "q_ts_recent_window", "s_knn_recall_report_probe",
-    "q_revenue_view_recent", "s_knn_recall_drift_repair",
-    "t_bpe_encode_probe", "s_knn_recall_report_pq",
-    "s_knn_requantize_gated", "s_knn_recall_report_pca",
-    "s_knn_reproject_gated")
+  /** Rows whose min-of-3 times an at-rest read after a once-per-JVM
+    * warehouse build; the detail line lists them, so drift analysis
+    * can tell a warehouse-read speedup from a plan-level one. */
+  private val warehousedNames: Seq[String] =
+    SparkEntry.registry.filter(_.warehoused).map(_.name)
 
   // sf0.1 is the LARGEST driver-generated SF in this sandbox — there is
   // no bigger dataset to stress the dedup/CC family against; recorded in
@@ -215,120 +35,47 @@ object Bench {
     // bounded output tail — keep log volume near zero
     spark.sparkContext.setLogLevel("ERROR")
 
-    // warm the JVM/codegen once on the smallest SF so the measured pass
-    // isn't dominated by first-query classloading
-    Headliners.foreach { name =>
-      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    Measure.warm(spark, headlinerNames)
 
-    // ONE-TIME BUILD PHASE (round 11, VERDICT-r10 ask #2): run every
-    // warehouse-served query once at the bench SF, OUTSIDE all
-    // per-query timing — their once-per-JVM materializations land
-    // here, so the min-of-3 rows below time ONLY the probe, and the
-    // aggregate build cost is reported once as its own digest bucket
-    // (`build_sec` = materialization + one untimed probe per query)
-    // instead of hiding inside whichever family member runs first.
-    // ITEMIZED since round 13 (VERDICT-r12 ask #2 — the r12 driver
-    // artifact recorded 383 s against a self-measured 164 s with no
-    // way to attribute the gap): each query's FIRST run is timed
-    // individually; a query whose warehouse was already built by an
-    // earlier family member reads as cheap, so the expensive rows
-    // name exactly the materializations that own the bucket.
-    val tBuild0 = System.nanoTime()
-    val warehousedSet = Warehoused.toSet
-    val buildTimes = scala.collection.mutable.ListBuffer.empty[(String, Double)]
-    (Headliners ++ Probes).filter(warehousedSet).distinct.foreach { name =>
-      val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      buildTimes += name -> (System.nanoTime() - t0) / 1e9
-    }
-    val buildSec = (System.nanoTime() - tBuild0) / 1e9
+    // One-time build phase: every warehoused row runs once at the bench
+    // SF, off the per-query clock, so its once-per-JVM materialization
+    // lands here and its min-of-3 below times only the probe.  Each
+    // first run is timed on its own (`build`); a row whose warehouse an
+    // earlier row already built reads as cheap, so the expensive rows
+    // name the materializations that own `build_sec`.
+    val (buildTimes, buildSec) = Measure.timed(warehousedNames.map { n =>
+      n -> Measure.timed(scala.util.Try(Measure.sink(SparkEntry.queries(n)(spark, sfDir))))._2
+    })
 
-    // 3 INTERLEAVED rounds over the whole set, min per query: this host
-    // stalls for tens of seconds at random, and back-to-back repeats of
-    // one query can all land inside a single stall — full-set rounds
-    // spread each query's runs ~a minute apart
-    // only SUCCESSFUL runs are timed; a query that fails every round is
-    // reported as -1, not as its (fast) failure duration
-    val times = scala.collection.mutable.Map.empty[String, Double]
-    // every successful run's wall ms, in round order — the detail-line
-    // drift decomposer: a stable min with inflated later rounds is host
-    // drift, not a plan change (so the next flat +25% uplift is
-    // attributable from data instead of re-reading every plan)
-    val runs = scala.collection.mutable.Map.empty[String, Vector[Long]]
-    for (_ <- 1 to 3; name <- Headliners) {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val t = (System.nanoTime() - t0) / 1e9
-      if (ok) {
-        times(name) = math.min(times.getOrElse(name, Double.MaxValue), t)
-        runs(name) = runs.getOrElse(name, Vector.empty) :+ math.round(t * 1e3)
-      }
-    }
-    // at-rest probe timings: same interleaved min-of-3 shape, AFTER
-    // the headliner rounds (the builds their first reps trigger are
-    // per-JVM, so headliner timings are unaffected)
-    val probeTimes = scala.collection.mutable.Map.empty[String, Double]
-    for (_ <- 1 to 3; name <- Probes) {
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          true
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] probe $name failed: ${e.getMessage}")
-          false
-        }
-      val t = (System.nanoTime() - t0) / 1e9
-      if (ok) probeTimes(name) =
-        math.min(probeTimes.getOrElse(name, Double.MaxValue), t)
-    }
-    val probesJson = Probes.map(n =>
-      "\"" + n + "\":" + probeTimes.getOrElse(n, -1.0)).mkString("{", ",", "}")
-    val warehousedJson = Warehoused.map("\"" + _ + "\"").mkString("[", ",", "]")
+    // 3 interleaved rounds per phase, min per query; the probe rounds
+    // run after the headline rounds.  A query that fails every round
+    // reports -1, not its (fast) failure duration.
+    val runs = Measure.rounds(spark, sfDir, headlinerNames, 3, "[bench]")
+    val probeRuns = Measure.rounds(spark, sfDir, probeNames, 3, "[bench] probe")
+    def best(r: Map[String, Vector[Double]], n: String) = r.get(n).map(_.min).getOrElse(-1.0)
+    val probes = probeNames.map(n => n -> best(probeRuns, n))
+    val probesJson = probes.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val warehousedJson = warehousedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
 
-    val results = Headliners.map(n => n -> times.getOrElse(n, -1.0))
+    val results = headlinerNames.map(n => n -> best(runs, n))
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }.mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
 
-    // beyond-ceiling stress probes (8×-replicated corpus) ride the same
-    // output line so the heavy family's scale behavior is regression-
-    // tracked by the driver, not just described in SURVEY prose.
-    // SPARK_GRAFT_STRESS=0 skips them (local quick loops).
-    val stress =
-      if (sys.env.getOrElse("SPARK_GRAFT_STRESS", "1") == "0") "null"
-      else try StressBench.probesJson(spark, sfDir, reps = 8)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] stress probes failed: ${e.getMessage}")
+    // SPARK_GRAFT_STRESS=0 skips both extra sections (local quick loops).
+    val extras = sys.env.getOrElse("SPARK_GRAFT_STRESS", "1") != "0"
+    def section(what: String)(json: => String): String =
+      if (!extras) "null"
+      else try json catch { case e: Throwable =>
+        System.err.println(s"[bench] $what failed: ${e.getMessage}")
         "null"
       }
-    // ANN QUALITY, regression-tracked as driver-visible data (not just
-    // spec assertions at fixed corpora): recall@10 of each approximate
-    // retrieval path against the exact brute-force top-10, plus
-    // set-equality of the banded range search vs its brute baseline.
-    // All collects are ≤ a few hundred id rows — driver metadata.
-    // SPARK_GRAFT_STRESS=0 skips (same switch as the stress probes).
-    val ann =
-      if (sys.env.getOrElse("SPARK_GRAFT_STRESS", "1") == "0") "null"
-      else try annQualityJson(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] ann quality failed: ${e.getMessage}")
-        "null"
-      }
+    // beyond-ceiling stress probes (8×-replicated corpus): the heavy
+    // family's scale behavior as run data
+    val stress = section("stress probes")(StressBench.probesJson(spark, sfDir, reps = 8))
+    // ANN quality as run data, not only spec assertions at fixed corpora
+    val ann = section("ann quality")(
+      graft.similarity.RecallMonitor.benchJson(spark, sfDir))
     // Every BENCH_r1-r4 driver capture came back parsed: None with a
     // log-tail full of Spark SHUTDOWN chatter — the JSON line was
     // being pushed out of the driver's tail buffer by the logs that
@@ -347,8 +94,9 @@ object Bench {
     // uptime and cumulative GC time — a broad flat uplift with stable
     // per-query mins and a fat GC share is host/JVM noise; a moved min
     // is a plan change
-    val runsMs = Headliners.map { n =>
-      "\"" + n + "\":" + runs.getOrElse(n, Vector.empty).mkString("[", ",", "]")
+    val runsMs = headlinerNames.map { n =>
+      "\"" + n + "\":" + runs.getOrElse(n, Vector.empty).map(t => math.round(t * 1e3))
+        .mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val jvm = {
       import scala.jdk.CollectionConverters._
@@ -369,9 +117,8 @@ object Bench {
     val cpusInt = scala.util.Try(cpus.toInt).getOrElse(-1)
     val par = spark.sparkContext.defaultParallelism
     val detail = s"""{"metric":"total","value":$total,"unit":"sec","reps":3,"agg":"min","cpus":$cpusInt,"parallelism":$par,"build_sec":$buildSec,"build":$buildJson,"queries":$qs,"failed":$failed,"sf":"$sfDir","sf_ceiling":"$SfCeiling","runs_ms":$runsMs,"jvm":$jvm,"probes":$probesJson,"warehoused":$warehousedJson,"stress":$stress,"ann":$ann}"""
-    val digest = digestLine(results,
-      Probes.map(n => n -> probeTimes.getOrElse(n, -1.0)), total, failed,
-      sfDir, stress, ann, buildSec, buildTimes.toSeq, cpusInt, par)
+    val digest = digestLine(results, probes, total, failed,
+      sfDir, stress, ann, buildSec, buildTimes, cpusInt, par)
     // the full detail map — every headliner, probe and build time at
     // full precision — is written to a FILE every run (under the build
     // output directory unless SPARK_GRAFT_BENCH_DETAIL names a path), so
@@ -607,43 +354,5 @@ object Bench {
     ladder.iterator.map(_())
       .find(_.length <= DigestBudget)
       .getOrElse(ladder.last())
-  }
-
-  /** recall@10 per approximate single-query ANN path vs the exact
-    * brute top-10, plus banded-vs-brute range-search set comparison.
-    * Returns a JSON object string. */
-  private def annQualityJson(spark: SparkSession, sfDir: String): String = {
-    def ids(name: String): Set[Long] =
-      SparkEntry.queries(name)(spark, sfDir)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-    val brute = ids("s_knn_brute")
-    // the lsh / lsh_mp / ivf single-query recalls left this map in
-    // round 13, and round 15 retires s_knn_pq and s_knn_pca the same
-    // way: the registered at-rest monitors (s_knn_recall_report_pq's
-    // adc row for the demoted candidate-generation stage,
-    // s_knn_recall_report_pca for the projection lane) now carry
-    // those numbers as first-class query rows the driver dumps every
-    // round — the bytes fund the 50-row probe map keeping ann on the
-    // realistic-width rung.  The refined serving stages keep their
-    // single-query recalls here (the inline two-stage paths have no
-    // registered monitor analogue at fresh-build state)
-    val recalls = Seq(
-        "s_knn_pq_refined", "s_knn_ivfpq", "s_knn_ivfpq_refined")
-      .map { n =>
-        val r = (ids(n) & brute).size.toDouble / brute.size
-        "\"" + n + "\":" + r
-      }
-    def pairs(name: String): Set[(Long, Long)] =
-      SparkEntry.queries(name)(spark, sfDir)
-        .select("query_id", "vec_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val rb = pairs("s_range_search")
-    val rl = pairs("s_range_search_lsh")
-    val rangeJ =
-      if (rb.isEmpty && rl.isEmpty) 1.0
-      else (rb & rl).size.toDouble / (rb | rl).size
-    (recalls ++ Seq(
-      "\"range_lsh_jaccard\":" + rangeJ,
-      "\"range_pairs\":" + rb.size)).mkString("{", ",", "}")
   }
 }

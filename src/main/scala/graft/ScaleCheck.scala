@@ -108,10 +108,8 @@ object ScaleCheck {
       .filter(col("g") =!= col("s")).count()
     require(diverged == 0, s"greedy != sweep on $diverged sample rows")
     def time(c: org.apache.spark.sql.Column, tag: String): Unit = {
-      val t0 = System.nanoTime()
-      docs.select(col("doc_id"), size(c).as("n"))
-        .write.format("noop").mode("overwrite").save()
-      println(f"SCALE bpe_big_r $tag R=${merges.size} ${(System.nanoTime() - t0) / 1e9}%.2f")
+      val (_, t) = Measure.timed(Measure.sink(docs.select(col("doc_id"), size(c).as("n"))))
+      println(f"SCALE bpe_big_r $tag R=${merges.size} $t%.2f")
       System.out.flush()
     }
     time(greedyCol, "warm") // codegen/classload off the clock
@@ -123,7 +121,7 @@ object ScaleCheck {
     val src = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val reps = if (args.length > 1) args(1).toInt else 10
     val queries0 = if (args.length > 2) args.drop(2).toSeq else Queries
-    val out = s"/root/repo/target/scalecheck-x$reps"
+    val out = s"target/scalecheck-x$reps"
     val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -131,15 +129,10 @@ object ScaleCheck {
     val queries = queries0.filterNot(_ == "bpe_big_r")
     if (queries.isEmpty) { spark.stop(); return }
     derive(spark, src, out, reps)
-    queries.foreach { n => // warm codegen/classloading off the clock
-      try SparkEntry.queries(n)(spark, "/root/testdata/sf0.001")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    }
+    Measure.warm(spark, queries)
     queries.foreach { n =>
-      val t0 = System.nanoTime()
-      SparkEntry.queries(n)(spark, out).write.format("noop").mode("overwrite").save()
-      println(f"SCALE x$reps $n ${(System.nanoTime() - t0) / 1e9}%.2f")
+      val (_, t) = Measure.timed(Measure.sink(SparkEntry.queries(n)(spark, out)))
+      println(f"SCALE x$reps $n $t%.2f")
       System.out.flush()
     }
     spark.stop()

@@ -26,13 +26,10 @@ object StressBench {
       .select((col("doc_id") * reps + col("r")).as("doc_id"), col("text"))
     val nDocs = docs.count()
 
-    def time[A](f: => A): (A, Double) = {
-      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-    }
-    val (nPairs, tPairs) = time {
+    val (nPairs, tPairs) = Measure.timed {
       graft.dedup.Dedup.ngramStages(docs, maxDfRatio = 0.1).pairs.count()
     }
-    val (nGroups, tCc) = time {
+    val (nGroups, tCc) = Measure.timed {
       val hashed = docs.select(md5(col("text")).as("h"), col("doc_id"))
       val exactPairs = hashed.as("x")
         .join(hashed.as("y"), col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
@@ -46,7 +43,7 @@ object StressBench {
     // exactly-once emission path: every dup pair agrees on ~all 32
     // bands, so this is precisely the corpus where the old
     // dropDuplicates aggregate paid ~32× the true candidate volume
-    val (nMinhashCand, tMinhash) = time {
+    val (nMinhashCand, tMinhash) = Measure.timed {
       graft.dedup.Dedup.minhashBandCandidates(docs).count()
     }
 
@@ -62,7 +59,7 @@ object StressBench {
       .select((col("vec_id") * reps + col("r")).as("vec_id"), col("v"))
     val nVecs = eRep.count()
     val cliquePairs = (nVecs / reps) * (reps.toLong * (reps - 1) / 2)
-    val (nCos, tCos) = time {
+    val (nCos, tCos) = Measure.timed {
       graft.dedup.Dedup.cosinePairsFrom(eRep, threshold = 0.95,
         bitsPerBand = 8, bands = 16).count()
     }
@@ -80,7 +77,7 @@ object StressBench {
       .agg(sum(when(col("m") < 8, 1L).otherwise(0L)).as("nb"),
         sum(when(col("m") >= 8, 1L).otherwise(0L)).as("ni"))
       .agg(sum(col("nb") * col("ni")).as("s")).head.getLong(0)
-    val (nInc, tInc) = time {
+    val (nInc, tInc) = Measure.timed {
       val p = java.nio.file.Files
         .createTempDirectory("graft-stress-mhw-").toString + "/index"
       graft.dedup.MinHashWarehouse.materializeFrom(docs, p)
@@ -93,7 +90,7 @@ object StressBench {
     // rarest per doc (freq ~1-8 at base, ×reps replicated — far below
     // the 0.1·n cap), so no doc starves into the quadratic stratum.
     val cliqueEd = (nDocs / reps) * (reps.toLong * (reps - 1) / 2)
-    val (nEd, tEd) = time {
+    val (nEd, tEd) = Measure.timed {
       graft.dedup.EditDist.stages(docs, d = 10).pairs.count()
     }
     // covariance REPLICATION INVARIANCE: exact duplication scales every
@@ -103,7 +100,7 @@ object StressBench {
     // 9-dp round.  A scale-family probe with an EXACT expected value,
     // not just a lower bound: any drift in quantization, the moment
     // identity, or the decimal route shows as cov_equal < 2080.
-    val (covEqual, tCov) = time {
+    val (covEqual, tCov) = Measure.timed {
       val rawE = graft.sources.Tables(spark, sfDir).embeddings
       val eRep8 = rawE.crossJoin(rep)
         .select((col("vec_id") * reps + col("r")).as("vec_id"), col("embedding"))
@@ -140,7 +137,7 @@ object StressBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = if (args.length > 1) args(1).toInt else 8
-    val spark = GraftSession.builder("32").getOrCreate()
+    val spark = GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     println(probesJson(spark, sfDir, reps))
     spark.stop()

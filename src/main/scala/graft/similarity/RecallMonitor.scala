@@ -494,4 +494,34 @@ object RecallMonitor {
         col("adc_staged"), col("recall_standing"), col("recall_staged"),
         col("swapped"))
   }
+
+  /** `graft.Bench`'s `ann` section, keyed by registered query name:
+    * recall@10 of the refined single-query serving paths against the
+    * exact brute top-10 (the at-rest monitors above carry the other
+    * paths), and the Jaccard of the banded range search's pairs
+    * against its brute baseline.  Collects a few hundred id rows. */
+  def benchJson(spark: SparkSession, dir: String): String = {
+    def ids(df: DataFrame): Set[Long] =
+      df.select("vec_id").collect().map(_.getLong(0)).toSet
+    val brute = ids(Knn.bruteForce(spark, dir))
+    val recalls = Seq[(String, (SparkSession, String) => DataFrame)](
+        "s_knn_pq_refined" -> (Pq.pqRefine(_, _)),
+        "s_knn_ivfpq" -> (Pq.ivfPqAnn(_, _)),
+        "s_knn_ivfpq_refined" -> (Pq.ivfPqRefine(_, _)))
+      .map { case (n, build) =>
+        val r = (ids(build(spark, dir)) & brute).size.toDouble / brute.size
+        "\"" + n + "\":" + r
+      }
+    def pairs(df: DataFrame): Set[(Long, Long)] =
+      df.select("query_id", "vec_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val rb = pairs(Knn.rangeSearch(spark, dir))
+    val rl = pairs(Knn.rangeSearchLsh(spark, dir))
+    val rangeJ =
+      if (rb.isEmpty && rl.isEmpty) 1.0
+      else (rb & rl).size.toDouble / (rb | rl).size
+    (recalls ++ Seq(
+      "\"range_lsh_jaccard\":" + rangeJ,
+      "\"range_pairs\":" + rb.size)).mkString("{", ",", "}")
+  }
 }

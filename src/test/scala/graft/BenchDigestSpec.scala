@@ -23,9 +23,7 @@ class BenchDigestSpec extends AnyFunSuite {
       """"n_vecs":16000,"cosine_pairs":56000,"cosine_clique_pairs":56000,"cosine_sec":2.906778748,""" +
       """"inc_pairs":53192,"inc_clique_pairs":48184,"inc_sec":21.857642942,""" +
       """"cov_equal":2080,"cov_sec":3.123456789}"""
-  // mirrors annQualityJson's r15 shape (lsh/lsh_mp/ivf left in r13,
-  // s_knn_pq/s_knn_pca in r15 — each now rides a registered at-rest
-  // monitor row instead)
+  // mirrors RecallMonitor.benchJson's shape
   private val ann =
     """{"s_knn_pq_refined":0.8,"s_knn_ivfpq":0.2,""" +
       """"s_knn_ivfpq_refined":0.8,""" +

@@ -6,11 +6,35 @@ Usage: dump_diff.py <base_dir> <new_dir>
 For every query subdir present in base, compares
 `select * from parquet_scan('<dir>/<q>/*.parquet') order by all`
 fetchall() equality (covers the no-oracle queries the oracle hash
-compare cannot).  Exit 0 iff every common query matches and the query
-sets are identical.
+compare cannot).  Also compares the two oracle_sql.json files as
+maps, reporting added, removed and changed keys.  Exit 0 iff every
+common query matches, the query sets are identical and the oracle
+maps are equal.
 """
-import sys, os
+import json, sys, os
 import duckdb
+
+
+def oracle_diff(base, new):
+    """Number of differing oracle_sql.json keys, each reported."""
+    try:
+        with open(os.path.join(base, "oracle_sql.json")) as f:
+            ob = json.load(f)
+        with open(os.path.join(new, "oracle_sql.json")) as f:
+            on = json.load(f)
+    except (OSError, ValueError) as e:
+        print(f"oracle_sql.json: READ ERROR {e}")
+        return 1
+    added = sorted(set(on) - set(ob))
+    removed = sorted(set(ob) - set(on))
+    changed = sorted(k for k in set(ob) & set(on) if ob[k] != on[k])
+    for tag, keys in (("ADDED", added), ("REMOVED", removed), ("CHANGED", changed)):
+        if keys:
+            print(f"oracle_sql.json {tag}: {keys}")
+    bad = len(added) + len(removed) + len(changed)
+    print(f"oracle_sql.json: {'DIFF in ' + str(bad) + ' keys' if bad else 'IDENTICAL'}"
+          f" ({len(ob)} vs {len(on)} keys)")
+    return bad
 
 
 def rows(d, q):
@@ -55,6 +79,7 @@ def main():
                     break
             bad += 1
     print(f"{'DIFF FOUND in ' + str(bad) + ' queries' if bad else 'IDENTICAL'}: {len(bq)} queries compared")
+    bad += oracle_diff(base, new)
     sys.exit(1 if bad else 0)
 
 
