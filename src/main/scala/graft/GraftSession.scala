@@ -22,4 +22,8 @@ object GraftSession {
       // 64–104 classes per pass, and how many depended on the order
       // of the queries.
       .config("spark.sql.codegen.cache.maxEntries", "1000")
+      // Without native libhadoop the stock local file system forks a
+      // chmod for every file and directory it creates; a warehouse
+      // commit creates dozens.  LocalFs sets the same modes in-process.
+      .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
 }

@@ -251,18 +251,18 @@ object CommitLog {
 
   private def genDir(part: String, gen: Long) = s"$part/gen-$gen"
 
-  /** Does `dir` hold at least one non-hidden data file?  One driver
-    * FS listing — the zero-row-write detector. */
+  /** Does `dir` hold at least one non-hidden data file, at any depth?
+    * A file-system walk — the zero-row-write detector.  `listStatus`,
+    * not `listFiles`: a located status reads each entry's owner and
+    * permission, which the local file system does by forking `ls`. */
   private def hasDataFile(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
     val f = fs(spark, dir)
-    if (!f.exists(p)) return false
-    val it = f.listFiles(p, true)
-    while (it.hasNext) {
-      val n = it.next().getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) return true
+    def walk(d: Path): Boolean = f.listStatus(d).exists { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else { val n = s.getPath.getName; !n.startsWith("_") && !n.startsWith(".") }
     }
-    false
+    f.exists(p) && walk(p)
   }
 
   /** One pinned fold of the committed log — take it ONCE per probe

@@ -503,6 +503,25 @@ class CommitLogSpec extends GraftSpec {
       "an all-empty non-partitioned generation broke the union read")
   }
 
+  test("a zero-row append on a partitioned part stays readable") {
+    // a zero-row partitionBy write leaves no data file at any depth;
+    // Txn.write detects that and rewrites the generation as one empty
+    // file with the schema
+    val base = tmp("emptyparts")
+    val s = spark
+    import s.implicits._
+    CommitLog.transaction(spark, base)(_.append(
+      Seq((1L, 0L), (2L, 3L)).toDF("v", "tb"), base, Seq("tb")))
+    CommitLog.transaction(spark, base)(_.append(
+      Seq((3L, 1L)).toDF("v", "tb").filter(lit(false)), base, Seq("tb")))
+    val got = CommitLog.snapshot(spark, base).read(base)
+    assert(got.select(col("v")).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L),
+      "an all-empty partitioned generation broke the union read")
+    assert(new java.io.File(s"$base/gen-1").listFiles()
+      .exists(f => f.isFile && f.getName.endsWith(".parquet")),
+      "the empty generation was not rewritten as one schema-bearing file")
+  }
+
   test("NaN/Infinity numeric bounds are refused at record time (ADVICE r12)") {
     val base = tmp("skipnan")
     val s = spark
