@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.dedup.MinHashWarehouse.isBase
 import graft.functions.Exact.{roundx, sumx}
 import graft.functions.TextFunctions.words
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{CommitLog, CountPart, Tables}
 
 /** The BIGRAM LM AT REST — the context-aware member of the warehouse
   * family, extending LmWarehouse's CCNet triage with
@@ -14,11 +14,11 @@ import graft.sources.{CommitLog, Tables}
   * ONCE over the standing corpus, and every later probe scores
   * against the frozen context model without re-reading corpus text.
   *
-  * Layout (the LmWarehouse conventions, APPEND-ONLY):
-  *  - `<path>.c1`: (w, cnt) unigram DELTA rows partitioned by
-  *    wb = pmod(xxhash64(w), 64);
-  *  - `<path>.c2`: (pw, w, cnt) bigram DELTA rows partitioned by
-  *    pwb = pmod(xxhash64(pw), 64) — keyed on the PRECEDING word,
+  * Layout (the LmWarehouse conventions, append-only), two `CountPart`s:
+  *  - `<path>.c1`: (w, cnt) unigram delta rows partitioned by
+  *    wb = `CountPart.bucket(w)`;
+  *  - `<path>.c2`: (pw, w, cnt) bigram delta rows partitioned by
+  *    pwb = `CountPart.bucket(pw)` — keyed on the PRECEDING word,
   *    because that is what a probe knows: its own token stream's
   *    left-contexts prune the partition list;
   *  - `<path>.stats`: one (nb, v) row.
@@ -38,167 +38,79 @@ import graft.sources.{CommitLog, Tables}
   * exactly as t_perplexity_probe differs from t_perplexity — the
   * registered probe and its oracle mirror the open convention.
   *
-  * Probe plan: tokenize ONLY the batch, ONCE (a localCheckpoint pin —
-  * the token frame feeds the scored side, the shifted side, and two
-  * bucket lists); c1 prunes to the batch's word ∪ context buckets,
-  * c2 to its context buckets; one doc-keyed partial agg.  Scores are
-  * batch-local → the streaming twin is stateless foreachBatch.
+  * Probe plan: tokenize ONLY the batch, once (a localCheckpoint pin —
+  * the token frame feeds the scored side, the context side and the
+  * bucket list); both parts prune to the batch's word buckets; one
+  * doc-keyed partial agg.  Scores are batch-local → the streaming
+  * twin is stateless foreachBatch.
   */
 object BigramLmWarehouse {
 
-  private val TermBuckets = 64
   private val Alpha = 0.4
 
-  private def c1Path(path: String) = s"$path.c1"
-  private def c2Path(path: String) = s"$path.c2"
+  private val C1 = CountPart(Seq("w"), "cnt", "wb", ".c1")
+  private val C2 = CountPart(Seq("pw", "w"), "cnt", "pwb", ".c2")
+
   private def statsPath(path: String) = s"$path.stats"
 
-  private def bucket(term: org.apache.spark.sql.Column) =
-    pmod(xxhash64(term), lit(TermBuckets.toLong))
-
-  /** (doc_id, pos, w, pw) tokens of a doc frame — the previous token
-    * rides each row (optimization r15, the BigramLm.perplexityBigramOf
-    * shape): pw = element_at(toks, pos) over the pinned token array
-    * (1-based element_at at 0-based pos = previous; pos 0 → null), so
-    * neither the bigram counts nor the probe's scoring pays a
-    * (doc_id, pos)-keyed corpus self-join. */
+  /** (doc_id, pos, w, pw) tokens of a doc frame, pinned: the previous
+    * token rides each row as pw = element_at(toks, pos) (1-based
+    * element_at at 0-based pos = previous; pos 0 → null), so neither
+    * the bigram counts nor the probe's scoring pays a
+    * (doc_id, pos)-keyed self-join. */
   private def toks(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), words(col("text")).as("toks")).localCheckpoint()
       .select(col("doc_id"), col("toks"), posexplode(col("toks")).as(Seq("pos", "w")))
       .select(col("doc_id"), col("pos"), col("w"),
         when(col("pos") > 0, element_at(col("toks"), col("pos"))).as("pw"))
+      .localCheckpoint()
 
-  /** Unigram + bigram count frames of a token frame. */
-  private def counts(tk: DataFrame): (DataFrame, DataFrame) = {
-    val c1 = tk.groupBy(col("w")).agg(count(lit(1)).as("cnt"))
-    val c2 = tk.filter(col("pw").isNotNull)
-      .groupBy(col("pw"), col("w"))
-      .agg(count(lit(1)).as("cnt"))
-    (c1, c2)
+  /** The unigram and bigram count parts with a doc frame's rows, the
+    * unigram part first. */
+  private def counts(docs: DataFrame): Seq[(CountPart, DataFrame)] = {
+    val tk = toks(docs)
+    Seq(C1 -> tk.groupBy(col("w")).agg(count(lit(1)).as("cnt")),
+      C2 -> tk.filter(col("pw").isNotNull)
+        .groupBy(col("pw"), col("w"))
+        .agg(count(lit(1)).as("cnt")))
   }
 
   /** Train once over the base split. */
   def materialize(spark: SparkSession, dir: String, path: String): Unit =
     materializeFrom(Tables(spark, dir).documents.filter(isBase), path)
 
-  def materializeFrom(docs: DataFrame, path: String): Unit = {
-    val tk = toks(docs).localCheckpoint() // one tokenize, three consumers
-    val (c1, c2) = counts(tk)
-    val c1p = c1.localCheckpoint() // vocabulary-bounded; feeds table + stats
-    CommitLog.transaction(tk.sparkSession, path) { t =>
-      t.replace(c1p.withColumn("wb", bucket(col("w"))), c1Path(path), Seq("wb"))
-      t.replace(c2.withColumn("pwb", bucket(col("pw"))), c2Path(path), Seq("pwb"))
-      t.replace(c1p.agg(sum(col("cnt")).as("nb"), count(lit(1)).as("v")),
-        statsPath(path))
-    }
-  }
+  def materializeFrom(docs: DataFrame, path: String): Unit =
+    LmWarehouse.build(path, counts(docs))
 
-  /** REFRESH — append the batch's unigram/bigram deltas, bump (nb, v).
-    * O(batch): the new-term count anti-joins the batch vocabulary
-    * against the standing c1 restricted to the batch's own buckets.
-    *
-    * Durability contract (round 11 — CommitLog replaces the rename
-    * swap this member carried and DELETES its documented caveat): all
-    * three parts land as ONE transaction behind a commit marker, so
-    * cross-table atomicity holds outright — a crash in any window
-    * leaves probes on the pre-refresh state bit-for-bit, a concurrent
-    * probe's pinned snapshot can never see the appended counts without
-    * the matching denominator, and the retried verb converges with a
-    * clean run (WarehouseCommitSpec drives this member's windows). */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val tk = toks(batch).localCheckpoint()
-    val (c1, c2) = counts(tk)
-    // stats scalars ride the delta checkpoint + the stats write plan
-    // (optimization r16, the LmWarehouse.refresh fold — VERDICT-r15
-    // ask #7): isEmpty/batchTokens off the observe, new-term count and
-    // stats head folded into the replace's own 1-row plan
-    val obs = new org.apache.spark.sql.Observation()
-    val delta1 = c1.observe(obs, coalesce(sum(col("cnt")), lit(0L)).as("bt"),
-      count(lit(1)).as("nterms")).localCheckpoint()
-    if (obs.get("nterms").asInstanceOf[Long] == 0L) return // empty batch
-    val batchTokens = obs.get("bt").asInstanceOf[Long]
-    val buckets = delta1.select(bucket(col("w")).as("wb"))
-      .distinct().collect().map(_.getLong(0))
-    // standing vocab by SUMMED count ≠ 0 (not row distinct): a
-    // fully-retracted term's zero-sum rows must read as absent, or a
-    // later re-ingest of that term is missed by the new-term count
-    // and v permanently undercounts (retract∘refresh == rebuild)
-    val snap = CommitLog.snapshot(spark, path)
-    val standing = snap.read(c1Path(path))
-      .filter(col("wb").isin(buckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("w")).agg(sum(col("cnt")).as("scnt"))
-      .filter(col("scnt") =!= 0)
-      .select(col("w"))
-    val newTerms = delta1.join(standing, Seq("w"), "left_anti")
-      .agg(count(lit(1)).as("nt"))
-    CommitLog.transaction(spark, path) { t =>
-      t.append(delta1.withColumn("wb", bucket(col("w"))), c1Path(path), Seq("wb"))
-      t.append(c2.withColumn("pwb", bucket(col("pw"))), c2Path(path), Seq("pwb"))
-      t.replace(snap.read(statsPath(path)).crossJoin(newTerms)
-        .select((col("nb") + lit(batchTokens)).as("nb"),
-          (col("v") + col("nt")).as("v")), statsPath(path))
-    }
-  }
+  /** REFRESH — append the batch's unigram and bigram deltas and bump
+    * (nb, v), O(batch), through `LmWarehouse.fold`.  All three parts
+    * land as one transaction: a crash in any window leaves probes on
+    * the pre-refresh state bit-for-bit, a probe's pinned snapshot
+    * never sees the counts without the matching denominator, and the
+    * retried verb converges with a clean run (WarehouseCommitSpec
+    * drives this member's windows). */
+  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit =
+    LmWarehouse.fold(spark, path, 1L, counts(batch))
 
-  /** RETRACT — the delete verb on the BIT-EQUAL rung, the
-    * LmWarehouse.retract mirror on BOTH tables: removing docs appends
-    * their unigram AND bigram counts NEGATED, after which every
-    * probe-side per-key sum is literally the rebuild-on-survivors
-    * integer.  The stats decrement is exact (nb loses the removed
-    * token count; v loses the terms whose entire standing count the
-    * removal erases — the bucket-pruned standing-sum compare, O(removed
-    * vocab)).  A fully-retracted UNIGRAM then probes as OOV seamlessly
-    * (cnt 0 scores the exact Laplace UNK — coalesce makes 0 ≡ absent);
-    * a fully-retracted BIGRAM must fall through to BACKOFF, which is
-    * why the probe's c2 fold drops zero-sum keys (a 0-count bigram row
-    * would otherwise score probability 0 — infinite NLL — instead of
-    * the rebuild's backoff branch).  Precondition: removed docs were
-    * ingested with this exact text (the crawl contract mirrored). */
-  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit = {
-    val tk = toks(removed).localCheckpoint()
-    val (c1, c2) = counts(tk)
-    // the refresh verb's stats-fold shape, mirrored (optimization r16)
-    val obs = new org.apache.spark.sql.Observation()
-    val delta1 = c1.observe(obs, coalesce(sum(col("cnt")), lit(0L)).as("rt"),
-      count(lit(1)).as("nterms")).localCheckpoint()
-    if (obs.get("nterms").asInstanceOf[Long] == 0L) return // empty takedown
-    val removedTokens = obs.get("rt").asInstanceOf[Long]
-    val buckets = delta1.select(bucket(col("w")).as("wb"))
-      .distinct().collect().map(_.getLong(0))
-    val snap = CommitLog.snapshot(spark, path)
-    val standing = snap.read(c1Path(path))
-      .filter(col("wb").isin(buckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("w")).agg(sum(col("cnt")).as("scnt"))
-    val vanished = delta1.join(standing, Seq("w"))
-      .filter(col("scnt") === col("cnt"))
-      .agg(count(lit(1)).as("vt"))
-    CommitLog.transaction(spark, path) { t =>
-      t.append(delta1.select(col("w"), (-col("cnt")).as("cnt"))
-        .withColumn("wb", bucket(col("w"))), c1Path(path), Seq("wb"))
-      t.append(c2.select(col("pw"), col("w"), (-col("cnt")).as("cnt"))
-        .withColumn("pwb", bucket(col("pw"))), c2Path(path), Seq("pwb"))
-      t.replace(snap.read(statsPath(path)).crossJoin(vanished)
-        .select((col("nb") - lit(removedTokens)).as("nb"),
-          (col("v") - col("vt")).as("v")), statsPath(path))
-    }
-  }
+  /** RETRACT — append the removed docs' unigram and bigram counts
+    * negated, so every per-key sum is the rebuild-on-survivors integer;
+    * nb and v fold exactly as in LmWarehouse.retract.  A
+    * fully-retracted unigram reads as absent and scores the Laplace
+    * UNK; a fully-retracted bigram reads as absent and falls through
+    * to backoff, as in the rebuild.  Precondition: the removed docs
+    * were ingested with this exact text. */
+  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit =
+    LmWarehouse.fold(spark, path, -1L, counts(removed))
 
   /** COMPACT — merge both delta tables to one row per key; stats are
     * already exact.  Probes bit-identical (integer delta sums);
-    * fully-retracted keys fold to 0 and DROP, making both compacted
-    * tables literally the rebuild-on-survivors state (vacuous when
-    * nothing was retracted: positive-delta sums are positive). */
+    * fully-retracted keys drop, leaving the rebuild-on-survivors
+    * tables. */
   def compact(spark: SparkSession, path: String): Unit = {
     val snap = CommitLog.snapshot(spark, path)
-    val m1 = snap.read(c1Path(path))
-      .groupBy(col("w"), col("wb")).agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") =!= 0)
-    val m2 = snap.read(c2Path(path))
-      .groupBy(col("pw"), col("w"), col("pwb")).agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") =!= 0)
     CommitLog.transaction(spark, path) { t =>
-      t.replace(m1, c1Path(path), Seq("wb"))
-      t.replace(m2, c2Path(path), Seq("pwb"))
+      C1.compact(t, snap, path)
+      C2.compact(t, snap, path)
     }
   }
 
@@ -207,27 +119,15 @@ object BigramLmWarehouse {
   def probe(spark: SparkSession, path: String, docs: DataFrame): DataFrame = {
     // one snapshot pins c1 + c2 + stats together (no torn denominator)
     val snap = CommitLog.snapshot(spark, path)
-    // stats ride the plan as a broadcast 1-row relation instead of an
-    // eager head() per probe rep (optimization r15, the
-    // Bm25Warehouse.probe shape) — denominator value-identical
+    // the stats ride the plan as a broadcast 1-row relation
     val stats = broadcast(snap.read(statsPath(path))
       .select((col("nb") + col("v") + lit(1L)).cast("double").as("__denom")))
-    val tk = toks(docs).localCheckpoint()
-    val wBuckets = tk.select(bucket(col("w")).as("b"))
-      .distinct().collect().map(_.getLong(0))
-    val c1 = snap.read(c1Path(path))
-      .filter(col("wb").isin(wBuckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("w")).agg(sum(col("cnt")).as("cnt"))
-    val c2 = snap.read(c2Path(path))
-      .filter(col("pwb").isin(wBuckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("pw"), col("w")).agg(sum(col("cnt")).as("cnt2"))
-      // fully-retracted bigrams (sum 0) must fall through to the
-      // BACKOFF branch exactly as a rebuild's absent row would — a
-      // kept 0 row would score probability 0 (infinite NLL).  The
-      // unigram side needs no twin filter: coalesce(0)+1 is already
-      // the rebuild's Laplace UNK.  Vacuous without retraction.
-      .filter(col("cnt2") =!= 0)
-    val scored = tk // pw rides the token rows — no self-join (r15)
+    val tk = toks(docs)
+    // context words are token words, so the word buckets prune both sides
+    val wBuckets = C1.buckets(tk)
+    val c1 = C1.sums(snap, path, wBuckets)
+    val c2 = C2.sums(snap, path, wBuckets).withColumnRenamed("cnt", "cnt2")
+    val scored = tk
       .join(c1.select(col("w"), col("cnt").as("cw")), Seq("w"), "left")
       .join(c1.select(col("w").as("pw"), col("cnt").as("cpw")), Seq("pw"), "left")
       .join(c2.select(col("pw"), col("w"), col("cnt2")), Seq("pw", "w"), "left")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.MinHashWarehouse.isBase
 import graft.functions.Exact.{roundx, sumx}
 import graft.functions.TextFunctions.words
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{CommitLog, CountPart, Tables}
 
 /** The unigram LM AT REST — quality scoring's member of the warehouse
   * family (MinHashWarehouse: J-dedup, LshWarehouse: cosine,
@@ -16,19 +16,17 @@ import graft.sources.{CommitLog, Tables}
   * ingest stream — is scored against the frozen model without ever
   * re-reading corpus text.
   *
-  * Layout (the Bm25Warehouse conventions, APPEND-ONLY for refresh):
-  *  - `<path>`: (term, cnt) DELTA rows partitioned by tb =
-  *    pmod(xxhash64(term), 64) — a probe's term set maps to a driver
-  *    bucket list that PRUNES partitions (spec-asserted via
-  *    listFiles), then sums deltas per term over the pruned slice
-  *    (vocabulary-bounded — metadata-scale), so `refresh` folds a
-  *    batch in by appending its term counts instead of rewriting the
-  *    model; counts at rest are integers, floats exist only in the
-  *    probe's codegen.
+  * Layout (append-only for refresh and retract):
+  *  - `<path>`: the (term, cnt) `CountPart`, delta rows partitioned by
+  *    tb = `CountPart.bucket(term)`.  A probe's term set maps to a
+  *    driver bucket list that prunes partitions (spec-asserted via
+  *    listFiles) and sums deltas per term over the pruned slice, so
+  *    `refresh` appends the batch's term counts instead of rewriting
+  *    the model.  Counts at rest are integers; floats exist only in
+  *    the probe.
   *  - `<path>.stats`: one row (nb, v) — corpus token count and
-  *    vocabulary size; refresh rewrites it from driver scalars (nb +=
-  *    batch tokens; v += batch terms not yet in the index, counted by
-  *    an anti-join against the PRUNED standing model — O(batch)).
+  *    vocabulary size, folded by `fold` from driver scalars and the
+  *    pruned standing sums — O(batch).
   *
   * Model: OPEN-vocabulary Laplace smoothing over v+1 classes (the v
   * base terms + one UNK bucket every unseen term shares):
@@ -38,7 +36,7 @@ import graft.sources.{CommitLog, Tables}
   * UNK convention is the only one that serves unseen text (the
   * registered probe and its oracle mirror it exactly).
   *
-  * Probe: tokenize ONLY the probe batch (plan-asserted: one documents
+  * Probe: tokenize ONLY the probe batch (plan-asserted: no documents
   * scan), LEFT-join the pruned LM on term, one doc-keyed partial agg;
   * nll per token through the s_bm25 9-dp + DECIMAL ln license —
   * oracled.  Scores are per-doc and batch-local, so the streaming
@@ -47,12 +45,13 @@ import graft.sources.{CommitLog, Tables}
   */
 object LmWarehouse {
 
-  private val TermBuckets = 64
+  private val Terms = CountPart(Seq("term"), "cnt", "tb", "")
 
   private def statsPath(path: String): String = s"$path.stats"
 
-  private def termBucket(term: org.apache.spark.sql.Column) =
-    pmod(xxhash64(term), lit(TermBuckets.toLong))
+  private def counts(docs: DataFrame): DataFrame =
+    docs.select(explode(words(col("text"))).as("term"))
+      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
 
   /** Train once: write the bucket-partitioned (term, cnt) table and
     * the 1-row (nb, v) stats side from the base split. */
@@ -61,130 +60,80 @@ object LmWarehouse {
 
   /** Frame-level ingest — also the refresh-equivalence spec's one-shot
     * reference builder. */
-  def materializeFrom(docs: DataFrame, path: String): Unit = {
-    val toks = docs.select(explode(words(col("text"))).as("term"))
-    val lm = toks.groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // one token pass feeds both the table and (nb, v)
-    CommitLog.transaction(toks.sparkSession, path) { t =>
-      t.replace(lm.withColumn("tb", termBucket(col("term"))), path, Seq("tb"))
-      t.replace(lm.agg(sum(col("cnt")).as("nb"), count(lit(1)).as("v")),
+  def materializeFrom(docs: DataFrame, path: String): Unit =
+    build(path, Seq(Terms -> counts(docs)))
+
+  /** REFRESH — fold an accepted crawl batch into the LM at rest in one
+    * transaction: append the batch's (term, cnt) deltas and bump
+    * (nb, v).  O(batch): only the batch is tokenized, the new-term
+    * count reads the standing model on the batch's own term buckets,
+    * and no standing row is rewritten.  Batch doc_ids and terms need
+    * no uniqueness — reads sum deltas per term. */
+  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit =
+    fold(spark, path, 1L, Seq(Terms -> counts(batch)))
+
+  /** RETRACT — remove docs by appending their term counts negated, so
+    * every per-term sum is the rebuild-on-survivors integer; nb loses
+    * the removed tokens and v the terms whose whole standing count
+    * the removal erases.  A vanished term reads as absent and scores
+    * the Laplace UNK mass, so probe-after-retract == probe-on-rebuild
+    * bit-for-bit before and after compact (LmWarehouseSpec pins it).
+    * Precondition: the removed docs were ingested with this exact
+    * text. */
+  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit =
+    fold(spark, path, -1L, Seq(Terms -> counts(removed)))
+
+  /** One LM build, shared with BigramLmWarehouse: replace every count
+    * part and the (nb, v) stats in one transaction.  The first part is
+    * the unigram part: nb is its count total, v its key count. */
+  private[operators] def build(path: String,
+      parts: Seq[(CountPart, DataFrame)]): Unit = {
+    val (part, rows) = parts.head
+    val pinned = rows.localCheckpoint() // feeds the part and (nb, v)
+    CommitLog.transaction(pinned.sparkSession, path) { t =>
+      part.replace(t, pinned, path)
+      parts.tail.foreach { case (p, r) => p.replace(t, r, path) }
+      t.replace(pinned.agg(sum(col(part.count)).as("nb"), count(lit(1)).as("v")),
         statsPath(path))
     }
   }
 
-  /** REFRESH — fold an accepted crawl batch into the LM at rest:
-    * append the batch's (term, cnt) deltas, bump (nb, v).  O(batch):
-    * tokenizes only the batch; the new-term count anti-joins the
-    * batch vocabulary against the standing model restricted to the
-    * batch's own term buckets (partition-pruned reads); no standing
-    * row is rewritten.  Batch doc_ids/terms need no uniqueness — the
-    * probe sums deltas per term. */
-  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    // stats scalars ride the delta's own materialization and the stats
-    // write's plan (optimization r16, guide §1.2 — VERDICT-r15 ask #7):
-    // the old verb paid an eager isEmpty probe, a batchTokens aggregate
-    // job and a 1-row stats head() per refresh; batchTokens/emptiness
-    // now come off an observe() on the delta checkpoint, and the
-    // (nb, v) replace is a 1-row PLAN over the pinned stats snapshot
-    // crossJoined with the new-term count — the anti-join count job
-    // folds into the transaction's own write.  Same integers.
+  /** The signed fold behind both LMs' refresh (sign +1) and retract
+    * (sign −1), in one transaction: append sign × counts to every
+    * count part, add sign × tokens to nb, and add to v the first
+    * (unigram) part's `CountPart.shift` — the new terms of a refresh,
+    * minus the vanished terms of a retract.  An empty batch is a
+    * no-op.  A reader never sees the counts without the matching
+    * stats. */
+  private[operators] def fold(spark: SparkSession, path: String, sign: Long,
+      parts: Seq[(CountPart, DataFrame)]): Unit = {
+    val (part, rows) = parts.head
     val obs = new org.apache.spark.sql.Observation()
-    val delta = batch.select(explode(words(col("text"))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .observe(obs, coalesce(sum(col("cnt")), lit(0L)).as("bt"),
-        count(lit(1)).as("nterms"))
-      .localCheckpoint()
-    if (obs.get("nterms").asInstanceOf[Long] == 0L) return // empty batch
-    val batchTokens = obs.get("bt").asInstanceOf[Long]
-    val buckets = delta.select(termBucket(col("term")).as("tb"))
-      .distinct().collect().map(_.getLong(0))
-    // standing vocab = terms whose SUMMED count is nonzero — a
-    // fully-retracted term leaves zero-sum delta rows behind, and a
-    // distinct-over-rows check would misread it as still-known,
-    // undercounting v when the term re-enters (retract∘refresh ==
-    // rebuild requires the sum-based membership retract itself uses)
+    val delta = rows.observe(obs, coalesce(sum(col(part.count)), lit(0L)).as("tokens"),
+      count(lit(1)).as("keys")).localCheckpoint()
+    if (obs.get("keys").asInstanceOf[Long] == 0L) return
+    val tokens = obs.get("tokens").asInstanceOf[Long]
     val snap = CommitLog.snapshot(spark, path)
-    val standing = snap.read(path)
-      .filter(col("tb").isin(buckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("term")).agg(sum(col("cnt")).as("scnt"))
-      .filter(col("scnt") =!= 0)
-      .select(col("term"))
-    val newTerms = delta.join(standing, Seq("term"), "left_anti")
-      .agg(count(lit(1)).as("nt"))
-    // model append + stats replace land as ONE transaction — a reader
-    // can never see the deltas without the matching denominator
+    val shift = part.shift(snap, path, delta, sign)
     CommitLog.transaction(spark, path) { t =>
-      t.append(delta.withColumn("tb", termBucket(col("term"))), path, Seq("tb"))
-      t.replace(snap.read(statsPath(path)).crossJoin(newTerms)
-        .select((col("nb") + lit(batchTokens)).as("nb"),
-          (col("v") + col("nt")).as("v")), statsPath(path))
+      part.append(t, delta, path, sign)
+      parts.tail.foreach { case (p, r) => p.append(t, r, path, sign) }
+      t.replace(snap.read(statsPath(path)).crossJoin(shift)
+        .select((col("nb") + lit(sign * tokens)).as("nb"),
+          (col("v") + col("shift")).as("v")), statsPath(path))
     }
   }
 
-  /** RETRACT — the delete verb on the BIT-EQUAL rung (round 10,
-    * extending VERDICT-r09 ask #1 across the matrix): LM state is
-    * additive integer counts, so removing docs appends their term
-    * counts NEGATED — after which every probe-side per-term sum is
-    * literally the rebuild-on-survivors integer.  The stats decrement
-    * is exact too: nb loses the removed token count; v loses the
-    * terms whose ENTIRE standing count the removal erases (counted by
-    * comparing the removed counts against the standing sums over the
-    * removed terms' own buckets — partition-pruned, O(removed vocab),
-    * the refresh new-term anti-join's mirror).  A vanished term then
-    * probes as OOV — and Laplace makes that seamless: cnt 0 scores
-    * (0+1)/denom, the exact UNK value, so probe-after-retract ==
-    * probe-on-rebuild BIT-FOR-BIT even before compact folds the zero
-    * rows out (LmWarehouseSpec pins it).  Precondition (the crawl
-    * contract mirrored): removed docs were ingested with this exact
-    * text. */
-  def retract(spark: SparkSession, removed: DataFrame, path: String): Unit = {
-    // the refresh verb's stats-fold shape, mirrored (optimization r16):
-    // removedTokens/emptiness off the delta observe, the (nb, v)
-    // decrement as a 1-row plan over the pinned snapshot + the
-    // vanished-term count — two aggregate jobs and a head() gone
-    val obs = new org.apache.spark.sql.Observation()
-    val delta = removed.select(explode(words(col("text"))).as("term"))
-      .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
-      .observe(obs, coalesce(sum(col("cnt")), lit(0L)).as("rt"),
-        count(lit(1)).as("nterms"))
-      .localCheckpoint()
-    if (obs.get("nterms").asInstanceOf[Long] == 0L) return // empty takedown
-    val removedTokens = obs.get("rt").asInstanceOf[Long]
-    val buckets = delta.select(termBucket(col("term")).as("tb"))
-      .distinct().collect().map(_.getLong(0))
-    val snap = CommitLog.snapshot(spark, path)
-    val standing = snap.read(path)
-      .filter(col("tb").isin(buckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("term")).agg(sum(col("cnt")).as("scnt"))
-    val vanished = delta.join(standing, Seq("term"))
-      .filter(col("scnt") === col("cnt"))
-      .agg(count(lit(1)).as("vt"))
-    CommitLog.transaction(spark, path) { t =>
-      t.append(delta.select(col("term"), (-col("cnt")).as("cnt"))
-        .withColumn("tb", termBucket(col("term"))), path, Seq("tb"))
-      t.replace(snap.read(statsPath(path)).crossJoin(vanished)
-        .select((col("nb") - lit(removedTokens)).as("nb"),
-          (col("v") - col("vt")).as("v")), statsPath(path))
-    }
-  }
-
-  /** COMPACT — merge accumulated (term, cnt) delta rows back to ONE
-    * row per term in the same bucket layout (the Bm25Warehouse.compact
-    * segment-merge stance).  Stats are untouched — (nb, v) are already
-    * maintained exactly by refresh/retract — and probes are
-    * bit-identical before/after (integer delta sums are order-free;
-    * WarehouseCompactSpec pins it).  Fully-retracted terms fold to 0
-    * and DROP, making the compacted table literally the
-    * rebuild-on-survivors state (vacuous when nothing was retracted).
-    * Under CommitLog the merge writes a NEW generation dir (never its
-    * own source), so no pin is needed; CommitLog.vacuum reclaims the
-    * dead generations on the retention cadence (separate verb —
-    * pinned probe snapshots stay readable across this compact). */
+  /** COMPACT — merge the (term, cnt) deltas to one row per term in the
+    * same bucket layout.  Stats are untouched (refresh and retract keep
+    * them exact), probes are bit-identical (integer sums are
+    * order-free; WarehouseCompactSpec pins it), and fully-retracted
+    * terms drop, leaving the rebuild-on-survivors table.  The merge
+    * writes a new generation, so probes pinned before it keep reading;
+    * CommitLog.vacuum reclaims the old generations. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val merged = CommitLog.snapshot(spark, path).read(path)
-      .groupBy(col("term"), col("tb")).agg(sum(col("cnt")).as("cnt"))
-      .filter(col("cnt") =!= 0)
-    CommitLog.transaction(spark, path)(_.replace(merged, path, Seq("tb")))
+    val snap = CommitLog.snapshot(spark, path)
+    CommitLog.transaction(spark, path)(Terms.compact(_, snap, path))
   }
 
   /** Score `docs` = (doc_id, text) against the LM at rest: per-doc avg
@@ -194,20 +143,10 @@ object LmWarehouse {
   def probe(spark: SparkSession, path: String, docs: DataFrame): DataFrame = {
     // one snapshot pins model + stats together (no torn denominator)
     val snap = CommitLog.snapshot(spark, path)
-    // probe tokens are pinned once (they feed the bucket collect AND
-    // the scoring join), and the stats scalars ride the plan as a
-    // broadcast 1-row relation instead of an eager head() — two fewer
-    // jobs per probe rep (optimization r15, the Bm25Warehouse.probe
-    // shape); denominator arithmetic value-identical
+    // the tokens feed both the bucket list and the scoring join
     val toks = docs.select(col("doc_id"), explode(words(col("text"))).as("term"))
       .localCheckpoint()
-    val buckets = toks.select(termBucket(col("term")).as("tb"))
-      .distinct().collect().map(_.getLong(0))
-    // sum delta rows per term over the pruned slice — the probe-side
-    // merge that keeps refresh append-only (vocabulary-bounded agg)
-    val lm = snap.read(path)
-      .filter(col("tb").isin(buckets.toIndexedSeq.map(java.lang.Long.valueOf): _*))
-      .groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
+    val lm = Terms.sums(snap, path, Terms.buckets(toks))
     val stats = broadcast(snap.read(statsPath(path))
       .select((col("nb") + col("v") + lit(1L)).cast("double").as("__denom")))
     val nll = roundx(-log(

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.functions.Exact.{roundx, sumx}
-import graft.sources.{CommitLog, Tables, Tombstones}
+import graft.sources.{Additive, CommitLog, Tables, Tombstones}
 
 /** The reference's richlist collector as a MAINTAINED top-k view —
   * a new algebraic shape for the warehouse matrix: bounded
@@ -94,7 +94,7 @@ object RichlistWarehouse {
 
   /** The refresh transaction body — buffer + totals + the optional
     * STREAM BATCH ID in one atomic commit (the exactly-once rung,
-    * StreamTwin; round 13 rolls it across the twin matrix). */
+    * StreamTwin). */
   private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
       path: String, batchId: Option[Long]): Boolean =
     graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId) { t =>
@@ -131,8 +131,7 @@ object RichlistWarehouse {
     // as ONE transaction — the retraction is all-or-nothing even when
     // it spans three parts and a promotion refill
     CommitLog.transaction(spark, path) { t =>
-      t.append(totDeltas(rem).select(col("denom"), (-col("tot")).as("tot"),
-        (-col("n")).as("n")), totPath(path))
+      t.append(Additive.negate(totDeltas(rem), Seq("denom")), totPath(path))
       t.append(rem.select(col("custkey")), tombPath(path))
       if (dirty.nonEmpty) {
         // pruned refill: dirty denoms only, survivors only (cumulative
@@ -157,10 +156,8 @@ object RichlistWarehouse {
     val snap = CommitLog.snapshot(spark, path)
     CommitLog.transaction(spark, path) { t =>
       t.replace(topkOf(liveBuffer(snap, path)), bufPath(path))
-      t.replace(snap.read(totPath(path))
-        .groupBy(col("denom"))
-        .agg(sum(col("tot")).as("tot"), sum(col("n")).as("n"))
-        .filter(col("n") =!= 0), totPath(path))
+      t.replace(Additive.merge(snap.read(totPath(path)), Seq("denom"), "n"),
+        totPath(path))
       if (snap.readOpt(tombPath(path)).nonEmpty) t.clear(tombPath(path))
       // replay protection survives compaction (StreamTwin)
       graft.sources.StreamTwin.compactIds(snap, t, path)
@@ -211,11 +208,10 @@ object RichlistWarehouse {
     * bit-equal top-K (each batch's buffer contribution is a superset
     * of its share of the true top-K), and the additive totals fold
     * order-free — spec-pinned against the one-shot build.  At the
-    * EXACTLY-ONCE rung since round 13: buffer + totals + the engine
-    * batch id commit in ONE transaction (StreamTwin), so a
-    * redelivered committed batch folds NOTHING — on an order
-    * statistic a replay is not even bounded noise: duplicated totals
-    * shift every served share. */
+    * EXACTLY-ONCE rung: buffer + totals + the engine batch id commit
+    * in ONE transaction (StreamTwin), so a redelivered committed
+    * batch folds NOTHING — on an order statistic a replay is not even
+    * bounded noise: duplicated totals shift every served share. */
   def streamingRefresh(rows: DataFrame, path: String,
       checkpointEvery: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
     graft.sources.StreamTwin.exactlyOnce(rows, path, checkpointEvery) {

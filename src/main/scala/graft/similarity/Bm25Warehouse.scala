@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.MinHashWarehouse.isBase
 import graft.functions.Exact.{roundx, sumx}
 import graft.functions.TextFunctions.words
-import graft.sources.{CommitLog, Tables}
+import graft.sources.{CommitLog, CountPart, Tables}
 
 /** The BM25 posting table AT REST — the lexical index the warehouse
   * family was missing (MinHashWarehouse: J-dedup; LshWarehouse:
@@ -20,24 +20,23 @@ import graft.sources.{CommitLog, Tables}
   * Layout (APPEND-ONLY — every part either never rewrites standing
   * rows or is a driver-scalar replace, so `refresh` can fold an
   * accepted crawl batch into the index at rest without re-reading any
-  * historical text; the LSM/segment-merge stance).  Since round 11
-  * every maintenance verb is ONE CommitLog transaction — postings +
-  * df + stats (+ tomb) land atomically behind a commit marker, probes
-  * pin a committed snapshot across all four parts, and the old
-  * single-writer/NO-CRASH caveat is dead (graft.sources.CommitLog;
-  * WarehouseCommitSpec kills a refresh between every pair of part
-  * writes and pins pre-refresh probes bit-for-bit):
+  * historical text; the LSM/segment-merge stance).  Every maintenance
+  * verb is ONE CommitLog transaction — postings + df + stats (+ tomb)
+  * land atomically behind a commit marker, and probes pin a committed
+  * snapshot across all four parts (WarehouseCommitSpec kills a
+  * refresh between every pair of part writes and pins pre-refresh
+  * probes bit-for-bit):
   *  - `<path>`: posting rows (term, doc_id, tf, len) partitioned by
-  *    tb = pmod(xxhash64(term), 64) — term-hash buckets, so a probe
+  *    tb = `CountPart.bucket(term)` — term-hash buckets, so a probe
   *    whose term set maps to few buckets PRUNES partitions (the
   *    single-eval-item serving path; spec-asserted via listFiles).
   *    len rides each row (per-doc, append-safe); df deliberately does
   *    NOT — a denormalized df would be invalidated on every standing
   *    row by any append (the build/probe-drift class).
-  *  - `<path>.df`: (term, dfd) DELTA rows, same tb partitioning — the
-  *    probe sums deltas per term over the pruned buckets, so a refresh
-  *    appends its batch's df contribution instead of rewriting the
-  *    vocabulary.  The probe-side sum is vocabulary-bounded ON THE
+  *  - `<path>.df`: the (term, dfd) `CountPart`, same tb partitioning
+  *    — the probe sums deltas per term over the pruned buckets, so a
+  *    refresh appends its batch's df contribution instead of
+  *    rewriting the vocabulary.  The probe-side sum is vocabulary-bounded ON THE
   *    PROBED BUCKETS — metadata-scale.  (The alternative — one
   *    (term, df) row kept current — needs an atomic swap of the whole
   *    df table per refresh; delta rows trade a tiny probe agg for
@@ -64,27 +63,24 @@ import graft.sources.{CommitLog, Tables}
 object Bm25Warehouse {
 
   // scoring constants are OWNED by Bm25 — the warehouse probe must
-  // never fork from the inline leg's arithmetic (the round-4 Bloom
-  // build/probe-drift lesson)
+  // never fork from the inline leg's arithmetic
   import Bm25.{K1, B, K1Plus1, OneMinusB}
-  private val TermBuckets = 64
+
+  private val Df = CountPart(Seq("term"), "dfd", "tb", ".df")
 
   private def statsPath(path: String): String = s"$path.stats"
-  private def dfPath(path: String): String = s"$path.df"
   private def tombPath(path: String): String = s"$path.tomb"
 
-  private def termBucket(term: org.apache.spark.sql.Column) =
-    pmod(xxhash64(term), lit(TermBuckets.toLong))
+  private def withBucket(postings: DataFrame): DataFrame =
+    postings.withColumn("tb", CountPart.bucket(col("term")))
 
   /** One batch's contribution: (postings(term, doc_id, tf, len),
     * dfDeltas(term, dfd), nDocs, sumLen). */
   private def contribution(docs: DataFrame):
       (DataFrame, DataFrame, Long, Long) = {
     val toks = docs.select(col("doc_id"), words(col("text")).as("toks"))
-    // (n, sl) ride the lens checkpoint via observe() (optimization
-    // r16, guide §1.2 — VERDICT-r15 ask #7): the old shape paid a
-    // separate aggregate job per ingest/refresh/retract for two
-    // scalars the materialization already streams past
+    // (n, sl) ride the lens checkpoint via observe(), so the two
+    // scalars cost no aggregate job of their own
     val obs = new org.apache.spark.sql.Observation()
     val lens = toks.select(col("doc_id"),
         size(col("toks")).cast("long").as("len"))
@@ -110,13 +106,12 @@ object Bm25Warehouse {
 
   /** Frame-level ingest — also the refresh-equivalence spec's one-shot
     * reference builder.  ONE CommitLog transaction: all three parts
-    * land atomically (round 11 — the shared protocol replacing this
-    * member's single-writer/no-crash caveat). */
+    * land atomically. */
   def materializeFrom(spark: SparkSession, docs: DataFrame, path: String): Unit = {
     val (postings, dfd, n, sl) = contribution(docs)
     CommitLog.transaction(spark, path) { t =>
-      t.replace(postings.withColumn("tb", termBucket(col("term"))), path, Seq("tb"))
-      t.replace(dfd.withColumn("tb", termBucket(col("term"))), dfPath(path), Seq("tb"))
+      t.replace(withBucket(postings), path, Seq("tb"))
+      Df.replace(t, dfd, path)
       t.replace(statsFrame(spark, n, sl), statsPath(path))
     }
   }
@@ -135,13 +130,12 @@ object Bm25Warehouse {
 
   /** The refresh transaction body, optionally committing a STREAM
     * BATCH ID as one more part of the SAME transaction — the
-    * exactly-once move the streaming twin rides (round 12, VERDICT-r11
-    * ask #6; shared machinery in StreamTwin): because the id commits
-    * atomically WITH the data, an at-least-once redelivery whose
-    * external marker was lost (the crash window between txn commit and
-    * marker write) still skips — the committed `.stream` part is the
-    * ground truth.  Returns false (and folds NOTHING) when `batchId`
-    * is already committed.  (Unlike the Ts/Quantile twins this member
+    * exactly-once move the streaming twin rides (shared machinery in
+    * StreamTwin): because the id commits atomically WITH the data,
+    * an at-least-once redelivery whose external marker was lost (the
+    * crash window between txn commit and marker write) still skips —
+    * the committed `.stream` part is the ground truth.  Returns false
+    * (and folds NOTHING) when `batchId` is already committed.  (Unlike the Ts/Quantile twins this member
     * needs the snapshot on the plain path too — the stats-scalar read
     * below — so it is taken unconditionally.) */
   private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
@@ -152,10 +146,9 @@ object Bm25Warehouse {
     if (seen) return false
     val (postings, dfd, n, sl) = contribution(batch)
     // the (n, sl) bump as a 1-row plan over the pinned stats snapshot
-    // — the eager head() per refresh is gone (optimization r16)
     CommitLog.transaction(spark, path) { t =>
-      t.append(postings.withColumn("tb", termBucket(col("term"))), path, Seq("tb"))
-      t.append(dfd.withColumn("tb", termBucket(col("term"))), dfPath(path), Seq("tb"))
+      t.append(withBucket(postings), path, Seq("tb"))
+      Df.append(t, dfd, path, 1L)
       t.replace(snap.read(statsPath(path))
         .select((col("n") + lit(n)).as("n"), (col("sl") + lit(sl)).as("sl")),
         statsPath(path))
@@ -165,20 +158,20 @@ object Bm25Warehouse {
   }
 
   /** RETRACT — the delete verb, with the STATS DECREMENT this member
-    * adds over MinHashWarehouse's plain tombstoning (round 10,
-    * extending VERDICT-r09 ask #1 to the scored-index shape the ask
-    * itself named): a takedown arrives as the removed docs' (doc_id,
-    * text) rows — the content ingest saw (the crawl contract
-    * mirrored; tokenization is deterministic, so the decrement
-    * recomputes the ingest-side contribution EXACTLY).  One sub-verb
+    * adds over MinHashWarehouse's plain tombstoning: a takedown
+    * arrives as the removed docs' (doc_id, text) rows — the content
+    * ingest saw (the crawl contract mirrored; tokenization is
+    * deterministic, so the decrement recomputes the ingest-side
+    * contribution EXACTLY).  One sub-verb
     * per state class, each on its honest ladder rung:
     *  - postings (per-doc facts): TOMBSTONE — doc_ids append to
     *    `.tomb`, probes drop tombstoned docs with one pruned
     *    anti-join on the already-bucket-pruned, term-restricted hit
     *    set (O(hits), never O(index));
     *  - df deltas (additive integers): NEGATIVE DELTAS — append
-    *    (term, −dfd); probe-side per-term sums are then LITERALLY the
-    *    rebuild-on-survivors integers (the BalanceWarehouse rung);
+    *    (term, −dfd) through `CountPart.append`; per-term sums are then
+    *    LITERALLY the rebuild-on-survivors integers, and a term whose
+    *    df sums to zero reads as absent;
     *  - stats (2 scalars): decrement n and sl.
     * Probe-after-retract == probe-against-rebuild-on-survivors
     * BIT-FOR-BIT (Bm25WarehouseSpec pins it); `compact` afterwards
@@ -186,12 +179,10 @@ object Bm25Warehouse {
     * rows out.  O(removed) + a 1-row read; no standing row touched. */
   def retract(spark: SparkSession, removed: DataFrame, path: String): Unit = {
     val (_, dfd, n, sl) = contribution(removed)
-    // the (n, sl) decrement as a 1-row plan over the pinned snapshot —
-    // the eager head() per retract is gone (optimization r16)
+    // the (n, sl) decrement as a 1-row plan over the pinned snapshot
     val snap = CommitLog.snapshot(spark, path)
     CommitLog.transaction(spark, path) { t =>
-      t.append(dfd.select(col("term"), (-col("dfd")).as("dfd"))
-        .withColumn("tb", termBucket(col("term"))), dfPath(path), Seq("tb"))
+      Df.append(t, dfd, path, -1L)
       t.append(removed.select(col("doc_id")), tombPath(path))
       t.replace(snap.read(statsPath(path))
         .select((col("n") - lit(n)).as("n"), (col("sl") - lit(sl)).as("sl")),
@@ -203,35 +194,24 @@ object Bm25Warehouse {
     * needs: every refresh appends one (term, dfd) delta row per batch
     * term, so the probe-side per-term delta sum (and the df table's
     * file count) grows linearly with refreshes.  Compaction merges the
-    * deltas back to ONE row per term in the same bucket layout.  Probe
-    * results are BIT-identical before/after (integer sums are
-    * order-free; WarehouseCompactSpec pins it) — this pass buys back
-    * the probe cost the append-only layout pays, offline.
+    * deltas back to ONE row per term in the same bucket layout;
+    * fully-retracted terms drop.  Probe results are BIT-identical
+    * before/after (integer sums are order-free; WarehouseCompactSpec
+    * pins it).
     *
-    * 100 TB: the df side is vocabulary-bounded — metadata-scale next
-    * to the posting table — so pinning it with localCheckpoint before
-    * overwriting its own source directory is safe at any corpus size
-    * (production form: write a new segment directory and flip a
-    * manifest pointer).  The posting side needs no logical compaction
-    * — posting rows are per-(doc, term) facts that never supersede
-    * each other; its small-file hygiene is plain storage-layer
-    * coalescing with no read-path semantics. */
+    * The posting side needs no logical compaction — posting rows are
+    * per-(doc, term) facts that never supersede each other — except
+    * for tombstoned docs, which it physically removes before clearing
+    * the tombstones.  Everything lands as ONE transaction that writes
+    * new generations, so a probe pinned before it keeps reading; the
+    * dead generations are reclaimed by CommitLog.vacuum on the
+    * caller's retention cadence. */
   def compact(spark: SparkSession, path: String): Unit = {
     val snap = CommitLog.snapshot(spark, path)
-    val merged = snap.read(dfPath(path))
-      .groupBy(col("term"), col("tb")).agg(sum(col("dfd")).as("dfd"))
-      // fully-retracted terms fold to 0 and drop — the merged df side
-      // becomes literally the rebuild-on-survivors table (vacuous when
-      // nothing was retracted: positive-delta sums are positive)
-      .filter(col("dfd") =!= 0)
     val tomb = snap.readOpt(tombPath(path))
       .map(_.select(col("doc_id")).distinct().localCheckpoint())
-    // physically remove tombstoned postings and clear the tombstones —
-    // the posting side's one semantic compaction case (see Scaladoc).
-    // The merge and the purge land as ONE transaction; the dead
-    // generations are then physically reclaimed.
     CommitLog.transaction(spark, path) { t =>
-      t.replace(merged, dfPath(path), Seq("tb"))
+      Df.compact(t, snap, path)
       tomb.foreach { keys =>
         t.replace(snap.read(path).join(keys, Seq("doc_id"), "left_anti"),
           path, Seq("tb"))
@@ -253,40 +233,31 @@ object Bm25Warehouse {
     // ONE snapshot pins every part — a refresh committing (or dying)
     // mid-probe cannot tear the view across postings/df/stats/tomb
     val snap = CommitLog.snapshot(spark, path)
-    // the query term sets are MATERIALIZED once per probe (optimization
-    // r15, guide §1.2): the frame feeds both the bucket-list collect
-    // below and the hits join's build side — un-pinned, the probe
-    // tokenized + distinct'd the query docs twice per run
+    // the query term sets are pinned once per probe: the frame feeds
+    // both the bucket list and the hits join's build side
     val q = queries.localCheckpoint()
-    val buckets = q.select(termBucket(col("term")).as("tb"))
-      .distinct().collect().map(_.getLong(0))
-    val bucketPred = (c: org.apache.spark.sql.Column) =>
-      c.isin(buckets.toIndexedSeq.map(java.lang.Long.valueOf): _*)
+    val buckets = Df.buckets(q)
     // df = sum of delta rows per term over the SAME pruned buckets —
     // vocabulary-bounded on the probed slice, merged at probe time so
     // refreshes stay append-only (see layout Scaladoc)
-    val dfSide = snap.read(dfPath(path))
-      .filter(bucketPred(col("tb")))
-      .groupBy(col("term")).agg(sum(col("dfd")).as("df"))
+    val dfSide = Df.sums(snap, path, buckets)
     // JOIN ORDER is the probe's cost model: restrict the posting scan
-    // to the query term sets FIRST (the posting-list-hits reduction —
-    // the only join the round-6 layout had), then attach df to the
-    // already-restricted hits (the delta agg is vocabulary-bounded and
-    // broadcasts; measured: df-before-queries doubled the probe by
-    // dragging the full posting slice through the df join)
+    // to the query term sets FIRST (the posting-list-hits reduction),
+    // then attach df to the already-restricted hits (the delta agg is
+    // vocabulary-bounded and broadcasts; df-before-queries doubled the
+    // probe by dragging the full posting slice through the df join)
     val hits = graft.sources.Tombstones.dropDf(
-      snap.read(path).filter(bucketPred(col("tb"))).join(q, Seq("term")),
+      snap.read(path).filter(CountPart.inBuckets(col("tb"), buckets))
+        .join(q, Seq("term")),
       snap.readOpt(tombPath(path)), key = "doc_id")
     // the (n, sl) stats scalars ride the plan as a broadcast 1-row
-    // relation instead of an EAGER head() per probe (optimization r15,
-    // guide §1.2 — one fewer Spark job per probe rep).  The arithmetic
-    // is value-identical: n is the same long, and len/(sl/n) divides by
-    // the same IEEE double the old precomputed-avgdl literal held.
+    // relation; len/(sl/n) divides by the same IEEE double as
+    // Bm25.bm25's avgdl
     val stats = broadcast(snap.read(statsPath(path))
       .select(col("n").as("__n"), col("sl").as("__sl")))
     val avgdl = col("__sl").cast("double") / col("__n").cast("double")
-    val idf = log(((col("__n") - col("df")).cast("double") + lit(0.5)) /
-      (col("df") + lit(0.5)) + lit(1.0))
+    val idf = log(((col("__n") - col("dfd")).cast("double") + lit(0.5)) /
+      (col("dfd") + lit(0.5)) + lit(1.0))
     val term = idf * ((col("tf") * lit(K1Plus1)) /
       (col("tf") + lit(K1) * (lit(OneMinusB) + lit(B) * (col("len") / avgdl))))
     val byQ = Window.partitionBy(col("query_id"))
@@ -328,8 +299,7 @@ object Bm25Warehouse {
       .distinct()
 
   /** The REFRESH's online twin — the crawl stream maintaining the
-    * index at rest (round 12, VERDICT-r11 ask #6: the first streaming
-    * WRITE loop on a CommitLog member).  Each micro-batch folds
+    * index at rest.  Each micro-batch folds
     * through `refreshTxn` with its engine batch id committed as one
     * more part of the same transaction, so the fold is EXACTLY-ONCE
     * under foreachBatch's at-least-once delivery — in layers:
@@ -342,7 +312,7 @@ object Bm25Warehouse {
     *    guard, which can only fail loudly there, because here the id
     *    and the data commit in the same atomic marker;
     *  - the lineage guard fails the STREAM START loudly when the
-    *    checkpoint and the markers diverge (ADVICE-r11 #4).
+    *    checkpoint and the markers diverge.
     * Register-free contract: any batching folds to the same index a
     * one-shot refresh of the union reaches (append-only postings/df,
     * scalar stats adds commute — Bm25WarehouseSpec pins probe

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.functions.{col, lit, pmod, sum}
+import org.apache.spark.sql.functions.{col, lit, pmod}
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -99,28 +99,23 @@ abstract class Rollup(view: String, splitKey: String) {
       (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
 }
 
-/** A rollup whose state is exact per-key sums: the merge sums every
-  * non-key column per key and drops keys whose `countCol` nets to
-  * zero, so the merged state equals a rebuild over the surviving rows.
+/** A rollup whose state is exact per-key sums: the merge is
+  * `Additive.merge` (every non-key column summed per key, keys whose
+  * `countCol` nets to zero dropped), so the merged state equals a
+  * rebuild over the surviving rows.
   * Sums are associative, so refresh, streaming and compaction are
   * bit-equal to a one-shot build, and `retract` is total. */
 abstract class AdditiveRollup(view: String, splitKey: String,
     keyCols: Seq[String], countCol: String) extends Rollup(view, splitKey) {
 
-  protected def merge(rows: DataFrame): DataFrame = {
-    val values = rows.columns.filterNot(keyCols.contains)
-      .map(c => sum(col(c)).as(c)).toSeq
-    rows.groupBy(keyCols.map(col): _*).agg(values.head, values.tail: _*)
-      .filter(col(countCol) =!= 0)
-  }
+  protected def merge(rows: DataFrame): DataFrame =
+    Additive.merge(rows, keyCols, countCol)
 
   /** Remove rows: append their deltas negated.  O(removed), append-only
     * like refresh.  Precondition: removed ⊆ what was ingested, so no
     * count goes net-negative. */
   def retract(spark: SparkSession, removed: DataFrame, path: String): Unit = {
-    val d = deltas(removed)
-    appendTxn(spark, d.select(d.columns.toSeq.map(c =>
-      if (keyCols.contains(c)) col(c) else (-col(c)).as(c)): _*), path, None)
+    appendTxn(spark, Additive.negate(deltas(removed), keyCols), path, None)
     ()
   }
 

@@ -212,4 +212,51 @@ class BigramLmWarehouseSpec extends GraftSpec {
     assert(rows(BigramLmWarehouse.probe(spark, p, q)) ==
       rows(BigramLmWarehouse.probe(spark, ref, q)))
   }
+
+  test("wide vocabulary: a refresh touching all 64 wb and pwb buckets == the one-shot build; retract == rebuild on survivors; compact keeps both; one term prunes to one bucket per part") {
+    val s = spark
+    import s.implicits._
+    val wide = WideCorpus.docs(s)
+    val slice = pmod(col("doc_id"), lit(10)) === 7
+    val oneShot = WideCorpus.path("blm-one")
+    BigramLmWarehouse.materializeFrom(wide, oneShot)
+    val p = WideCorpus.path("blm")
+    BigramLmWarehouse.materializeFrom(wide.filter(col("doc_id") < 300), p)
+    BigramLmWarehouse.refresh(s, wide.filter(col("doc_id") >= 300), p)
+    Seq("c1" -> "wb", "c2" -> "pwb").foreach { case (part, bucket) =>
+      val n = WideCorpus.bucketDirs(s"$p.$part/gen-1", bucket)
+      assert(n == 64, s"the refresh wrote $n of 64 $part buckets")
+    }
+
+    val probeDocs = WideCorpus.probeDocs(s)
+    def sums(q: String, part: String, keys: String*) =
+      sources.CommitLog.snapshot(s, q).read(s"$q.$part")
+        .groupBy(keys.map(col): _*).agg(sum(col("cnt")).as("cnt"))
+        .filter(col("cnt") =!= 0).collect().map(_.toSeq).toSet
+    def state(q: String) =
+      (rows(BigramLmWarehouse.probe(s, q, probeDocs)),
+        sums(q, "c1", "w"), sums(q, "c2", "pw", "w"),
+        sources.CommitLog.snapshot(s, q).read(s"$q.stats").head().toSeq)
+    val full = state(oneShot)
+    assert(full._1.exists(_(2) != 0L), "degenerate: no probe bigram hit")
+    assert(state(p) == full, "refresh diverges from the one-shot build")
+
+    val rebuilt = WideCorpus.path("blm-survivors")
+    BigramLmWarehouse.materializeFrom(wide.filter(!slice), rebuilt)
+    val want = state(rebuilt)
+    assert(want._4(1).asInstanceOf[Long] < full._4(1).asInstanceOf[Long],
+      "degenerate: the slice owns no word outright")
+    BigramLmWarehouse.retract(s, wide.filter(slice), p)
+    assert(state(p) == want, "retract diverges from the rebuild on the survivors")
+    BigramLmWarehouse.compact(s, p)
+    assert(state(p) == want, "compact changed probes, counts or stats")
+
+    val df = BigramLmWarehouse.probe(s, p, Seq(0L -> "w17").toDF("doc_id", "text"))
+    Seq("index.c1/gen-", "index.c2/gen-").foreach { root =>
+      val (scans, allParts, pruned) = WideCorpus.listing(df, root, "cnt")
+      assert(scans > 0, s"no $root scan in plan")
+      assert(allParts == 64 * scans, s"$allParts $root buckets at rest in $scans scans")
+      assert(pruned == scans, s"one term probed $pruned of $allParts $root buckets")
+    }
+  }
 }

@@ -112,33 +112,18 @@ class Bm25WarehouseSpec extends GraftSpec {
       s"3 terms probed $pruned of $allParts partitions")
     assert(df.count() >= 0)
   }
-  /** A seeded wide-vocabulary corpus (the RelationsSpec pattern): 400
-    * documents of 8–24 words over 1,000 terms, so that a batch touches
-    * every one of the 64 term buckets.  The sf0.001 documents use 31
-    * words, which fill 22. */
-  private lazy val wide = {
-    val s = spark
-    import s.implicits._
-    val rnd = new scala.util.Random(20261019L)
-    (0L until 400L).map { id =>
-      id -> Seq.fill(8 + rnd.nextInt(17))(s"w${rnd.nextInt(1000)}").mkString(" ")
-    }.toDF("doc_id", "text")
-  }
-
-  private def widePath(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-bm25w-$tag-").toString + "/index"
+  private lazy val wide = WideCorpus.docs(spark)
 
   test("wide vocabulary: a refresh touching all 64 term buckets == the one-shot build; compact keeps probes; one term prunes to one bucket") {
     val s = spark
     import s.implicits._
     val (base, batch) = (wide.filter(col("doc_id") < 300), wide.filter(col("doc_id") >= 300))
-    val oneShot = widePath("wide-one")
+    val oneShot = WideCorpus.path("bm25-one")
     Bm25Warehouse.materializeFrom(s, wide, oneShot)
-    val p = widePath("wide-ref")
+    val p = WideCorpus.path("bm25-ref")
     Bm25Warehouse.materializeFrom(s, base, p)
     Bm25Warehouse.refresh(s, batch, p)
-    val refreshBuckets = new java.io.File(s"$p/gen-1").listFiles()
-      .count(f => f.isDirectory && f.getName.startsWith("tb="))
+    val refreshBuckets = WideCorpus.bucketDirs(s"$p/gen-1", "tb")
     assert(refreshBuckets == 64, s"the refresh wrote $refreshBuckets of 64 term buckets")
 
     val rnd = new scala.util.Random(7L)
@@ -162,17 +147,10 @@ class Bm25WarehouseSpec extends GraftSpec {
     assert(state(p) == state(oneShot), "compact changed the index")
 
     val df = Bm25Warehouse.probe(s, p, Seq(0L -> "w17").toDF("query_id", "term"))
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.exists(_.toString.contains("index/gen-")) &&
-          f.schema.fieldNames.contains("tf") => f
-    }
-    assert(scans.nonEmpty, "no index FileSourceScanExec in plan")
-    val allParts = scans.map(_.relation.location.listFiles(Nil, Nil).length).sum
-    val pruned = scans.map(f =>
-      f.relation.location.listFiles(f.partitionFilters, f.dataFilters).length).sum
-    assert(allParts == 64 * scans.length, s"$allParts buckets at rest in ${scans.length} scans")
-    assert(pruned == scans.length, s"one term probed $pruned of $allParts buckets")
+    val (scans, allParts, pruned) = WideCorpus.listing(df, "index/gen-", "tf")
+    assert(scans > 0, "no index FileSourceScanExec in plan")
+    assert(allParts == 64 * scans, s"$allParts buckets at rest in $scans scans")
+    assert(pruned == scans, s"one term probed $pruned of $allParts buckets")
     assert(df.collect().nonEmpty)
   }
 

@@ -184,4 +184,45 @@ class LmWarehouseSpec extends GraftSpec {
     LmWarehouse.refresh(spark, planted.filter(col("doc_id") === 99), p)
     assert(stats(p) == stats(ref))
   }
+
+  test("wide vocabulary: a refresh touching all 64 term buckets == the one-shot build; retract == rebuild on survivors; compact keeps both; one term prunes to one bucket") {
+    val s = spark
+    import s.implicits._
+    val wide = WideCorpus.docs(s)
+    val slice = pmod(col("doc_id"), lit(10)) === 7
+    val oneShot = WideCorpus.path("lm-one")
+    LmWarehouse.materializeFrom(wide, oneShot)
+    val p = WideCorpus.path("lm")
+    LmWarehouse.materializeFrom(wide.filter(col("doc_id") < 300), p)
+    LmWarehouse.refresh(s, wide.filter(col("doc_id") >= 300), p)
+    val buckets = WideCorpus.bucketDirs(s"$p/gen-1", "tb")
+    assert(buckets == 64, s"the refresh wrote $buckets of 64 term buckets")
+
+    val probeDocs = WideCorpus.probeDocs(s)
+    def state(q: String) = {
+      val snap = sources.CommitLog.snapshot(s, q)
+      (LmWarehouse.probe(s, q, probeDocs).collect().map(_.toSeq).toSet,
+        snap.read(q).groupBy(col("term")).agg(sum(col("cnt")).as("cnt"))
+          .filter(col("cnt") =!= 0).collect().map(_.toSeq).toSet,
+        snap.read(s"$q.stats").head().toSeq)
+    }
+    val full = state(oneShot)
+    assert(state(p) == full, "refresh diverges from the one-shot build")
+
+    val rebuilt = WideCorpus.path("lm-survivors")
+    LmWarehouse.materializeFrom(wide.filter(!slice), rebuilt)
+    val want = state(rebuilt)
+    assert(want._3(1).asInstanceOf[Long] < full._3(1).asInstanceOf[Long],
+      "degenerate: the slice owns no term outright")
+    LmWarehouse.retract(s, wide.filter(slice), p)
+    assert(state(p) == want, "retract diverges from the rebuild on the survivors")
+    LmWarehouse.compact(s, p)
+    assert(state(p) == want, "compact changed probes, counts or stats")
+
+    val df = LmWarehouse.probe(s, p, Seq(0L -> "w17").toDF("doc_id", "text"))
+    val (scans, allParts, pruned) = WideCorpus.listing(df, "index/gen-", "cnt")
+    assert(scans > 0, "no index FileSourceScanExec in plan")
+    assert(allParts == 64 * scans, s"$allParts buckets at rest in $scans scans")
+    assert(pruned == scans, s"one term probed $pruned of $allParts buckets")
+  }
 }

@@ -4,13 +4,13 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BalanceWarehouse, JoinViewWarehouse, QuantileWarehouse, RichlistWarehouse}
+import graft.operators.{BalanceWarehouse, BigramLmWarehouse, JoinViewWarehouse, QuantileWarehouse, RichlistWarehouse}
 import graft.similarity.Bm25Warehouse
 import graft.sources.{CommitLog, Tables}
 
 /** The round-11 atomic-refresh contract, driven through the MEMBERS'
   * REAL VERBS (not protocol toys — CommitLogSpec owns those): for
-  * three differently-shaped warehouse members, a maintenance verb
+  * several differently-shaped warehouse members, a maintenance verb
   * killed between ANY two part writes (and in the widest window —
   * everything written, marker not yet landed) is INVISIBLE: probes
   * keep serving the pre-verb state bit-for-bit, and re-running the
@@ -29,7 +29,9 @@ import graft.sources.{CommitLog, Tables}
   *    skippable after a crash;
   *  - RichlistWarehouse — order statistic: top-K buffer + additive
   *    totals (2 writes per refresh; the dirty retract adds tombstone
-  *    + promotion refill in the same transaction).
+  *    + promotion refill in the same transaction);
+  *  - BigramLmWarehouse — two count parts + 1-row (nb, v) stats
+  *    (3 writes per refresh and per retract).
   */
 class WarehouseCommitSpec extends GraftSpec {
 
@@ -102,6 +104,48 @@ class WarehouseCommitSpec extends GraftSpec {
     assert(before != want, "degenerate: retraction changes nothing at this SF")
     // retract writes 3 parts: negative df deltas, tombstones, stats
     crashEveryWindow(3, () => Bm25Warehouse.retract(spark, removed, p),
+      probeOf(p), before, want)
+  }
+
+  test("bigram lm: a refresh killed in every window is invisible; resume == clean run") {
+    val docs = t.documents
+    val base = docs.filter(pmod(col("doc_id"), lit(10)) < 8)
+    val inc = docs.filter(pmod(col("doc_id"), lit(10)) >= 8)
+    def probeOf(p: String) = () => BigramLmWarehouse
+      .probeIncoming(spark, Dir, p).collect().map(_.toString).toSet
+
+    val clean = tmp("blm-clean")
+    BigramLmWarehouse.materializeFrom(base, clean)
+    val before = probeOf(clean)()
+    BigramLmWarehouse.refresh(spark, inc, clean)
+    val want = probeOf(clean)()
+    assert(before != want, "degenerate: refresh changed nothing")
+
+    val p = tmp("blm")
+    BigramLmWarehouse.materializeFrom(base, p)
+    // refresh writes 3 parts: c1 deltas, c2 deltas, stats
+    crashEveryWindow(3, () => BigramLmWarehouse.refresh(spark, inc, p),
+      probeOf(p), before, want)
+  }
+
+  test("bigram lm: a retract killed in every window is invisible; resume == rebuild-on-survivors") {
+    val docs = t.documents
+    val base = docs.filter(pmod(col("doc_id"), lit(10)) < 8)
+    val removed = docs.filter(pmod(col("doc_id"), lit(10)) === 7)
+    def probeOf(p: String) = () => BigramLmWarehouse
+      .probeIncoming(spark, Dir, p).collect().map(_.toString).toSet
+
+    val rebuilt = tmp("blmr-ref")
+    BigramLmWarehouse.materializeFrom(
+      docs.filter(pmod(col("doc_id"), lit(10)) < 7), rebuilt)
+    val want = probeOf(rebuilt)()
+
+    val p = tmp("blmr")
+    BigramLmWarehouse.materializeFrom(base, p)
+    val before = probeOf(p)()
+    assert(before != want, "degenerate: retraction changes nothing at this SF")
+    // retract writes 3 parts: negative c1 deltas, negative c2 deltas, stats
+    crashEveryWindow(3, () => BigramLmWarehouse.retract(spark, removed, p),
       probeOf(p), before, want)
   }
 
