@@ -24,6 +24,10 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", "1000")
       // Without native libhadoop the stock local file system forks a
       // chmod for every file and directory it creates; a warehouse
-      // commit creates dozens.  LocalFs sets the same modes in-process.
+      // commit creates dozens.  LocalFs sets the same modes in-process,
+      // for the FileSystem API and for the FileContext API that the
+      // streaming checkpoint files go through.
       .config("spark.hadoop.fs.file.impl", classOf[sources.LocalFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.LocalFs.Afs].getName)
 }

@@ -38,8 +38,8 @@ import graft.sources.{CommitLog, Tables, Tombstones}
   * The base/incoming split on the test tables is doc_id mod 10
   * (8:2) — deterministic, so the oracle mirrors it exactly.
   *
-  * RETRACTION (round 10 — the doc-keyed rung of the retraction
-  * ladder; fcd analogue: the collector's remove-vanished-rows step,
+  * RETRACTION (the doc-keyed rung of the retraction ladder; fcd
+  * analogue: the collector's remove-vanished-rows step,
   * reference: src/collector/gov/removeDeletedProposals.ts:22, and the
   * takedown/right-to-be-forgotten verb any corpus pipeline needs):
   * `retract` appends doc_ids to a TOMBSTONE set (O(removed), no
@@ -58,7 +58,7 @@ import graft.sources.{CommitLog, Tables, Tombstones}
 object MinHashWarehouse {
 
   private def docsPath(path: String): String = s"$path.docs"
-  private def tombPath(path: String): String = s"$path.tomb"
+  private val Tomb = Tombstones("doc_id")
 
   /** Historical side of the split: doc_id ≡ 0..7 (mod 10). */
   private[graft] def isBase = pmod(col("doc_id"), lit(10)) < 8
@@ -120,34 +120,27 @@ object MinHashWarehouse {
   }
 
   /** RETRACT — remove docs from the standing index: append their ids
-    * to the tombstone set.  O(removed) and append-only; the physical
+    * to the tombstone part.  O(removed) and append-only; the physical
     * rows disappear at the next `compact`, the LOGICAL removal is
-    * immediate (every probe anti-joins the tombstones). */
-  def retract(removedIds: DataFrame, path: String): Unit = {
-    val ids = removedIds.select(col("doc_id"))
-    CommitLog.transaction(ids.sparkSession, path)(_.append(ids, tombPath(path)))
-  }
+    * immediate (every probe drops tombstoned candidates). */
+  def retract(removedIds: DataFrame, path: String): Unit =
+    Tomb.retract(removedIds, path)
 
   /** Drop tombstoned candidates: one anti-join on the candidate PAIR
-    * set's base side — O(candidates), pruned far below index size
-    * (graft.sources.Tombstones — the shared doc-keyed-rung mechanics;
-    * the no-tomb common case keeps its exact old plan). */
+    * set's base side — O(candidates), pruned far below index size;
+    * with no tombstones the plan is unchanged. */
   private def dropTombstoned(snap: CommitLog.Snapshot, cand: DataFrame,
       path: String): DataFrame =
-    Tombstones.dropDf(cand, snap.readOpt(tombPath(path)), key = "base_id")
+    Tomb.live(snap, cand, path, rowKey = "base_id")
 
   /** COMPACT — physically remove tombstoned rows from `.docs` and the
-    * banded index, then clear the tombstone set — ALL as one CommitLog
-    * transaction (the shared purge verb; round 12 — the old form
-    * overwrote the two stores in place SEQUENTIALLY, so a crash
-    * between them lost one store and tore the other).  Probes
-    * bit-identical before/after (they already excluded those
-    * candidates); O(index), amortizing the retract verb's O(removed)
-    * appends; physical reclaim = CommitLog.vacuum at the retention
-    * cadence. */
+    * banded index, then clear the tombstone part, all in one CommitLog
+    * transaction (`Tombstones.compact`).  Probes are bit-identical
+    * before/after (they already excluded those candidates); O(index),
+    * amortizing the retract verb's O(removed) appends; physical
+    * reclaim = CommitLog.vacuum at the retention cadence. */
   def compact(spark: SparkSession, path: String): Unit =
-    CommitLog.purgeTombstones(spark, path, tombPath(path), key = "doc_id",
-      parts = Seq((docsPath(path), Nil), (path, Seq("band"))))
+    Tomb.compact(spark, path, Seq((docsPath(path), Nil), (path, Seq("band"))))
 
   /** The retraction build for the registered `d_dedup_retracted`
     * query: index the base split, then retract every base doc with
@@ -247,13 +240,11 @@ object MinHashWarehouse {
   // ------------------------------------------------------------------
   // AS-OF READS — the DOC-KEYED rung's bitemporal case (a retraction
   // is an appended tombstone, so time travel must time-filter THREE
-  // stores: index rows, shingle sets, AND tombstones).  Since round 12
-  // this is NOT a bespoke lane: every maintenance verb above is
-  // already one CommitLog transaction, so "the corpus as of
-  // generation g" is just the committed fold with an as-of cut —
-  // the protocol's free time-travel verb (the BalanceWarehouse
-  // contract), replacing the round-10 `gen=N` directory-partition
-  // machinery this member carried.  A takedown is itself a
+  // stores: index rows, shingle sets, AND tombstones).  Every
+  // maintenance verb above is one CommitLog transaction, so "the
+  // corpus as of generation g" is the committed fold with an as-of
+  // cut — the protocol's time-travel verb (the BalanceWarehouse
+  // contract).  A takedown is itself a
   // generation-stamped transaction: asOf(g < takedown) re-serves
   // matches against the later-removed docs (the reproducibility
   // contract — "which corpus did this training run dedup against"),
@@ -272,8 +263,7 @@ object MinHashWarehouse {
     probeCore(batch,
       snap.read(path, asOfGen = g.toLong),
       snap.read(docsPath(path), asOfGen = g.toLong),
-      Tombstones.dropDf(_, snap.readOpt(tombPath(path), asOfGen = g.toLong),
-        key = "base_id"))
+      Tomb.live(snap, _, path, rowKey = "base_id", asOfGen = g.toLong))
   }
 
   /** The three-generation build: gen 0 = base ingest (doc_id mod 10

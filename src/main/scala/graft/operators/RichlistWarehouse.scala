@@ -56,7 +56,7 @@ object RichlistWarehouse {
 
   private def bufPath(path: String) = path + ".buf"
   private def totPath(path: String) = path + ".tot"
-  private def tombPath(path: String) = path + ".tomb"
+  private val Tomb = Tombstones("custkey")
 
   /** Deterministic per-denom order — ties impossible (custkey unique). */
   private def rankOrder = Window.partitionBy(col("denom"))
@@ -107,10 +107,9 @@ object RichlistWarehouse {
     * self-healing normalization). */
   private def liveBuffer(snap: CommitLog.Snapshot, path: String): DataFrame = {
     val buf = snap.read(bufPath(path)).distinct()
-    val live = Tombstones.dropDf(buf, snap.readOpt(tombPath(path)),
-      key = "custkey", tombCol = "custkey")
     // the equi-join key moves to the front — pin the buffer schema
-    live.select(col("denom"), col("custkey"), col("name"), col("bal"))
+    Tomb.live(snap, buf, path)
+      .select(col("denom"), col("custkey"), col("name"), col("bal"))
   }
 
   /** RETRACT — remove accounts: exact total subtraction + key
@@ -132,19 +131,14 @@ object RichlistWarehouse {
     // it spans three parts and a promotion refill
     CommitLog.transaction(spark, path) { t =>
       t.append(Additive.negate(totDeltas(rem), Seq("denom")), totPath(path))
-      t.append(rem.select(col("custkey")), tombPath(path))
+      Tomb.append(t, rem, path)
       if (dirty.nonEmpty) {
         // pruned refill: dirty denoms only, survivors only (cumulative
-        // tombstones INCLUDING this txn's — folded in from the frame,
+        // tombstones INCLUDING this txn's — dropped from the frame,
         // since the snapshot predates the tombstone append)
-        val allTombs = snap.readOpt(tombPath(path)) match {
-          case Some(t0) => Some(t0.select(col("custkey"))
-            .unionByName(rem.select(col("custkey"))))
-          case None => Some(rem.select(col("custkey")))
-        }
-        val survivors = Tombstones.dropDf(
-          upstream.filter(col("denom").isin(dirty.toIndexedSeq: _*)),
-          allTombs, key = "custkey", tombCol = "custkey")
+        val survivors = Tomb.live(snap,
+            upstream.filter(col("denom").isin(dirty.toIndexedSeq: _*)), path)
+          .join(rem.select(col("custkey")), Seq("custkey"), "left_anti")
         t.append(topkOf(survivors), bufPath(path))
       }
     }
@@ -158,9 +152,9 @@ object RichlistWarehouse {
       t.replace(topkOf(liveBuffer(snap, path)), bufPath(path))
       t.replace(Additive.merge(snap.read(totPath(path)), Seq("denom"), "n"),
         totPath(path))
-      if (snap.readOpt(tombPath(path)).nonEmpty) t.clear(tombPath(path))
-      // replay protection survives compaction (StreamTwin)
-      graft.sources.StreamTwin.compactIds(snap, t, path)
+      // the live buffer already dropped the tombstoned rows: clear the
+      // part and fold the streaming twin's id part
+      Tomb.purge(t, snap, path, Nil)
     }
   }
 

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.MinHashWarehouse.isBase
 import graft.functions.Exact.{roundx, sumx}
 import graft.functions.TextFunctions.words
-import graft.sources.{CommitLog, CountPart, Tables}
+import graft.sources.{CommitLog, CountPart, Tables, Tombstones}
 
 /** The BM25 posting table AT REST — the lexical index the warehouse
   * family was missing (MinHashWarehouse: J-dedup; LshWarehouse:
@@ -69,7 +69,7 @@ object Bm25Warehouse {
   private val Df = CountPart(Seq("term"), "dfd", "tb", ".df")
 
   private def statsPath(path: String): String = s"$path.stats"
-  private def tombPath(path: String): String = s"$path.tomb"
+  private val Tomb = Tombstones("doc_id")
 
   private def withBucket(postings: DataFrame): DataFrame =
     postings.withColumn("tb", CountPart.bucket(col("term")))
@@ -183,7 +183,7 @@ object Bm25Warehouse {
     val snap = CommitLog.snapshot(spark, path)
     CommitLog.transaction(spark, path) { t =>
       Df.append(t, dfd, path, -1L)
-      t.append(removed.select(col("doc_id")), tombPath(path))
+      Tomb.append(t, removed, path)
       t.replace(snap.read(statsPath(path))
         .select((col("n") - lit(n)).as("n"), (col("sl") - lit(sl)).as("sl")),
         statsPath(path))
@@ -202,25 +202,16 @@ object Bm25Warehouse {
     * The posting side needs no logical compaction — posting rows are
     * per-(doc, term) facts that never supersede each other — except
     * for tombstoned docs, which it physically removes before clearing
-    * the tombstones.  Everything lands as ONE transaction that writes
+    * the tombstones (`Tombstones.purge`, which also folds the streaming
+    * twin's id part).  Everything lands as ONE transaction that writes
     * new generations, so a probe pinned before it keeps reading; the
     * dead generations are reclaimed by CommitLog.vacuum on the
     * caller's retention cadence. */
   def compact(spark: SparkSession, path: String): Unit = {
     val snap = CommitLog.snapshot(spark, path)
-    val tomb = snap.readOpt(tombPath(path))
-      .map(_.select(col("doc_id")).distinct().localCheckpoint())
     CommitLog.transaction(spark, path) { t =>
       Df.compact(t, snap, path)
-      tomb.foreach { keys =>
-        t.replace(snap.read(path).join(keys, Seq("doc_id"), "left_anti"),
-          path, Seq("tb"))
-        t.clear(tombPath(path))
-      }
-      // the streaming twin's id part folds to one generation here —
-      // ids stay individually queryable (the exactly-once contains
-      // check), only the per-batch generation count resets
-      graft.sources.StreamTwin.compactIds(snap, t, path)
+      Tomb.purge(t, snap, path, Seq(path -> Seq("tb")))
     }
   }
 
@@ -246,10 +237,9 @@ object Bm25Warehouse {
     // then attach df to the already-restricted hits (the delta agg is
     // vocabulary-bounded and broadcasts; df-before-queries doubled the
     // probe by dragging the full posting slice through the df join)
-    val hits = graft.sources.Tombstones.dropDf(
+    val hits = Tomb.live(snap,
       snap.read(path).filter(CountPart.inBuckets(col("tb"), buckets))
-        .join(q, Seq("term")),
-      snap.readOpt(tombPath(path)), key = "doc_id")
+        .join(q, Seq("term")), path)
     // the (n, sl) stats scalars ride the plan as a broadcast 1-row
     // relation; len/(sl/n) divides by the same IEEE double as
     // Bm25.bm25's avgdl

@@ -27,7 +27,7 @@ object IvfWarehouse {
     * specs. */
   def materializeFrom(e: DataFrame, path: String, k: Int = 16): Unit = {
     val (centroids, lists) = Knn.coarseQuantizer(e, k)
-    // lists + centroids land as ONE transaction (r11): posting rows
+    // lists + centroids land as ONE transaction: posting rows
     // can never be visible without the codebook that assigned them
     CommitLog.transaction(e.sparkSession, path) { t =>
       t.replace(lists, path, Seq("cid"))
@@ -49,8 +49,7 @@ object IvfWarehouse {
 
   /** The refresh transaction body, optionally committing a STREAM
     * BATCH ID atomically with the posting rows — the exactly-once
-    * rung (StreamTwin; round 14 extends the twin matrix to the ANN
-    * family).  Frozen-quantizer assignment is per-row, so any
+    * rung (StreamTwin).  Frozen-quantizer assignment is per-row, so any
     * micro-batch split folds to the same posting lists — refresh is
     * batching-invariant by construction. */
   private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
@@ -77,13 +76,11 @@ object IvfWarehouse {
   }
 
   private def centroidsPath(path: String): String = s"$path.centroids"
-  private def tombPath(path: String): String = s"$path.tomb"
+  private val Tomb = Tombstones("vec_id")
 
-  /** RETRACT — takedown of vectors from the IVF posting lists
-    * (round 11, VERDICT-r10 ask #6: the ANN delete verb extended from
-    * the LSH family to the coarse-quantized one).  Same tombstone
-    * rung as LshWarehouse.retract: every posting row depends only on
-    * its own vector — the FROZEN coarse codebook is corpus-level
+  /** RETRACT — takedown of vectors from the IVF posting lists.  Same
+    * tombstone rung as LshWarehouse.retract: every posting row
+    * depends only on its own vector — the FROZEN coarse codebook is corpus-level
     * state, but deleting a member does not change it (FAISS's
     * remove_ids contract: ids leave the inverted lists; the quantizer
     * re-trains on its own recluster schedule) — so pruning IS the
@@ -94,30 +91,22 @@ object IvfWarehouse {
     * retract == probe over lists assigned from the survivors with the
     * same frozen centroids, and bit-invariance across compact. */
   def retract(removedIds: DataFrame, path: String): Unit =
-    CommitLog.transaction(removedIds.sparkSession, path)(
-      _.append(removedIds.select(col("vec_id")), tombPath(path)))
+    Tomb.retract(removedIds, path)
 
   /** COMPACT — physically purge tombstoned vectors from the posting
-    * lists and clear the tombstones in one transaction (the shared
-    * CommitLog.purgeTombstones); probes bit-identical; vacuum is the
-    * caller's retention verb. */
+    * lists, clear the tombstones and fold the streaming twin's id
+    * part in one transaction (`Tombstones.compact`); probes
+    * bit-identical; vacuum is the caller's retention verb. */
   def compact(spark: SparkSession, path: String): Unit =
-    CommitLog.purgeTombstones(spark, path, tombPath(path), "vec_id",
-      Seq(path -> Seq("cid")), foldStreamIds = true)
-
-  /** Drop tombstoned vectors from a candidate set — O(candidates);
-    * the no-tomb path keeps its exact old plan. */
-  private def live(snap: CommitLog.Snapshot, cands: DataFrame, path: String): DataFrame =
-    Tombstones.dropDf(cands, snap.readOpt(tombPath(path)),
-      key = "vec_id", tombCol = "vec_id")
+    Tomb.compact(spark, path, Seq(path -> Seq("cid")))
 
   /** The SURVIVING vectors at rest (vec_id, v) — the posting lists
     * minus outstanding tombstones: the population a probe can serve,
     * which is exactly the population the at-rest recall monitor must
     * grade ground truth over (RecallMonitor). */
-  private[similarity] def standingVectors(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def standingVectors(spark: SparkSession, path: String): DataFrame = {
     val snap = CommitLog.snapshot(spark, path)
-    live(snap, snap.read(path), path).select(col("vec_id"), col("v"))
+    Tomb.live(snap, snap.read(path), path).select(col("vec_id"), col("v"))
   }
 
   /** The frozen coarse codebook at rest — shared with the SemDeDup
@@ -141,7 +130,7 @@ object IvfWarehouse {
         (-dot(col("cv"), qvCol) / norm(col("cv"))).as("dist"))
       .orderBy(col("dist"), col("cid")).limit(nprobe)
       .collect().map(_.getAs[Int]("cid"))
-    live(snap, snap.read(path)
+    Tomb.live(snap, snap.read(path)
       .filter(col("cid").isin(probeCids.toIndexedSeq.map(Integer.valueOf): _*)), path)
       .withColumn("cos", roundx(dot(col("v"), qvCol) / (norm(col("v")) * norm(qvCol)), 6))
       .orderBy(col("cos").desc, col("vec_id"))
@@ -167,9 +156,9 @@ object IvfWarehouse {
     * (IvfWarehouseSpec asserts cost non-increase, row preservation,
     * and that probes still prune after the rewrite.)
     *
-    * DEMOTED to a MECHANISM, not a deployment verb (VERDICT r13):
-    * cost non-increase is mathematical, but assignment cost and
-    * serving RECALL are different objectives — the drift-repair
+    * A MECHANISM, not a deployment verb: cost non-increase is
+    * mathematical, but assignment cost and serving RECALL are
+    * different objectives — the drift-repair
     * exhibit measured this verb improving cost while regressing
     * recall 0.8222 → 0.7333 on the drifted corpus.  An operator
     * repairing a production index must use `reclusterIfBetter`, which
@@ -183,8 +172,8 @@ object IvfWarehouse {
       t.replace(fin.select(col("vec_id"), col("v"), col("cid")), path, Seq("cid"))
       t.replace(cents, centroidsPath(path))
     }
-    // physical reclaim stays the caller's separate vacuum (review r11:
-    // inline vacuum tears pinned concurrent probe snapshots)
+    // physical reclaim stays the caller's separate vacuum (an inline
+    // vacuum would tear pinned concurrent probe snapshots)
     (costBefore, costAfter)
   }
 
@@ -246,9 +235,9 @@ object IvfWarehouse {
 
   private def stagingPath(path: String): String = s"$path.staged"
 
-  /** MONITOR-GATED recluster — blue/green drift repair (VERDICT-r13
-    * ask #1).  `recluster` above is the UNGATED form: it optimizes
-    * ASSIGNMENT COST, and the engine's own drift-repair exhibit
+  /** MONITOR-GATED recluster — blue/green drift repair.  `recluster`
+    * above is the UNGATED form: it optimizes ASSIGNMENT COST, and the
+    * engine's own drift-repair exhibit
     * measured a re-fit improving cost while REGRESSING serving recall
     * (0.8222 → 0.7333, SURVEY §5q) — cost and recall are different
     * objectives, so a production deployment must never swap a codebook
@@ -279,7 +268,7 @@ object IvfWarehouse {
     * swap-on-improvement (the staged codebook serves, recall
     * re-grades at the staged value).
     *
-    * QUERY SLICE (VERDICT-r14 ask #4): `seed`/`oneIn` thread the
+    * QUERY SLICE: `seed`/`oneIn` thread the
     * monitor's seeded hash-mod sampling (RecallMonitor.sliceOf) into
     * the SHIP DECISION itself — the default `None` keeps the
     * deterministic `vec_id < nQueries` prefix (what the registered row
@@ -302,7 +291,7 @@ object IvfWarehouse {
         seed, oneIn).head()
       (r.getAs[Long]("truth_n"), r.getAs[Double]("recall"))
     }
-    // grade + swap under try/finally (ADVICE r14 #4): a grade that
+    // grade + swap under try/finally: a grade that
     // throws — including the truth-equality require — must not leave
     // the staged codebook committed under <path>.staged, where it
     // would shadow nothing but never be reclaimed by the serving
@@ -395,7 +384,7 @@ object IvfWarehouse {
       .collect().map(_.getAs[Int]("cid"))
     val byQ = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("cos").desc, col("vec_id"))
-    live(snap, snap.read(path)
+    Tomb.live(snap, snap.read(path)
       .filter(col("cid").isin(unionCids.toIndexedSeq.map(Integer.valueOf): _*)), path)
       .join(broadcast(assign), Seq("cid"))
       .withColumn("cos", roundx(dot(col("v"), col("qv")) / (norm(col("v")) * norm(col("qv"))), 6))

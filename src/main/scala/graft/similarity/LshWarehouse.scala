@@ -31,6 +31,7 @@ import graft.sources.{CommitLog, Tables, Tombstones}
 object LshWarehouse {
 
   private def vectorsPath(path: String): String = s"$path.vectors"
+  private val Tomb = Tombstones("vec_id")
 
   /** Ingest: signature + norm once per vector (the per-row math of
     * cosinePairsFrom), primary store + banded narrow index at rest. */
@@ -47,9 +48,9 @@ object LshWarehouse {
   def materializeFrom(e0: DataFrame, path: String,
       bitsPerBand: Int = 2, bands: Int = 32, overwrite: Boolean = true): Unit = {
     val (e, idx) = encodeFrames(e0, bitsPerBand, bands)
-    // primary store + index land as ONE transaction (round 11 — the
-    // CommitLog retrofit): a crash between the two writes can no
-    // longer leave candidates whose exact-verify rows are missing
+    // primary store + index land as ONE transaction: a crash between
+    // the two writes cannot leave candidates whose exact-verify rows
+    // are missing
     CommitLog.transaction(e.sparkSession, path) { t =>
       if (overwrite) { t.replace(e, vectorsPath(path)); t.replace(idx, path, Seq("bb")) }
       else { t.append(e, vectorsPath(path)); t.append(idx, path, Seq("bb")) }
@@ -67,7 +68,7 @@ object LshWarehouse {
   /** The ONE definition of the layout's two frames — (primary store
     * row with nrm+sig, banded narrow index) — shared by batch ingest
     * and the streaming refreshTxn so the two paths can never build
-    * incompatible indexes under one path (review r14). */
+    * incompatible indexes under one path. */
   private def encodeFrames(e0: DataFrame, bitsPerBand: Int,
       bands: Int): (DataFrame, DataFrame) = {
     val e = e0
@@ -82,8 +83,7 @@ object LshWarehouse {
 
   /** The refresh transaction body, optionally committing a STREAM
     * BATCH ID atomically with both stores — the exactly-once rung
-    * (StreamTwin; round 14 extends the twin matrix to the ANN
-    * family).  Hyperplane signatures are per-row (no corpus state),
+    * (StreamTwin).  Hyperplane signatures are per-row (no corpus state),
     * so any micro-batch split folds to the same banded index. */
   private[graft] def refreshTxn(batch: DataFrame, path: String,
       batchId: Option[Long], bitsPerBand: Int = 2, bands: Int = 32): Boolean =
@@ -97,20 +97,16 @@ object LshWarehouse {
     * (vec_id, embedding) stream folds per micro-batch into primary
     * store + banded index in ONE transaction that also commits the
     * engine batch id (StreamTwin).  `bitsPerBand`/`bands` MUST match
-    * the geometry the index was materialized with (ADVICE r14 #2: the
-    * twin used to hardcode the defaults, so a stream pointed at an
-    * index with non-default banding would silently append
-    * incompatible signatures and band keys under the same path) —
-    * the parameters ride through to the same encodeFrames definition
-    * batch ingest uses. */
+    * the geometry the index was materialized with (a stream with
+    * other banding would append incompatible signatures and band keys
+    * under the same path) — the parameters ride through to the same
+    * encodeFrames definition batch ingest uses. */
   def streamingRefresh(raw: DataFrame, path: String,
       checkpointEvery: Int = 32, bitsPerBand: Int = 2,
       bands: Int = 32): org.apache.spark.sql.streaming.StreamingQuery =
     graft.sources.StreamTwin.exactlyOnce(raw, path, checkpointEvery)((s, b, id) =>
       { refreshTxn(b.select(col("vec_id"), toDouble(col("embedding")).as("v")),
           path, batchId = Some(id), bitsPerBand, bands); () })
-
-  private def tombPath(path: String): String = s"$path.tomb"
 
   /** RETRACT — takedown of vectors from the standing ANN index: the
     * doc-keyed rung's tombstone verb extended to the similarity
@@ -125,26 +121,22 @@ object LshWarehouse {
     * reads the store through the same tombstones), which is what
     * makes probes bit-invariant under compact's physical removal. */
   def retract(removedIds: DataFrame, path: String): Unit =
-    CommitLog.transaction(removedIds.sparkSession, path)(
-      _.append(removedIds.select(col("vec_id")), tombPath(path)))
+    Tomb.retract(removedIds, path)
 
-  /** COMPACT — physically remove tombstoned rows from both stores and
-    * clear the tombstones in ONE transaction (the shared
-    * CommitLog.purgeTombstones); probes bit-identical before/after;
-    * CommitLog.vacuum reclaims dead generations on the caller's
-    * retention cadence. */
+  /** COMPACT — physically remove tombstoned rows from both stores,
+    * clear the tombstones and fold the streaming twin's id part in
+    * one transaction (`Tombstones.compact`); probes bit-identical
+    * before/after; CommitLog.vacuum reclaims dead generations on the
+    * caller's retention cadence. */
   def compact(spark: SparkSession, path: String): Unit =
-    CommitLog.purgeTombstones(spark, path, tombPath(path), "vec_id",
-      Seq(vectorsPath(path) -> Nil, path -> Seq("bb")), foldStreamIds = true)
+    Tomb.compact(spark, path, Seq(vectorsPath(path) -> Nil, path -> Seq("bb")))
 
   /** The SURVIVING vectors at rest (vec_id, v, nrm) — the primary
     * store minus outstanding tombstones: the population the at-rest
     * recall monitor grades ground truth over (RecallMonitor). */
-  private[similarity] def standingVectors(spark: SparkSession, path: String): DataFrame = {
+  private[graft] def standingVectors(spark: SparkSession, path: String): DataFrame = {
     val snap = CommitLog.snapshot(spark, path)
-    Tombstones.dropDf(snap.read(vectorsPath(path)),
-      snap.readOpt(tombPath(path)).map(_.select(col("vec_id")).distinct()),
-      key = "vec_id", tombCol = "vec_id")
+    Tomb.live(snap, snap.read(vectorsPath(path)), path)
       .select(col("vec_id"), col("v"), col("nrm"))
   }
 
@@ -160,17 +152,14 @@ object LshWarehouse {
       querySlice: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     // the query batch: the historical id prefix by default, or an
     // explicit predicate over the stored ids (the recall monitor's
-    // seeded hash-mod sample, VERDICT-r13 ask #7)
+    // seeded hash-mod sample)
     val isQuery = querySlice.getOrElse(col("vec_id") < nQueries)
     // ONE snapshot pins index + vectors + tombstones together.  The
     // LIVE primary store: tombstoned vectors are gone on both the
     // query and the answer side (see retract's Scaladoc) — this is
     // what keeps probes bit-invariant across compact's physical prune
     val snap = CommitLog.snapshot(spark, path)
-    val tomb = snap.readOpt(tombPath(path))
-      .map(_.select(col("vec_id")).distinct().localCheckpoint())
-    val vecs = Tombstones.dropDf(snap.read(vectorsPath(path)), tomb,
-      key = "vec_id", tombCol = "vec_id")
+    val vecs = Tomb.live(snap, snap.read(vectorsPath(path)), path)
     val probes = vecs.filter(isQuery)
       .select(col("vec_id").as("query_id"), col("sig").as("qsig"),
         posexplode(bandKeys(col("sig"), bitsPerBand, bands)).as(Seq("band", "bkey")))
@@ -182,14 +171,14 @@ object LshWarehouse {
 
     val firstMatchingBand = graft.functions.FirstMatchingBand(
       col("sig"), col("qsig"), bitsPerBand, bands)
-    val cand = Tombstones.dropDf(
+    val cand = Tomb.live(snap,
       snap.read(path)
         .filter(col("bb").isin(probeBbs.toIndexedSeq.map(java.lang.Long.valueOf): _*))
         .join(broadcast(probes), Seq("bb"))
         .filter(col("vec_id") =!= col("query_id") &&
           col("band").cast("long") === firstMatchingBand)
         .select(col("query_id"), col("vec_id")),
-      tomb, key = "vec_id", tombCol = "vec_id")
+      path)
     cand
       .join(broadcast(vecs.filter(isQuery)
         .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qnrm"))),

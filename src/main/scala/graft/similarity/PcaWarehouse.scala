@@ -42,8 +42,7 @@ object PcaWarehouse {
     materializeFrom(Tables(spark, dir).embeddings.filter(isBaseVec), path)
 
   /** Frame-level ingest — also the refresh-equivalence spec's one-shot
-    * reference builder.  One CommitLog transaction (round 12 — the
-    * sketch lane joins the shared protocol, VERDICT-r11 ask #1). */
+    * reference builder.  One CommitLog transaction. */
   def materializeFrom(emb: DataFrame, path: String): Unit = {
     val m = Pca.moments(emb)
     CommitLog.transaction(m.sparkSession, path)(_.replace(m, path))
@@ -60,13 +59,13 @@ object PcaWarehouse {
 
   /** The refresh transaction body, optionally committing a STREAM
     * BATCH ID atomically with the moment deltas — the exactly-once
-    * rung (StreamTwin; round 13 rolls it across the twin matrix). */
+    * rung (StreamTwin). */
   private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
       path: String, batchId: Option[Long]): Boolean =
     graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId)(
       _.append(Pca.moments(batch), path))
 
-  /** RETRACT — the delete verb on the bit-equal rung (round 10; the
+  /** RETRACT — the delete verb on the bit-equal rung (the
     * BalanceWarehouse contract on the moment statistic): append the
     * removed vectors' moments NEGATED.  Moments are DECIMAL-exact
     * sums of per-vector terms, so subtraction is total and exact and
@@ -157,11 +156,9 @@ object PcaWarehouse {
   /** Train the projector ONCE from the moments index at rest and
     * store it beside the projections.
     *
-    * DEMOTED to a MECHANISM, not a maintenance verb (round 15 — the
-    * recluster precedent, VERDICT-r14 ask #2): this commits whatever
-    * projector the current moments produce, UNGATED, and the engine
-    * has now proved twice (IVF recluster r13/r14, tokenizer retrain
-    * r14) that a re-fit optimizing its TRAINING objective (here:
+    * A MECHANISM, not a maintenance verb (the recluster precedent):
+    * this commits whatever projector the current moments produce,
+    * UNGATED, and a re-fit optimizing its TRAINING objective (here:
     * captured variance) can regress the SERVING objective (top-k
     * recall through the projected shortlist).  Initial ingest uses
     * it; an operator repairing a drifted production projector must
@@ -172,7 +169,7 @@ object PcaWarehouse {
     CommitLog.transaction(spark, path)(_.replace(
       compsDf(spark, candidateProjector(spark, path)), compPath(path)))
 
-  /** ONE definition of the components-table layout (review r15): the
+  /** ONE definition of the components-table layout: the
     * (r, dim, w) flattening the standing reader (`projector`) parses —
     * shared by the ungated train and the gated reproject's staging so
     * the two write sites cannot drift. */
@@ -230,13 +227,11 @@ object PcaWarehouse {
     import graft.functions.Exact.roundx
     import graft.functions.VectorFunctions._
     val snap = CommitLog.snapshot(spark, path)
-    // the LIVE projection store (review r15): outstanding ANN
-    // tombstones hide a taken-down vector from the shortlist AND from
-    // the stored-query side — the rangeProbe convention, and what
-    // keeps this verb bit-invariant across compactAnn's physical prune
-    val proj = Tombstones.dropDf(snap.read(projPath(path)),
-      snap.readOpt(annTombPath(path)).map(_.select(col("vec_id")).distinct()),
-      key = "vec_id", tombCol = "vec_id")
+    // the LIVE projection store: outstanding ANN tombstones hide a
+    // taken-down vector from the shortlist AND from the stored-query
+    // side — the rangeProbe convention, and what keeps this verb
+    // bit-invariant across compactAnn's physical prune
+    val proj = AnnTomb.live(snap, snap.read(projPath(path)), path)
     val qp = proj.filter(col("vec_id") === 0).select(col("p").as("qp"))
     val short = proj.filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(qp))
@@ -257,13 +252,12 @@ object PcaWarehouse {
       .select(col("vec_id"), col("cos").as("cosine"))
   }
 
-  private def annTombPath(path: String) = s"$path.proj.tomb"
+  private val AnnTomb = Tombstones("vec_id", ".proj.tomb")
   private def stagingPath(path: String) = s"$path.staged"
 
   /** RETRACT on the ANN leg — takedown of vectors from the projection
-    * table (round 15: the lane joins the maintained-index discipline).
-    * The Ivf/Lsh/Pq tombstone rung verbatim: a projection row depends
-    * only on its own vector — the FROZEN projector is corpus-level
+    * table.  The Ivf/Lsh/Pq tombstone rung verbatim: a projection
+    * row depends only on its own vector — the FROZEN projector is corpus-level
     * state a member deletion does not change — so pruning IS the
     * rebuild-on-survivors-under-frozen-projector.  O(removed) append;
     * probes drop tombstoned candidates on the candidate set;
@@ -271,24 +265,21 @@ object PcaWarehouse {
     * existing `retract` (exact negated moments) — a full takedown
     * calls both, as the monitor build does. */
   def retractAnn(removedIds: DataFrame, path: String): Unit =
-    CommitLog.transaction(removedIds.sparkSession, path)(
-      _.append(removedIds.select(col("vec_id")), annTombPath(path)))
+    AnnTomb.retract(removedIds, path)
 
-  /** COMPACT the ANN leg — purge tombstoned projection rows + clear
-    * the tombstones in one transaction (the shared
-    * CommitLog.purgeTombstones); probes bit-identical; vacuum is the
-    * caller's retention verb. */
+  /** COMPACT the ANN leg — purge tombstoned projection rows, clear
+    * the tombstones and fold the streaming twin's id part in one
+    * transaction (`Tombstones.compact`); probes bit-identical; vacuum
+    * is the caller's retention verb. */
   def compactAnn(spark: SparkSession, path: String): Unit =
-    CommitLog.purgeTombstones(spark, path, annTombPath(path), "vec_id",
-      Seq(projPath(path) -> Nil), foldStreamIds = true)
+    AnnTomb.compact(spark, path, Seq(projPath(path) -> Nil))
 
   /** The SURVIVING projection ids at rest — the population the ANN
     * serving probe can answer from, which is exactly what the at-rest
     * recall monitor must grade truth over (RecallMonitor.pcaRow). */
   private[graft] def standingProjIds(spark: SparkSession, path: String): DataFrame = {
     val snap = CommitLog.snapshot(spark, path)
-    Tombstones.dropDf(snap.read(projPath(path)).select(col("vec_id")).distinct(),
-      snap.readOpt(annTombPath(path)), key = "vec_id", tombCol = "vec_id")
+    AnnTomb.live(snap, snap.read(projPath(path)).select(col("vec_id")).distinct(), path)
   }
 
   /** BATCHED two-stage serving probe — `annProbe`'s shape under load
@@ -300,7 +291,7 @@ object PcaWarehouse {
     * per-query `Shortlist` via the rank window Spark rewrites to
     * WindowGroupLimit partial heaps; stage 2 fetches JUST the
     * shortlists' vectors from the primary store by a FORCED-broadcast
-    * id-semijoin (the r15 PQ discipline — |Q|·Shortlist rows by
+    * id-semijoin (the PQ discipline — |Q|·Shortlist rows by
     * construction, but the planner cannot know that) and re-ranks on
     * the exact rounded cosine with the vec_id tiebreak — the
     * knnBatchOver ranking key, bit for bit.  Tombstoned vectors are
@@ -312,10 +303,7 @@ object PcaWarehouse {
     import graft.functions.Exact.roundx
     import graft.functions.VectorFunctions._
     val snap = CommitLog.snapshot(spark, path)
-    val tomb = snap.readOpt(annTombPath(path))
-      .map(_.select(col("vec_id")).distinct())
-    val proj = Tombstones.dropDf(snap.read(projPath(path)), tomb,
-      key = "vec_id", tombCol = "vec_id")
+    val proj = AnnTomb.live(snap, snap.read(projPath(path)), path)
     val qp = proj.join(broadcast(queries.select(col("query_id"))),
         proj("vec_id") === col("query_id"))
       .select(col("query_id"), col("p").as("qp"))
@@ -345,12 +333,10 @@ object PcaWarehouse {
   final case class GateReport(truthN: Long, recallStanding: Double,
       recallStaged: Double, swapped: Boolean)
 
-  /** MONITOR-GATED REPROJECT — blue/green projector repair (VERDICT-
-    * r14 ask #2: the PCA lane was the one trained artifact outside
-    * the monitor/gate discipline, with an UNGATED trainProjector as
-    * its only repair — the exact training-objective ≠ serving-
-    * objective trap the engine measured twice).  The
-    * recluster/requantize rung on the projection index:
+  /** MONITOR-GATED REPROJECT — blue/green projector repair (an
+    * UNGATED trainProjector would fall into the training-objective ≠
+    * serving-objective trap).  The recluster/requantize rung on the
+    * projection index:
     *
     *  1. compact the ANN leg, then derive the CANDIDATE projector from
     *     the CURRENT moments index (KB-scale driver eigensolve — the
@@ -420,9 +406,8 @@ object PcaWarehouse {
       refreshAnn(spark, Tables(spark, dir).embeddings.filter(!isBaseVec), p)
     }
 
-  /** The ANN LANE's online twin at the exactly-once rung (round 15
-    * second arc: the last maintained index joins the twin matrix) —
-    * each arriving (vec_id, embedding) micro-batch folds its moment
+  /** The ANN LANE's online twin at the exactly-once rung — each
+    * arriving (vec_id, embedding) micro-batch folds its moment
     * deltas AND its frozen-projector projections in ONE transaction
     * that also commits the engine batch id: the global statistic and
     * the serving index can never diverge across a crash, and a
@@ -443,8 +428,8 @@ object PcaWarehouse {
   private[graft] def refreshAnnTxn(spark: SparkSession, batch: DataFrame,
       path: String, batchId: Option[Long]): Boolean =
     // the projector read (snapshot pin + R×64 collect) lives INSIDE
-    // the body: a redelivered committed batch must skip for free
-    // (review r15), and the body only runs when the fold is real
+    // the body: a redelivered committed batch must skip for free,
+    // and the body only runs when the fold is real
     graft.sources.StreamTwin.refreshTxnWith(spark, path, batchId) { t =>
       t.append(Pca.moments(batch), path)
       t.append(projectWith(batch, projector(spark, path)), projPath(path))
@@ -458,7 +443,7 @@ object PcaWarehouse {
     * a MemoryStream in two batches and asserts it), so there is no
     * cross-batch state, no watermark, no ordering requirement — the
     * Bm25/Lm streamingProbe stance applied to the WRITE side.  At the
-    * EXACTLY-ONCE rung since round 13: the moment deltas commit
+    * EXACTLY-ONCE rung: the moment deltas commit
     * atomically with the engine batch id (StreamTwin), so a
     * redelivered committed batch folds NOTHING. */
   def streamingRefresh(vectors: DataFrame, path: String,

@@ -42,7 +42,7 @@ object PqWarehouse {
       path: String, k: Int = 16): Unit = {
     val (cents, lists) = Knn.coarseQuantizer(e, k)
     val (codebook, codes) = Pq.encode(e)
-    // codes + codebook + centroids land as ONE transaction (r11): a
+    // codes + codebook + centroids land as ONE transaction: a
     // crash can never leave codes without the quantizers that decode
     // them, and probes pin all three parts in one snapshot
     CommitLog.transaction(spark, path) { t =>
@@ -69,8 +69,7 @@ object PqWarehouse {
 
   /** The refresh transaction body, optionally committing a STREAM
     * BATCH ID atomically with the code rows — the exactly-once rung
-    * (StreamTwin; round 14 extends the twin matrix to the ANN
-    * family).  Both quantizers are FROZEN state, encoding is
+    * (StreamTwin).  Both quantizers are FROZEN state, encoding is
     * per-row, so any micro-batch split folds to the same code table. */
   private[graft] def refreshTxn(spark: SparkSession, batch: DataFrame,
       path: String, batchId: Option[Long]): Boolean =
@@ -106,11 +105,11 @@ object PqWarehouse {
     * id-semijoin and re-ranks with the EXACT rounded cosine,
     * expression-for-expression Knn.bruteForce's arithmetic — INCLUDING
     * the ranking key: the window orders by roundx(cos, 6) desc with
-    * the vec_id tiebreak, exactly knnBatchOver's sort (ADVICE r14:
-    * ranking the raw unrounded cosine could order a 6-dp tie
-    * differently from the truth it is graded against, flipping a
-    * boundary row of the recall report).  The shortlist side of the
-    * stage-2 fetch is a FORCED `broadcast` (VERDICT r14 #1): it is
+    * the vec_id tiebreak, exactly knnBatchOver's sort (ranking the
+    * raw unrounded cosine could order a 6-dp tie differently from the
+    * truth it is graded against, flipping a boundary row of the
+    * recall report).  The shortlist side of the stage-2 fetch is a
+    * FORCED `broadcast`: it is
     * |Q|·expand·k rows by construction, but statically Spark cannot
     * know that, and an unhinted join would plan a full shuffle of the
     * 100 TB primary store before AQE could demote it — the hint makes
@@ -143,7 +142,7 @@ object PqWarehouse {
         col("cos").as("cosine"), col("rnk").cast("long").as("rnk"))
   }
 
-  private def tombPath(path: String) = s"$path.tomb"
+  private val Tomb = Tombstones("vec_id")
   private def stagingPath(path: String) = s"$path.staged"
 
   /** The gated requantize's verdict — one driver-side record per run
@@ -156,10 +155,9 @@ object PqWarehouse {
       recallStanding: Double, recallStaged: Double, swapped: Boolean)
 
   /** MONITOR-GATED REQUANTIZE — blue/green drift repair for the PQ
-    * lane (VERDICT-r14 ask #1: the lane carries TWICE the frozen-
-    * quantizer drift surface — coarse centroids AND the PQ codebook —
-    * and its at-rest refined recall is the lowest number the monitor
-    * prints, yet until this verb the only repair was a by-hand rebuild).
+    * lane (the lane carries TWICE the frozen-quantizer drift surface —
+    * coarse centroids AND the PQ codebook — and its at-rest refined
+    * recall is the lowest number the monitor prints).
     * The reclusterIfBetter discipline applied to both quantizers:
     *
     *  1. compact, then RE-TRAIN coarse quantizer + codebook from
@@ -174,16 +172,16 @@ object PqWarehouse {
     *  3. swap into `path` ONLY if the REFINED recall (the serving
     *     path) does not regress; otherwise the standing quantizers
     *     keep serving bit-for-bit.
-    * The staging base is cleared in a finally (the ADVICE-r14 #4
-    * discipline) — a grade that throws leaves no zombie staged state.
+    * The staging base is cleared in a finally — a grade that throws
+    * leaves no zombie staged state.
     *
     * Cost shape: one compact + one re-train (the k-means passes over
     * the survivors — corpus-linear, the ingest cost paid once per
     * repair) + four pruned monitor probes + two |Q|-bounded brute
     * truth passes; on swap one replace of the code table + the two
     * KB-scale side tables.  `seed`/`oneIn` thread the monitor's
-    * hash-mod query sampling into the ship decision (VERDICT-r14 ask
-    * #4) — registered rows stay at the deterministic prefix default.
+    * hash-mod query sampling into the ship decision — registered rows
+    * stay at the deterministic prefix default.
     * PqWarehouseSpec drives both branches (hold: standing state
     * bit-identical; swap: the staged quantizers serve). */
   def requantizeIfBetter(spark: SparkSession, path: String, dir: String,
@@ -260,27 +258,23 @@ object PqWarehouse {
     * primary store — codes are the only corpus-scale state here). */
   private[graft] def standingIds(spark: SparkSession, path: String): DataFrame = {
     val snap = CommitLog.snapshot(spark, path)
-    Tombstones.dropDf(snap.read(path).select(col("vec_id")).distinct(),
-      snap.readOpt(tombPath(path)), key = "vec_id", tombCol = "vec_id")
+    Tomb.live(snap, snap.read(path).select(col("vec_id")).distinct(), path)
   }
 
-  /** RETRACT — the delete verb on the PQ lane (round 11, VERDICT-r10
-    * ask #6's second family): vec_id tombstones, the IvfWarehouse/
-    * LshWarehouse rung verbatim — a code row depends only on its own
-    * vector; the FROZEN quantizers are corpus-level state a member
-    * deletion does not change (FAISS remove_ids).  Probes drop
+  /** RETRACT — the delete verb on the PQ lane: vec_id tombstones,
+    * the IvfWarehouse/LshWarehouse rung verbatim — a code row depends
+    * only on its own vector; the FROZEN quantizers are corpus-level
+    * state a member deletion does not change (FAISS remove_ids).  Probes drop
     * tombstoned candidates on the pruned candidate set; compact
     * physically purges the code table. */
   def retract(removedIds: DataFrame, path: String): Unit =
-    CommitLog.transaction(removedIds.sparkSession, path)(
-      _.append(removedIds.select(col("vec_id")), tombPath(path)))
+    Tomb.retract(removedIds, path)
 
-  /** COMPACT — purge tombstoned codes + clear tombstones in one
-    * transaction (the shared CommitLog.purgeTombstones); vacuum is
-    * the caller's retention verb. */
+  /** COMPACT — purge tombstoned codes, clear the tombstones and fold
+    * the streaming twin's id part in one transaction
+    * (`Tombstones.compact`); vacuum is the caller's retention verb. */
   def compact(spark: SparkSession, path: String): Unit =
-    CommitLog.purgeTombstones(spark, path, tombPath(path), "vec_id",
-      Seq(path -> Seq("cid")), foldStreamIds = true)
+    Tomb.compact(spark, path, Seq(path -> Seq("cid")))
 
   /** Probe: rank stored centroids for the query (K-row metadata),
     * build the ADC LUT from the stored codebook (128-row metadata,
@@ -320,10 +314,9 @@ object PqWarehouse {
     import spark.implicits._
     val lutDf = lut.toSeq.toDF("m", "code", "part")
 
-    Tombstones.dropDf(snap.read(path)
+    Tomb.live(snap, snap.read(path)
       .filter(col("cid").isin(probeCids.toIndexedSeq.map(Integer.valueOf): _*))
-      .filter(col("vec_id") =!= excludeId),
-      snap.readOpt(tombPath(path)), key = "vec_id", tombCol = "vec_id")
+      .filter(col("vec_id") =!= excludeId), path)
       .join(broadcast(lutDf), Seq("m", "code"))
       .groupBy(col("vec_id"))
       .agg(roundx(sumx(col("part")), 6).as("adc_cosine"), first(col("cid")).as("cid"))
@@ -380,9 +373,8 @@ object PqWarehouse {
     val unionCids = assign.map(_._2).distinct
     val byQ = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("adc_cosine").desc, col("vec_id"))
-    Tombstones.dropDf(snap.read(path)
-      .filter(col("cid").isin(unionCids.toIndexedSeq.map(Integer.valueOf): _*)),
-      snap.readOpt(tombPath(path)), key = "vec_id", tombCol = "vec_id")
+    Tomb.live(snap, snap.read(path)
+      .filter(col("cid").isin(unionCids.toIndexedSeq.map(Integer.valueOf): _*)), path)
       .join(broadcast(assign.toSeq.toDF("query_id", "cid")), Seq("cid"))
       .filter(if (excludeSelf) col("vec_id") =!= col("query_id") else lit(true))
       .join(broadcast(lutAll.toSeq.toDF("query_id", "m", "code", "part")),

@@ -856,34 +856,6 @@ object CommitLog {
       .toDF("gen", "stat_col", "kind", "min_v", "max_v")
   }
 
-  /** The tombstone-purge COMPACT shared by the doc/vector-keyed index
-    * members (Lsh/Ivf/Pq — one implementation instead of a copy per
-    * member): anti-join every listed part against the committed
-    * tombstone key set and commit the pruned replacements + the
-    * tombstone clear as ONE transaction.  No-op when no tombstone set
-    * exists.  Physical reclaim stays the caller's separate `vacuum`
-    * at the retention cadence. */
-  def purgeTombstones(spark: SparkSession, base: String, tombPart: String,
-      key: String, parts: Seq[(String, Seq[String])],
-      foldStreamIds: Boolean = false): Unit = {
-    val snap = snapshot(spark, base)
-    snap.readOpt(tombPart).foreach { t0 =>
-      val tomb = t0.select(t0.col(key)).distinct().localCheckpoint()
-      transaction(spark, base) { t =>
-        parts.foreach { case (part, pcols) =>
-          t.replace(snap.read(part).join(tomb, Seq(key), "left_anti"), part, pcols)
-        }
-        t.clear(tombPart)
-        // members with a streaming twin fold the `.stream` id part to
-        // one generation in the SAME transaction — replay protection
-        // survives compaction without the id generations accumulating
-        // (the Rollup.compact convention, shared here for the
-        // tombstone-keyed members)
-        if (foldStreamIds) StreamTwin.compactIds(snap, t, base)
-      }
-    }
-  }
-
   /** Physical GC — a SEPARATE retention verb, never bundled into
     * compact: delete every generation directory the head fold no
     * longer references — dead generations (behind a replace/rebase/

@@ -1,10 +1,14 @@
 package graft.sources
 
+import java.net.URI
 import java.nio.file.Files
 import java.nio.file.attribute.PosixFilePermission
 import java.nio.file.attribute.PosixFilePermission._
 
-import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FsConstants, FsServerDefaults,
+  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
 /** The `file:` file system of every graft session: Hadoop's
@@ -29,6 +33,26 @@ import org.apache.hadoop.fs.permission.FsPermission
 class LocalFs extends LocalFileSystem(new LocalFs.Raw)
 
 object LocalFs {
+
+  /** The same file system behind Hadoop's `FileContext` API (the
+    * `fs.AbstractFileSystem.file.impl` of every graft session), which
+    * Spark's streaming checkpoint files go through: the stock
+    * `org.apache.hadoop.fs.local.LocalFs` — a `ChecksumFs` over a
+    * `RawLocalFs` — with `Raw` as the delegate, so only the way modes
+    * are set differs.  Like the stock class it ignores `uri` and
+    * serves `file:///`. */
+  class Afs(uri: URI, conf: Configuration) extends ChecksumFs(new RawAfs(conf))
+
+  /** `org.apache.hadoop.fs.local.RawLocalFs` over `Raw`. */
+  class RawAfs(conf: Configuration) extends DelegateToFileSystem(
+      FsConstants.LOCAL_FS_URI, new Raw, conf, FsConstants.LOCAL_FS_URI.getScheme, false) {
+    override def getUriDefaultPort: Int = -1
+    override def getServerDefaults(f: Path): FsServerDefaults = LocalConfigKeys.getServerDefaults
+    @deprecated("as in AbstractFileSystem", "")
+    override def getServerDefaults: FsServerDefaults = LocalConfigKeys.getServerDefaults
+    // the OS validates local names, as RawLocalFileSystem leaves it
+    override def isValidName(src: String): Boolean = true
+  }
 
   /** The `rwxrwxrwx` bits, most significant first. */
   private val Bits: Array[PosixFilePermission] = Array(

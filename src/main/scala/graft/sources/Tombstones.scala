@@ -3,64 +3,61 @@ package graft.sources
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The shared tombstone mechanics of the doc-keyed retraction rung —
-  * one implementation for every warehouse member that retracts by
-  * key (MinHashWarehouse, Bm25Warehouse, RichlistWarehouse): an
-  * append-only key set at `<path>.tomb`, probes anti-join it on the
-  * hit/candidate set (O(hits), never O(index)), compact physically
-  * prunes and clears it.
-  *
-  * Existence checks go through the Hadoop FileSystem API — NOT
-  * java.nio — so the same code is correct on hdfs://
-  * or object-store paths (the 100 TB claim), not just local temp
-  * dirs.  The no-tomb fast path (the common case: no retraction ever
-  * happened) returns the input frame untouched, keeping its exact
-  * old plan. */
-object Tombstones {
+/** A tombstone part: the keys a member has retracted, one `key`
+  * column at `<base><suffix>`.  A retract appends keys (O(removed),
+  * no standing row touched); every read drops rows whose key is
+  * tombstoned in its snapshot; compact removes those rows from the
+  * member's parts and clears the tombstones in one transaction.
+  * Members whose every row depends only on its own key (no corpus
+  * statistics) therefore read after a retract exactly what a rebuild
+  * on the survivors would hold. */
+final case class Tombstones(key: String, suffix: String = ".tomb") {
 
-  def exists(spark: SparkSession, tombPath: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(tombPath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
+  private def path(base: String): String = base + suffix
 
-  /** Anti-join `rows` against the tombstoned key set: the tombstone
-    * column (`tombCol`, the set's on-disk name) matches `rows`' `key`
-    * column.  No-op when no tombstone set exists.  `tombFilter`
-    * restricts which tombstones apply — the snapshot (as-of) probes
-    * pass a generation cut here, so the time-filtered path shares
-    * this one implementation instead of hand-rolling the anti-join. */
-  def drop(spark: SparkSession, rows: DataFrame, tombPath: String,
-      key: String, tombCol: String = "doc_id",
-      tombFilter: DataFrame => DataFrame = identity): DataFrame =
-    if (!exists(spark, tombPath)) rows
-    else rows.join(
-      tombFilter(spark.read.parquet(tombPath)).select(col(tombCol).as(key)),
-      Seq(key), "left_anti")
+  /** Append `ids`' keys to the tombstone part inside `t`. */
+  def append(t: CommitLog.Txn, ids: DataFrame, base: String): Unit =
+    t.append(ids.select(col(key)), path(base))
 
-  /** The frame-based twin of `drop` for members whose tombstone set
-    * lives behind CommitLog (the committed read replaces the path
-    * existence check): None = no tombstones ever — `rows` keeps its
-    * exact old plan. */
-  def dropDf(rows: DataFrame, tomb: Option[DataFrame], key: String,
-      tombCol: String = "doc_id"): DataFrame =
-    tomb match {
+  /** Retract `ids` in a transaction of its own. */
+  def retract(ids: DataFrame, base: String): Unit =
+    CommitLog.transaction(ids.sparkSession, base)(append(_, ids, base))
+
+  /** `rows` minus the keys tombstoned in `snap` as of `asOfGen`;
+    * `rowKey` names the key in `rows`.  With no tombstone part,
+    * `rows` comes back unchanged, plan included.  The tombstone side
+    * is read as it is: a left-anti join ignores duplicate keys, so a
+    * `distinct` would only add a shuffle. */
+  def live(snap: CommitLog.Snapshot, rows: DataFrame, base: String,
+      rowKey: String = key, asOfGen: Long = Long.MaxValue): DataFrame =
+    snap.readOpt(path(base), asOfGen) match {
       case None => rows
-      case Some(t) =>
-        // no distinct: a left_anti join is insensitive to right-side
-        // duplicates, so deduping here would only add a shuffle per
-        // probe (callers that reuse a tomb frame may pre-pin it)
-        rows.join(t.select(col(tombCol).as(key)), Seq(key), "left_anti")
+      case Some(t) => rows.join(t.select(col(key).as(rowKey)), Seq(rowKey), "left_anti")
     }
 
-  /** The distinct tombstoned key set, pinned — compact's prune input. */
-  def keys(spark: SparkSession, tombPath: String, tombCol: String = "doc_id"): DataFrame =
-    spark.read.parquet(tombPath).select(col(tombCol)).distinct()
-      .localCheckpoint()
+  /** Compact inside `t`: when tombstones exist, replace each listed
+    * `(part, partitionCols)` by its rows minus the tombstoned keys and
+    * clear the tombstone part; then fold the streaming twin's id part
+    * (`StreamTwin.compactIds`, a no-op without one). */
+  def purge(t: CommitLog.Txn, snap: CommitLog.Snapshot, base: String,
+      parts: Seq[(String, Seq[String])]): Unit = {
+    snap.readOpt(path(base)).foreach { tomb =>
+      // pinned once for every part, and only when there is a part
+      lazy val keys = tomb.select(col(key)).distinct().localCheckpoint()
+      parts.foreach { case (part, pcols) =>
+        t.replace(snap.read(part).join(keys, Seq(key), "left_anti"), part, pcols)
+      }
+      t.clear(path(base))
+    }
+    StreamTwin.compactIds(snap, t, base)
+  }
 
-  /** Delete the tombstone set — the end of a compact that physically
-    * removed the tombstoned rows. */
-  def clear(spark: SparkSession, tombPath: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(tombPath)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  /** Compact a member whose only compaction is the purge: one
+    * transaction, opened only when tombstones exist. */
+  def compact(spark: SparkSession, base: String,
+      parts: Seq[(String, Seq[String])]): Unit = {
+    val snap = CommitLog.snapshot(spark, base)
+    if (snap.readOpt(path(base)).nonEmpty)
+      CommitLog.transaction(spark, base)(purge(_, snap, base, parts))
   }
 }

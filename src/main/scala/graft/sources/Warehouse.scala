@@ -20,11 +20,10 @@ object Warehouse {
     val t = Tables(spark, dir)
     // drop stale tables AND their locations — a dead session leaves the
     // warehouse directory behind, and CREATE TABLE refuses to reuse it.
-    // Hadoop FS API, NOT java.io (the Tombstones convention — local-FS
-    // deletes silently no-op on hdfs:///object-store warehouse dirs,
-    // and the subsequent CREATE TABLE then fails on the stale location;
-    // VERDICT-r10 "what's wrong" #1, closed).  BucketedJoinSpec drives
-    // the stale-location path.
+    // Hadoop FS API, NOT java.io (local-FS deletes silently no-op on
+    // hdfs:///object-store warehouse dirs, and the subsequent CREATE
+    // TABLE then fails on the stale location).  BucketedJoinSpec
+    // drives the stale-location path.
     Seq("lineitem_b", "orders_b").foreach { name =>
       spark.sql(s"DROP TABLE IF EXISTS $name")
       val loc = new org.apache.hadoop.fs.Path(

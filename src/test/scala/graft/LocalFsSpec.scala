@@ -5,7 +5,7 @@ import java.net.URI
 import java.nio.file.{Files, Path => JPath}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.functions._
 
@@ -82,5 +82,29 @@ class LocalFsSpec extends GraftSpec {
       df.select(col("v"), col("tb").cast("long")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(sorted(CommitLog.snapshot(spark, base).read(base)) == sorted(rows))
+  }
+
+  test("FileContext on a file: path resolves to LocalFs.Afs and creates what the stock class creates") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = Files.createTempDirectory("graft-localfs-fc-")
+    val graftFc = FileContext.getFileContext(dir.toUri, conf)
+    assert(graftFc.getDefaultFileSystem.isInstanceOf[LocalFs.Afs])
+    // the stock class, as Hadoop's defaults name it
+    val stockConf = new Configuration(conf)
+    stockConf.set("fs.AbstractFileSystem.file.impl",
+      new Configuration().get("fs.AbstractFileSystem.file.impl"))
+    val stockFc = FileContext.getFileContext(dir.toUri, stockConf)
+    assert(stockFc.getDefaultFileSystem.getClass.getName == "org.apache.hadoop.fs.local.LocalFs")
+    for ((fc, tag) <- Seq(graftFc -> "graft", stockFc -> "stock")) {
+      fc.mkdir(new Path(dir.resolve(s"$tag-dir").toUri), FsPermission.getDirDefault, true)
+      val out = fc.create(new Path(dir.resolve(s"$tag-dir/f").toUri),
+        java.util.EnumSet.of(CreateFlag.CREATE))
+      out.write(Array[Byte](1, 2, 3))
+      out.close()
+    }
+    for (p <- Seq("dir", "dir/f"))
+      assert(mode(dir.resolve(s"graft-$p")) == mode(dir.resolve(s"stock-$p")), p)
+    for (tag <- Seq("graft", "stock"))
+      assert(Files.isRegularFile(dir.resolve(s"$tag-dir/.f.crc")), s"no checksum beside $tag-dir/f")
   }
 }

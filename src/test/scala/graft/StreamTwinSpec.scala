@@ -193,9 +193,9 @@ class StreamTwinSpec extends RollupLawRows {
   }
 
   test("ann twin: the id part folds through a REAL compact without forgetting (r14)") {
-    // the trio's compact is the shared purgeTombstones — a no-op with
-    // no tombstones — so the drill's compact leg is trivial there;
-    // this drives the foldStreamIds path: retract → compact folds the
+    // the trio's compact (`Tombstones.compact`) opens no transaction
+    // without tombstones, so the drill's compact leg is trivial there;
+    // this drives the id fold: retract → compact folds the
     // `.stream` part to ONE replace generation, the committed id
     // still skips, a fresh id still folds
     val p = tmp("ivf-idfold")

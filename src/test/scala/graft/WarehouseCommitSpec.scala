@@ -21,8 +21,8 @@ import graft.sources.{CommitLog, Tables}
   *
   * Shapes covered:
   *  - Bm25Warehouse — inverted index: bucket-partitioned postings +
-  *    df deltas + 1-row scalar stats (3 writes per refresh; 4-part
-  *    retract with tombstones);
+  *    df deltas + 1-row scalar stats (3 writes per refresh and per
+  *    retract: df deltas, tombstones, stats);
   *  - JoinViewWarehouse — binary join view: view deltas + a side
   *    state per refresh (2 writes), where the ADVICE-r10 finding
   *    showed the old write order was neither re-runnable nor
@@ -31,7 +31,11 @@ import graft.sources.{CommitLog, Tables}
   *    totals (2 writes per refresh; the dirty retract adds tombstone
   *    + promotion refill in the same transaction);
   *  - BigramLmWarehouse — two count parts + 1-row (nb, v) stats
-  *    (3 writes per refresh and per retract).
+  *    (3 writes per refresh and per retract);
+  *  - MinHashWarehouse and IvfWarehouse — the tombstone purge of a
+  *    compact (`Tombstones.purge`: one replace per listed part, plus
+  *    the `.stream` id fold where a streaming twin has written one;
+  *    the tombstone clear writes no file).
   */
 class WarehouseCommitSpec extends GraftSpec {
 
@@ -222,6 +226,74 @@ class WarehouseCommitSpec extends GraftSpec {
     // crash between them served candidates with no shingle partner
     crashEveryWindow(2, () => graft.dedup.MinHashWarehouse.refresh(inc, p),
       probeOf(p), before, want)
+  }
+
+  /** The committed row count of `part` (0 when it has no live rows). */
+  private def committedRows(p: String, part: String): Long =
+    CommitLog.snapshot(spark, p).readOpt(part).map(_.count()).getOrElse(0L)
+
+  test("minhash: a compact after a retract killed in every window is invisible; resume == clean run") {
+    import graft.dedup.MinHashWarehouse
+    val removed = t.documents.filter(MinHashWarehouse.isRetractedDoc).select(col("doc_id"))
+    // the probe plus the physical state a compact changes, so the
+    // pre- and post-compact states differ although the probe does not
+    def probeOf(p: String) = () => MinHashWarehouse.incrementalDedup(spark, Dir, p)
+      .collect().map(_.toString).toSet ++ Set(
+        s"docs=${committedRows(p, s"$p.docs")}", s"tomb=${committedRows(p, s"$p.tomb")}")
+
+    val clean = tmp("mhc-clean")
+    MinHashWarehouse.materialize(spark, Dir, clean)
+    MinHashWarehouse.retract(removed, clean)
+    val before = probeOf(clean)()
+    MinHashWarehouse.compact(spark, clean)
+    val want = probeOf(clean)()
+    assert(before != want, "degenerate: the compact removed no row")
+
+    val p = tmp("mhc")
+    MinHashWarehouse.materialize(spark, Dir, p)
+    MinHashWarehouse.retract(removed, p)
+    // the compact writes 2 parts: the `.docs` replace and the banded
+    // index replace
+    crashEveryWindow(2, () => MinHashWarehouse.compact(spark, p),
+      probeOf(p), before, want)
+  }
+
+  test("ivf: a compact after a streamed batch and a retract killed in every window is invisible; resume == clean run") {
+    import graft.similarity.IvfWarehouse
+    val vecs = t.embeddings.select(col("vec_id"),
+      graft.functions.VectorFunctions.toDouble(col("embedding")).as("v"))
+      .localCheckpoint()
+    val base = vecs.filter(pmod(col("vec_id"), lit(10L)) < 8)
+    val batch = vecs.filter(pmod(col("vec_id"), lit(10L)) >= 8)
+    val removed = vecs.filter(pmod(col("vec_id"), lit(13L)) === 4).select(col("vec_id"))
+    val qv = vecs.filter(col("vec_id") === 0).head().getSeq[Double](1).toArray
+    def probeOf(p: String) = () => IvfWarehouse.probe(spark, p, qv)
+      .collect().map(_.toString).toSet ++ Set(
+        s"lists=${committedRows(p, p)}", s"tomb=${committedRows(p, s"$p.tomb")}",
+        s"stream=${CommitLog.history(spark, p).filter(col("part") === ".stream")
+          .collect().map(_.getAs[String]("kind")).mkString(",")}")
+    def build(p: String): Unit = {
+      IvfWarehouse.materializeFrom(base, p)
+      // the streaming twin's fold of batch 0: the rows and the id commit together
+      assert(IvfWarehouse.refreshTxn(spark, batch, p, Some(0L)))
+      IvfWarehouse.retract(removed, p)
+    }
+
+    val clean = tmp("ivfc-clean")
+    build(clean)
+    val before = probeOf(clean)()
+    IvfWarehouse.compact(spark, clean)
+    val want = probeOf(clean)()
+    assert(before != want, "degenerate: the compact removed no row")
+
+    val p = tmp("ivfc")
+    build(p)
+    // the compact writes 2 parts: the posting-list replace and the
+    // `.stream` id fold
+    crashEveryWindow(2, () => IvfWarehouse.compact(spark, p),
+      probeOf(p), before, want)
+    assert(!IvfWarehouse.refreshTxn(spark, batch, p, Some(0L)),
+      "the compact forgot the committed batch id")
   }
 
   test("sketch lane: a compact killed in every window is invisible; resume == clean run (round 12 — the destructive-overwrite fix)") {

@@ -17,8 +17,11 @@ Arrow/.df() path converts to float64 ("11757.0" vs "11757") — values
 equal, driver hash flipped (the d_corpus_stats r03-r05 red row).  The
 type check also runs inside the normal compare, so a local green gate
 implies the sweep is clean.
+
+Each result line is flushed as it is printed and ends with the seconds
+the query took, so a slow or stuck oracle query shows while it runs.
 """
-import json, sys, math
+import json, sys, math, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -34,6 +37,10 @@ def type_violations(rel):
             if str(t) not in ALLOWED_TYPES]
 
 
+def say(line):
+    print(line, flush=True)
+
+
 def types_only(out_dir, sf_dir):
     con = duckdb.connect()
     for t in TABLES:
@@ -44,11 +51,11 @@ def types_only(out_dir, sf_dir):
         try:
             viol = type_violations(con.sql(sql))
         except Exception as e:
-            print(f"FAIL {name}: error {str(e)[:200]}")
+            say(f"FAIL {name}: error {str(e)[:200]}")
             bad += 1
             continue
         if viol:
-            print(f"TYPE {name}: {viol}")
+            say(f"TYPE {name}: {viol}")
             bad += 1
     print(f"\ntype sweep: {len(oracle) - bad} ok, {bad} hazard, "
           f"allowed={sorted(ALLOWED_TYPES)}")
@@ -84,6 +91,10 @@ def main():
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     ok = bad = 0
     for name, sql in sorted(oracle.items()):
+        t0 = time.monotonic()
+
+        def secs():
+            return f"{time.monotonic() - t0:.2f} s"
         try:
             spark_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
             s_cols = [c.lower() for c in spark_rel.columns]
@@ -93,29 +104,29 @@ def main():
             d_types = type_violations(duck_rel)
             d_rows = duck_rel.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: error {str(e)[:200]}")
+            say(f"FAIL {name}: error {str(e)[:200]} ({secs()})")
             bad += 1
             continue
         if d_types:
-            print(f"FAIL {name}: type hazard {d_types}")
+            say(f"FAIL {name}: type hazard {d_types} ({secs()})")
             bad += 1
             continue
         if sorted(s_cols) != sorted(d_cols):
-            print(f"FAIL {name}: cols spark={sorted(s_cols)} duck={sorted(d_cols)}")
+            say(f"FAIL {name}: cols spark={sorted(s_cols)} duck={sorted(d_cols)} ({secs()})")
             bad += 1
             continue
         if len(s_rows) != len(d_rows):
-            print(f"FAIL {name}: rows spark={len(s_rows)} duck={len(d_rows)}")
+            say(f"FAIL {name}: rows spark={len(s_rows)} duck={len(d_rows)} ({secs()})")
             bad += 1
             continue
         sk = frame_key(s_rows, s_cols)
         dk = frame_key(d_rows, d_cols)
         if sk != dk:
             diffs = [(a, b) for a, b in zip(sk, dk) if a != b][:3]
-            print(f"FAIL {name}: values differ, e.g. {diffs}")
+            say(f"FAIL {name}: values differ, e.g. {diffs} ({secs()})")
             bad += 1
             continue
-        print(f"ok   {name} ({len(s_rows)} rows)")
+        say(f"ok   {name} ({len(s_rows)} rows, {secs()})")
         ok += 1
     # rows-only queries (no oracle)
     import os
@@ -123,7 +134,7 @@ def main():
         p = os.path.join(out_dir, name)
         if os.path.isdir(p) and name not in oracle:
             n = len(con.sql(f"SELECT * FROM '{p}/*.parquet'").fetchall())
-            print(f"rows {name}: {n}")
+            say(f"rows {name}: {n}")
     print(f"\n{ok} ok, {bad} fail, {len(oracle)} oracled")
     sys.exit(1 if bad else 0)
 
