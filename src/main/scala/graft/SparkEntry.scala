@@ -282,6 +282,14 @@ object SparkEntry {
       |comp AS (SELECT u AS doc_id, min(v) AS group_id FROM reach GROUP BY 1)
       |SELECT doc_id, group_id, count(*) OVER (PARTITION BY group_id) AS group_size FROM comp""".stripMargin
   private val DDedupGroupsSql = dDedupGroupsSqlOver("")
+  /** `sql` with every CTE except the recursive `reach` marked
+    * `AS MATERIALIZED`, for oracles that read CTEs more than once:
+    * DuckDB 1.0 evaluates an unmarked CTE again at each reference.
+    * The marking changes DuckDB's evaluation, not the rows. */
+  private def materializedCtes(sql: String): String =
+    """\b(\w+) AS \(""".r.replaceAllIn(sql, m =>
+      scala.util.matching.Regex.quoteReplacement(
+        if (m.group(1) == "reach") m.matched else s"${m.group(1)} AS MATERIALIZED ("))
   // BM25 body hoisted so s_hybrid_rrf's oracle composes the SAME
   // lexical leg it fuses (the d_corpus_funnel composition rule).
   // Mirrors Bm25.bm25 token-for-token: ln's ≤1-ulp license is washed
@@ -1475,7 +1483,7 @@ object SparkEntry {
     // min-id — near-dup members are different texts); the oracle joins
     // the hoisted groups and quality bodies verbatim, argmax by
     // (quality DESC, doc_id) per group
-    QuerySpec("d_dedup_keep_best", Probe, Dedup.keepBest _, Oracle(
+    QuerySpec("d_dedup_keep_best", Probe, Dedup.keepBest _, Oracle(materializedCtes(
       s"""WITH g AS ($DDedupGroupsSql), q AS ($TQualitySql),
          |j AS (SELECT g.doc_id AS doc_id, g.group_id AS group_id,
          |g.group_size AS group_size, q.quality_score AS quality_score
@@ -1483,7 +1491,7 @@ object SparkEntry {
          |r AS (SELECT *, row_number() OVER (PARTITION BY group_id
          |ORDER BY quality_score DESC, doc_id) AS rn FROM j)
          |SELECT group_id, doc_id AS kept_doc_id, group_size,
-         |quality_score AS best_quality FROM r WHERE rn = 1""".stripMargin), warehoused = true),
+         |quality_score AS best_quality FROM r WHERE rn = 1""".stripMargin)), warehoused = true),
     // the grouping's scale path: the J-channel from MinHash-LSH-verified
     // pairs instead of the AllPairs prefix join, registered inline so its
     // bench row prices the edge-generation swap.  Both J-channels verify
@@ -1979,7 +1987,7 @@ object SparkEntry {
     // → decontaminate → budget-select → pack → shard, reported as
     // per-stage (n_in, n_out).  Each oracle stage is its registered body
     // verbatim, chained on the previous stage's survivor ids
-    QuerySpec("d_pipeline_e2e", Probe, TrainPrep.pipelineE2e(_, _), Oracle(
+    QuerySpec("d_pipeline_e2e", Probe, TrainPrep.pipelineE2e(_, _), Oracle(materializedCtes(
       s"""WITH fn AS ($DCorpusFunnelSql),
          |gated AS (SELECT doc_id FROM fn WHERE keep = 1),
          |g AS ($DDedupGroupsSql), q AS ($TQualitySql),
@@ -2029,7 +2037,8 @@ object SparkEntry {
          |UNION ALL SELECT '4_budget_select', (SELECT count(*) FROM clean), (SELECT count(*) FROM sel)
          |UNION ALL SELECT '5_pack', (SELECT count(*) FROM sel), (SELECT count(*) FROM chunks)
          |UNION ALL SELECT '6_shard', (SELECT count(*) FROM chunks),
-         |(SELECT count(*) FROM (SELECT DISTINCT shard, seq_id FROM pk))""".stripMargin), warehoused = true),
+         |(SELECT count(*) FROM (SELECT DISTINCT shard, seq_id FROM pk))""".stripMargin)),
+      warehoused = true),
     // composes the hoisted CC body: split rides the GROUP's canonical
     // content hash, same 80/10/10 bucket rule as d_sample_split
     QuerySpec("d_split_leakage_safe", Headline, TrainPrep.leakageSafeSplit _, Oracle(

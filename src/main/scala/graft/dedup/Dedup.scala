@@ -429,7 +429,6 @@ object Dedup {
 
   private[graft] val MinhashK = 128
   private[graft] val Bands = 32 // 4 rows per band
-  private val Prime = 2147483647L // 2^31 - 1
 
   /** Per-doc MinHash(128) signature — native expression (see
     * graft.functions.MinHashSig): one flat primitive loop per row over

@@ -4,7 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.sources.{Materialized, Tables}
+import graft.sources.{CommitLog, Materialized, StreamTwin, Tables}
 
 /** The dup-pair EDGE SET at rest — the shared input of the whole
   * connected-components family — in TWO forms:
@@ -14,31 +14,33 @@ import graft.sources.{Materialized, Tables}
   *     Materialized pattern — fcd's collector-writes-once /
   *     services-read contract, reference: src/collector/dashboard/
   *     collectDashboard.ts);
-  *  2. the MAINTAINED warehouse (`ingest`/`refresh`/`compact`) that
-  *     closes the crawl loop's grouping leg: delta edges are NOT
-  *     derived by re-running corpus-wide generation and splitting the
-  *     result — they are assembled at O(batch) from the SAME probe
-  *     machinery the index warehouses already serve (MinHash banded
+  *  2. the MAINTAINED warehouse (`ingest`/`refresh`/`compact`/
+  *     `retract`) that closes the crawl loop's grouping leg: delta
+  *     edges are NOT derived by re-running corpus-wide generation and
+  *     splitting the result — they are assembled at O(batch) from the
+  *     SAME probe machinery the index warehouses serve (MinHash banded
   *     probe for the Jaccard channel, the exact-hash equi-join, and a
-  *     frozen-order Ed-Join probe for the character channel), exactly
-  *     as the Scaladoc here has claimed production does since round 8.
+  *     frozen-order Ed-Join probe for the character channel).
   *     `d_dedup_groups_incremental` reads STANDING LABELS + DELTA
   *     EDGES at rest and runs only the contracted fold.
   *
-  * Maintained layout at `path`:
-  *  - `<path>`          — (a_id, b_id) edge rows partitioned by `gen`
-  *                        (gen=0 ingest, gen≥1 one per refresh);
-  *  - `<path>.labels`   — standing CC labels over the ingested base;
-  *  - `<path>.mh`       — the MinHash-LSH index of standing docs
-  *                        (MinHashWarehouse layout, refreshed per
-  *                        batch so later batches match earlier ones);
-  *  - `<path>.txt`      — (doc_id, len, band, h, text): md5 for the
-  *                        exact channel, length band for the Ed
-  *                        starved stratum, text for Ed verification
-  *                        (the `.docs` stance: warehouses may hold
-  *                        standing content at rest; what a probe never
-  *                        does is re-read or re-derive it from the
-  *                        SOURCE corpus);
+  * Maintained layout: one CommitLog base at `path`, and every verb is
+  * ONE transaction over the parts it touches, so a verb killed at any
+  * point is invisible and re-running it converges with a clean run.
+  *  - `<path>`          — (a_id, b_id, gen) edge rows partitioned by
+  *                        `gen`: 0 for the ingested or compacted base,
+  *                        the refresh's transaction generation (≥ 1)
+  *                        for its delta edges;
+  *  - `<path>.labels`   — standing CC labels over the base edges;
+  *  - `<path>.mh` / `<path>.mh.docs` — the J-channel MinHash-LSH index
+  *                        of standing docs (MinHashWarehouse layout);
+  *  - `<path>.txt`      — (doc_id, len, band, h, text): the corpus
+  *                        membership table (the re-crawl guard reads
+  *                        it), md5 for the exact channel, length band
+  *                        for the Ed starved stratum, text for Ed
+  *                        verification (a warehouse may hold standing
+  *                        content at rest; a probe never re-reads or
+  *                        re-derives it from the SOURCE corpus);
   *  - `<path>.edpfx`    — standing Ed-Join prefix rows (doc_id, len,
   *                        hsh): each doc's q·d+1 rarest surviving
   *                        char-4-gram hashes under the FROZEN order;
@@ -46,7 +48,8 @@ import graft.sources.{Materialized, Tables}
   *                        grams (the unconditional-completeness
   *                        fallback population);
   *  - `<path>.edfreq` / `<path>.edmeta` — the FROZEN char-gram
-  *                        frequency table and its df cap.
+  *                        frequency table and its df cap;
+  *  - `<path>.stream`   — the streaming twin's committed batch ids.
   *
   * The FROZEN-ORDER Ed-Join argument (the piece that makes the
   * character channel batch-vs-standing instead of corpus-rescan):
@@ -85,20 +88,21 @@ object EdgeWarehouse {
 
   // ---------------------------------------------------------------
   // Form 1: the shared once-per-JVM materialization (d_dedup_groups /
-  // d_split_leakage_safe — unchanged consumers, unchanged contract).
+  // d_split_leakage_safe).
   // ---------------------------------------------------------------
 
-  /** Generate-and-write: the tri-channel edge set of `dir`'s
-    * `documents`, as (a_id, b_id) parquet at `path`. */
+  /** Generate-and-commit: the tri-channel edge set of `dir`'s
+    * `documents`, as (a_id, b_id) rows at `path`. */
   def materialize(spark: SparkSession, dir: String, path: String): Unit =
-    Dedup.nearDupEdges(Tables(spark, dir).documents)
-      .write.mode("overwrite").parquet(path)
+    CommitLog.transaction(spark, path)(
+      _.replace(Dedup.nearDupEdges(Tables(spark, dir).documents), path))
 
   /** The edge set at rest, materializing on first use (per JVM per
     * source dir).  Pure read on every later call. */
-  def edges(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(
-      Materialized.pathFor("dup_edges", dir)(materialize(spark, dir, _)))
+  def edges(spark: SparkSession, dir: String): DataFrame = {
+    val p = Materialized.pathFor("dup_edges", dir)(materialize(spark, dir, _))
+    CommitLog.snapshot(spark, p).read(p)
+  }
 
   // ---------------------------------------------------------------
   // Form 2: the maintained warehouse (ingest → refresh → compact).
@@ -130,20 +134,19 @@ object EdgeWarehouse {
   /** Prefix rows + starved docs of `docs` under the frozen order.
     * rn is assigned over ALL grams (capped included — they sort last,
     * so surviving positions match EditDist.stages' prefix-then-cap
-    * sequencing), then the frozen df cap filters.  `grams` hands in a
-    * precomputed (doc_id, len, hsh) frame so refresh grams its batch
-    * once (optimization r16). */
+    * sequencing), then the frozen df cap filters.  `grams` is the
+    * batch's (doc_id, len, hsh) frame, grammed once by the caller. */
   private def edPrefixAndStarved(docs: DataFrame, freq: DataFrame,
-      capFreq: Double, grams: Option[DataFrame] = None): (DataFrame, DataFrame) = {
+      capFreq: Double, grams: DataFrame): (DataFrame, DataFrame) = {
     val byRarity = Window.partitionBy(col("doc_id"))
       .orderBy(col("freq"), col("hsh"))
-    val pfx = grams.getOrElse(charGrams(docs))
+    val pfx = grams
       .join(freq, Seq("hsh"), "left")
       .withColumn("freq", coalesce(col("freq"), lit(0L)))
       .withColumn("rn", row_number().over(byRarity))
       .filter(col("rn") <= PrefixLen && col("freq") <= capFreq)
       .select(col("doc_id"), col("len"), col("hsh"))
-      .localCheckpoint() // feeds the store write + the starved derivation
+      .localCheckpoint() // shared by the prefix write, the cross join and the starved count
     val nSur = pfx.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sur"))
     val starved = docs
       .select(col("doc_id"), length(col("text")).as("len"))
@@ -155,314 +158,235 @@ object EdgeWarehouse {
 
   /** INGEST: base edges (the inline tri-channel generation — the
     * one-time cost when the corpus is first indexed), standing labels,
-    * and every probe-side index the refreshes will equi-join. */
+    * and every probe-side index the refreshes will equi-join, in one
+    * transaction. */
   def ingest(spark: SparkSession, docs: DataFrame, path: String): Unit = {
-    val base = docs.localCheckpoint() // feeds edges + labels + 4 indexes
-    // ONE gram pass (optimization r16, guide §1.2 — VERDICT-r15 ask
-    // #3): the inline Ed channel and the frozen .edfreq/.edpfx/
-    // .edstarved index each grammed the corpus (three gram passes, two
-    // freq aggregates, two rarity windows per ingest).  The pinned
-    // gram frame now feeds the staged Ed plan ONCE, and the frozen
-    // index rows are the staged plan's own byproducts — at ingest the
-    // frozen order IS the corpus order, so freq/prefix/starved are the
-    // identical frames (the old left join vs stages' inner join is
-    // vacuous here: ingest's freq covers every gram of base; the df
-    // cap is the same greatest(n·0.1, 20) on both paths —
-    // EdgeWarehouseSpec's refresh == one-shot pin covers the claim).
-    val shh = charGrams(base).localCheckpoint()
+    val base = docs.localCheckpoint() // shared by the edges, the labels and every index
+    // one gram pass: the staged Ed plan runs once over the pinned
+    // grams, and at ingest the frozen order IS the corpus order, so
+    // the plan's own freq/prefix/starved frames are the frozen index
+    // rows (ingest's freq covers every gram of base; the df cap is the
+    // same greatest(n·0.1, 20) on both paths — EdgeWarehouseSpec's
+    // refresh == one-shot pin covers the claim)
+    val shh = charGrams(base).localCheckpoint() // shared by the Ed plan's freq and prefix stages
     val ed = EditDist.stages(base, d = D, grams = Some(shh), pinPrefix = true)
-    Dedup.nearDupEdgesWith(base,
-        ed.pairs.select(col("a_id"), col("b_id")))
-      .withColumn("gen", lit(0))
-      .write.mode("overwrite").partitionBy("gen").parquet(path)
-    Dedup.connectedComponents(
-        base.select(col("doc_id")),
-        allEdges(spark, path))
-      .write.mode("overwrite").parquet(labelsPath(path))
-    MinHashWarehouse.materializeAll(base, mhPath(path))
-    txtRows(base).write.mode("overwrite").parquet(txtPath(path))
-    // freeze the char-gram frequency order + df cap at ingest — the
-    // staged plan's own freq frame, written as-is
-    ed.freq.write.mode("overwrite").parquet(freqPath(path))
+    val edges = Dedup.nearDupEdgesWith(base, ed.pairs.select(col("a_id"), col("b_id")))
+      .localCheckpoint() // shared by the edge part and the labels' CC
     val nDocs = base.count()
     val capFreq = math.max(nDocs * MaxDfRatio, 20.0)
-    spark.range(1).select(lit(capFreq).as("cap_freq"), lit(nDocs).as("n_docs"))
-      .write.mode("overwrite").parquet(metaPath(path))
-    ed.prefix.select(col("doc_id"), col("len"), col("hsh"))
-      .write.mode("overwrite").parquet(pfxPath(path))
-    ed.starved.select(col("doc_id"), col("len"))
-      .write.mode("overwrite").parquet(starvedPath(path))
+    CommitLog.transaction(spark, path) { t =>
+      t.replace(edges.withColumn("gen", lit(0)), path, Seq("gen"))
+      t.replace(Dedup.connectedComponents(base.select(col("doc_id")), edges),
+        labelsPath(path))
+      MinHashWarehouse.materializeIn(t, base, mhPath(path))
+      t.replace(txtRows(base), txtPath(path))
+      t.replace(ed.freq, freqPath(path))
+      t.replace(spark.range(1).select(lit(capFreq).as("cap_freq"), lit(nDocs).as("n_docs")),
+        metaPath(path))
+      t.replace(ed.prefix.select(col("doc_id"), col("len"), col("hsh")), pfxPath(path))
+      t.replace(ed.starved.select(col("doc_id"), col("len")), starvedPath(path))
+    }
   }
 
   /** REFRESH: assemble the batch's delta edges from the probe
-    * machinery (no corpus rescan, no generation re-run), append them
-    * as a new generation, then fold the batch into the standing
-    * indexes so the NEXT batch matches this one.
+    * machinery (no corpus rescan, no generation re-run) and, in the
+    * same transaction, append them as a new generation and fold the
+    * batch into the standing indexes, so the NEXT batch matches this
+    * one.
     *
-    * The crawl contract — batch doc_ids must be NEW to the corpus —
-    * is now ENFORCED, not trusted: one O(batch) semi-join against the
-    * narrow `.txt` store throws on any re-crawled id (a violated
-    * contract would otherwise silently append duplicate `.txt`/prefix
-    * rows and emit self-pair edges; EdgeWarehouseSpec drives it).
-    *
-    * Crash-window contract (write ORDER is load-bearing): all probes
-    * run and the delta edge set materializes BEFORE any write; then
-    * edges append first, the `.mh`/`.edpfx`/`.edstarved` index folds
-    * next, and the `.txt` append goes LAST — `.txt` is the COMMIT
-    * MARKER (a batch is in the corpus iff its ids are in `.txt`,
-    * which is also what the guard reads).  An interrupted refresh is
-    * therefore cleanly RESUMABLE by re-running the same batch: the
-    * guard still passes (ids never committed), and the rerun's extra
-    * edge/index rows are exact duplicates that every consumer erases
-    * (delta edges are distinct()ed, compact distinct()s the edge
-    * union, CC of a multigraph equals CC of its support) — while a
-    * double-run of a COMMITTED batch fails loudly at the guard.
-    * EdgeWarehouseSpec pins both: interrupt-before-marker + resume
-    * converges bit-for-bit with a clean run, and a committed re-run
-    * throws.
-    *
-    * CROSS-BASE CRASH CONTRACT (round 13, VERDICT-r12 ask #6 — the
-    * combined two-base resume semantics stated once, here, because
-    * this verb is the one place a single crawl batch touches TWO
-    * CommitLog-independent bases): the J-channel index at `<path>.mh`
-    * is a full MinHashWarehouse under its OWN commit log, and a
-    * CommitLog transaction cannot span two bases — so a crash in this
-    * verb can leave the two members exactly ONE BATCH APART: the
-    * `.mh` txn committed (docs + banded rows + probe-visible), the
-    * `.txt` marker never written (the batch NOT in the corpus).  The
-    * resume rule is the duplicate-erasure clause, applied cross-base:
-    * re-run the SAME batch.  The guard still passes (ids never
-    * committed to `.txt`); the J probe now matches the batch against
-    * its own half-committed `.mh` rows, which the standing-side
-    * anti-join below drops (cross pairs whose standing endpoint is in
-    * the batch); MinHashWarehouse.refresh folds the batch a SECOND
-    * time — exact duplicate index rows whose duplicate candidates the
-    * delta distinct() erases and whose physical copies the next `.mh`
-    * compact folds; and the `.txt` marker finally lands.  Net: the
-    * resumed state is probe-equal and label-equal to a never-crashed
-    * run (EdgeWarehouseSpec's cross-base test asserts the one-batch-
-    * apart gap state itself, then pins convergence).  No protocol
-    * change could delete this clause — migrating `.txt` onto the
-    * shared log would leave the same cross-base window against
-    * `.mh`'s log, just restated (the CommitLog Scaladoc's exception
-    * note). */
-  def refresh(spark: SparkSession, batch0: DataFrame, path: String): Unit =
-    refreshImpl(spark, batch0, path, commitTxt = true)
+    * The crawl contract — batch doc_ids must be NEW to the corpus — is
+    * enforced: one O(batch) semi-join against `.txt` throws on any
+    * re-crawled id before anything is written (a violated contract
+    * would otherwise append duplicate index rows and emit self-pair
+    * edges; EdgeWarehouseSpec drives it). */
+  def refresh(spark: SparkSession, batch: DataFrame, path: String): Unit =
+    refreshTxn(spark, batch, path, batchId = None)
 
-  /** The refresh body with the final commit-marker append made
-    * switchable, so the spec can simulate a crash in the widest
-    * non-committed window (everything written EXCEPT `.txt`).
-    * `guardRecrawl` exists for spec instrumentation only — EVERY
-    * production caller (batch and streaming alike) keeps the loud
-    * check; the streaming twin's per-trigger cost cure is the batchId
-    * marker fast-skip (see streamingRefresh), not a disabled guard. */
-  private[graft] def refreshImpl(spark: SparkSession, batch0: DataFrame,
-      path: String, commitTxt: Boolean, guardRecrawl: Boolean = true): Unit = {
-    val batch = batch0.select(col("doc_id"), col("text")).localCheckpoint()
-    val bTxt = txtRows(batch).localCheckpoint()
-    val standingTxt = spark.read.parquet(txtPath(path))
+  /** The refresh transaction, committing `batchId` (when given) in
+    * the same atomic marker; false iff that id was already committed
+    * and the batch was skipped. */
+  private[graft] def refreshTxn(spark: SparkSession, batch0: DataFrame,
+      path: String, batchId: Option[Long]): Boolean =
+    StreamTwin.refreshTxnWith(spark, path, batchId) { t =>
+      val snap = CommitLog.snapshot(spark, path)
+      val batch = batch0.select(col("doc_id"), col("text"))
+        .localCheckpoint() // shared by the guard, every channel and every index fold
+      val bTxt = txtRows(batch).localCheckpoint() // shared by the exact, Ed and .txt legs
+      val standingTxt = snap.read(txtPath(path))
 
-    // the crawl-contract guard: any batch id already committed (in
-    // `.txt`) is a re-crawl — fail loudly instead of corrupting.
-    // Formatting goes through Row.get, not getLong — the guard must
-    // report a wrongly-TYPED doc_id, not die on the cast (ADVICE-r10).
-    val recrawled =
-      if (!guardRecrawl) Array.empty[String]
-      else batch.select(col("doc_id"))
+      // Formatting goes through Row.get, not getLong: the guard must
+      // report a wrongly-TYPED doc_id, not die on the cast
+      val recrawled = batch.select(col("doc_id"))
         .join(standingTxt.select(col("doc_id")), Seq("doc_id"), "left_semi")
         .limit(5).collect().map(r => String.valueOf(r.get(0)))
-    if (recrawled.nonEmpty)
-      throw new IllegalStateException(
-        "EdgeWarehouse.refresh: batch contains doc_ids already in the corpus " +
-          s"(sample: ${recrawled.mkString(", ")}) — the crawl contract requires " +
-          "fresh ids; re-crawled content must arrive under a new id (or via a " +
-          "retract-then-refresh cycle), not as a duplicate row")
+      if (recrawled.nonEmpty)
+        throw new IllegalStateException(
+          "EdgeWarehouse.refresh: batch contains doc_ids already in the corpus " +
+            s"(sample: ${recrawled.mkString(", ")}) — the crawl contract requires " +
+            "fresh ids; re-crawled content must arrive under a new id (or via a " +
+            "retract-then-refresh cycle), not as a duplicate row")
 
-    // J channel: banded probe against the index at rest (cross) +
-    // banded-verified generation within the batch
-    val jCross = MinHashWarehouse.probeAgainst(spark, batch, mhPath(path))
-      .select(col("new_id").as("x"), col("base_id").as("y"))
-    val jWithin = Dedup.minhashVerifiedOf(batch)
-      .select(col("a_id"), col("b_id"))
+      // J channel: banded probe against the index at rest (cross) +
+      // banded-verified generation within the batch
+      val jCross = MinHashWarehouse.probeWith(snap, batch, mhPath(path))
+        .select(col("new_id").as("x"), col("base_id").as("y"))
+      val jWithin = Dedup.minhashVerifiedOf(batch)
+        .select(col("a_id"), col("b_id"))
 
-    // exact channel: md5 equi-join against the at-rest hash column
-    val exCross = bTxt.select(col("doc_id").as("x"), col("h"))
-      .join(standingTxt.select(col("doc_id").as("y"), col("h")), Seq("h"))
-      .select(col("x"), col("y"))
-    val exWithin = bTxt.as("p")
-      .join(bTxt.as("q"), col("p.h") === col("q.h") &&
-        col("p.doc_id") < col("q.doc_id"))
-      .select(col("p.doc_id").as("a_id"), col("q.doc_id").as("b_id"))
+      // exact channel: md5 equi-join against the at-rest hash column
+      val exCross = bTxt.select(col("doc_id").as("x"), col("h"))
+        .join(standingTxt.select(col("doc_id").as("y"), col("h")), Seq("h"))
+        .select(col("x"), col("y"))
+      val exWithin = bTxt.as("p")
+        .join(bTxt.as("q"), col("p.h") === col("q.h") &&
+          col("p.doc_id") < col("q.doc_id"))
+        .select(col("p.doc_id").as("a_id"), col("q.doc_id").as("b_id"))
 
-    // Ed channel: frozen-order prefix collision (cross) + the
-    // length-band starved strata in BOTH directions + EditDist's
-    // full staged plan within the batch
-    val meta = spark.read.parquet(metaPath(path)).head()
-    val capFreq = meta.getDouble(0)
-    // one gram pass over the batch (optimization r16): the frozen-order
-    // prefix derivation and the within-batch staged Ed plan below share
-    // the pinned batch gram frame instead of each gramming the batch
-    val bShh = charGrams(batch).localCheckpoint()
-    val (bPfx, bStarved) = edPrefixAndStarved(batch,
-      spark.read.parquet(freqPath(path)), capFreq, grams = Some(bShh))
-    val sPfx = spark.read.parquet(pfxPath(path))
-    val pfxCross = bPfx.as("a")
-      .join(sPfx.as("b"), col("a.hsh") === col("b.hsh") &&
-        abs(col("a.len") - col("b.len")) <= D)
-      .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
-    def bandProbes(starvedDocs: DataFrame): DataFrame =
-      starvedDocs.select(col("doc_id"), col("len"),
-        explode(array(floor(col("len") / BandW) - 1, floor(col("len") / BandW),
-          floor(col("len") / BandW) + 1)).as("band"))
-    val sStarved = spark.read.parquet(starvedPath(path))
-    val starvedCross =
-      bandProbes(bStarved).as("a")
-        .join(standingTxt.as("b"), col("a.band") === col("b.band") &&
+      // Ed channel: frozen-order prefix collision (cross) + the
+      // length-band starved strata in BOTH directions + EditDist's
+      // full staged plan within the batch
+      val capFreq = snap.read(metaPath(path)).head().getDouble(0)
+      val bShh = charGrams(batch).localCheckpoint() // shared by the frozen prefix and the within-batch Ed plan
+      val (bPfx, bStarved) = edPrefixAndStarved(batch,
+        snap.read(freqPath(path)), capFreq, bShh)
+      val sPfx = snap.read(pfxPath(path))
+      val pfxCross = bPfx.as("a")
+        .join(sPfx.as("b"), col("a.hsh") === col("b.hsh") &&
           abs(col("a.len") - col("b.len")) <= D)
         .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
-      .union(
-        bandProbes(sStarved).as("a")
-          .join(bTxt.as("b"), col("a.band") === col("b.band") &&
+      def bandProbes(starvedDocs: DataFrame): DataFrame =
+        starvedDocs.select(col("doc_id"), col("len"),
+          explode(array(floor(col("len") / BandW) - 1, floor(col("len") / BandW),
+            floor(col("len") / BandW) + 1)).as("band"))
+      val sStarved = snap.read(starvedPath(path))
+      val starvedCross =
+        bandProbes(bStarved).as("a")
+          .join(standingTxt.as("b"), col("a.band") === col("b.band") &&
             abs(col("a.len") - col("b.len")) <= D)
-          .select(col("b.doc_id").as("x"), col("a.doc_id").as("y")))
-    val edCross = pfxCross.union(starvedCross).distinct()
-      .join(bTxt.select(col("doc_id").as("x"), col("text").as("x_text")), Seq("x"))
-      .join(standingTxt.select(col("doc_id").as("y"), col("text").as("y_text")), Seq("y"))
-      .filter(levenshtein(col("x_text"), col("y_text"), D) >= 0)
-      .select(col("x"), col("y"))
-    val edWithin = EditDist.stages(batch, d = D, grams = Some(bShh)).pairs
-      .select(col("a_id"), col("b_id"))
+          .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
+        .union(
+          bandProbes(sStarved).as("a")
+            .join(bTxt.as("b"), col("a.band") === col("b.band") &&
+              abs(col("a.len") - col("b.len")) <= D)
+            .select(col("b.doc_id").as("x"), col("a.doc_id").as("y")))
+      val edCross = pfxCross.union(starvedCross).distinct()
+        .join(bTxt.select(col("doc_id").as("x"), col("text").as("x_text")), Seq("x"))
+        .join(standingTxt.select(col("doc_id").as("y"), col("text").as("y_text")), Seq("y"))
+        .filter(levenshtein(col("x_text"), col("y_text"), D) >= 0)
+        .select(col("x"), col("y"))
+      val edWithin = EditDist.stages(batch, d = D, grams = Some(bShh)).pairs
+        .select(col("a_id"), col("b_id"))
 
-    // the standing side of every cross pair must be OUTSIDE the batch:
-    // in a clean run that is vacuous (the guard proved the ids new),
-    // but on a RESUME after a mid-refresh crash the interrupted run's
-    // index rows already contain this batch — without this anti-join
-    // the batch would match itself through the indexes (self-pairs and
-    // doubled within-batch pairs); with it the cross channels see
-    // exactly the clean run's standing set.  One broadcast anti-join
-    // over the assembled pair set — O(pairs), not O(standing).
-    val cross = jCross.union(exCross).union(edCross)
-      .join(broadcast(batch.select(col("doc_id").as("y"))), Seq("y"), "left_anti")
-      .select(least(col("x"), col("y")).as("a_id"),
-        greatest(col("x"), col("y")).as("b_id"))
-    val delta = cross.union(jWithin).union(exWithin).union(edWithin).distinct()
-    // coalesce: an edge-free standing table (all generations empty)
-    // has a NULL max — the next generation is then 1, not a crash
-    val nextGen = edgeRead(spark, path)
-      .agg(coalesce(max(col("gen")), lit(0)).as("g")).head().getInt(0) + 1
-    delta.withColumn("gen", lit(nextGen))
-      .write.mode("append").partitionBy("gen").parquet(path)
-
-    // fold the batch into the standing indexes (all append-only);
-    // `.txt` goes LAST — the commit marker (see the refresh Scaladoc)
-    MinHashWarehouse.refresh(batch, mhPath(path))
-    bPfx.write.mode("append").parquet(pfxPath(path))
-    bStarved.write.mode("append").parquet(starvedPath(path))
-    if (commitTxt) bTxt.write.mode("append").parquet(txtPath(path))
-  }
-
-  /** All edge-table reads go through an EXPLICIT schema: a generation
-    * with zero edges (a clean batch — entirely normal in production)
-    * writes only partition metadata, and schema inference over such a
-    * directory fails where a declared schema reads it as empty. */
-  private val EdgeSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("a_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("b_id", org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("gen", org.apache.spark.sql.types.IntegerType)))
-
-  private def edgeRead(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(EdgeSchema).parquet(path)
+      // the guard proved every standing endpoint is outside the batch;
+      // a pair found by several channels is emitted once
+      val cross = jCross.union(exCross).union(edCross)
+        .select(least(col("x"), col("y")).as("a_id"),
+          greatest(col("x"), col("y")).as("b_id"))
+      val delta = cross.union(jWithin).union(exWithin).union(edWithin).distinct()
+      t.append(delta.withColumn("gen", lit(t.gen.toInt)), path, Seq("gen"))
+      MinHashWarehouse.refreshIn(t, batch, mhPath(path))
+      t.append(bPfx, pfxPath(path))
+      t.append(bStarved, starvedPath(path))
+      t.append(bTxt, txtPath(path))
+    }
 
   /** The standing labels and the delta generations at rest — what the
-    * registered incremental fold reads (nothing else). */
+    * registered incremental fold reads (nothing else).  Each read pins
+    * its own snapshot. */
   def standingLabels(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(labelsPath(path))
+    CommitLog.snapshot(spark, path).read(labelsPath(path))
 
   def deltaEdges(spark: SparkSession, path: String): DataFrame =
-    edgeRead(spark, path).filter(col("gen") >= 1)
-      .select(col("a_id"), col("b_id"))
+    deltasOf(CommitLog.snapshot(spark, path), path)
 
   def allEdges(spark: SparkSession, path: String): DataFrame =
-    edgeRead(spark, path).select(col("a_id"), col("b_id"))
+    CommitLog.snapshot(spark, path).read(path).select(col("a_id"), col("b_id"))
 
-  /** COMPACT: dedup edge rows across generations into gen 0 and fold
-    * every delta generation into the standing labels (the contracted
-    * CC + broadcast relabel — foldIntoComponents' machinery), so a
-    * post-compact incremental read (labels + zero deltas) serves the
-    * identical labels.  New standing nodes come from the `.txt` store
-    * (every doc ever ingested or refreshed), never from the source
-    * corpus.  Single-writer maintenance window assumed. */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val standing = standingLabels(spark, path).localCheckpoint()
-    val deltas = deltaEdges(spark, path).localCheckpoint()
-    val newNodes = spark.read.parquet(txtPath(path)).select(col("doc_id"))
+  private def deltasOf(snap: CommitLog.Snapshot, path: String): DataFrame =
+    snap.read(path).filter(col("gen") >= 1).select(col("a_id"), col("b_id"))
+
+  /** The compacted state of `snap`: (labels, edges) with every delta
+    * generation folded into the standing labels (the contracted CC +
+    * broadcast relabel — foldIntoComponents' machinery) and every edge
+    * row deduped into gen 0.  New standing nodes come from the `.txt`
+    * store (every doc ever ingested or refreshed), never from the
+    * source corpus. */
+  private def compacted(snap: CommitLog.Snapshot, path: String): (DataFrame, DataFrame) = {
+    val standing = snap.read(labelsPath(path))
+    val newNodes = snap.read(txtPath(path)).select(col("doc_id"))
       .join(standing.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    val folded = Dedup.foldIntoComponents(standing, newNodes, deltas)
-      .localCheckpoint()
-    val merged = allEdges(spark, path).distinct()
-      .withColumn("gen", lit(0)).localCheckpoint()
-    merged.write.mode("overwrite").partitionBy("gen").parquet(path)
-    folded.write.mode("overwrite").parquet(labelsPath(path))
+    (Dedup.foldIntoComponents(standing, newNodes, deltasOf(snap, path)),
+      snap.read(path).select(col("a_id"), col("b_id")).distinct().withColumn("gen", lit(0)))
   }
 
-  /** RETRACT — the delete verb on the GRAPH rung (round 10, extending
-    * VERDICT-r09 ask #1 to the member whose derived state is not a
-    * sum: CC labels).  Removing documents can SPLIT components (a
-    * removed doc may be the bridge holding one together) and can
-    * change a surviving component's canonical min-id label — neither
-    * is expressible as a delta fold, so the honest contract is a
+  /** COMPACT: one transaction replacing the edges and the labels with
+    * their compacted state, so a post-compact incremental read (labels
+    * + zero deltas) serves the identical labels.  Single-writer
+    * maintenance window assumed. */
+  def compact(spark: SparkSession, path: String): Unit = {
+    val snap = CommitLog.snapshot(spark, path)
+    val (labels, edges) = compacted(snap, path)
+    CommitLog.transaction(spark, path) { t =>
+      t.replace(edges, path, Seq("gen"))
+      t.replace(labels, labelsPath(path))
+      StreamTwin.compactIds(snap, t, path)
+    }
+  }
+
+  /** RETRACT — the delete verb on the GRAPH rung, where the derived
+    * state is not a sum but CC labels.  Removing documents can SPLIT
+    * components (a removed doc may be the bridge holding one together)
+    * and can change a surviving component's canonical min-id label —
+    * neither is expressible as a delta fold, so the contract is a
     * PRUNED RECOMPUTE: only components that CONTAIN a removed doc
     * re-run CC (over their surviving members and surviving edges);
     * every untouched component's labels pass through unread.  The
-    * standing indexes purge by anti-join (each row depends only on
-    * its own doc — the MinHashWarehouse rung), so later refreshes
-    * probe exactly the survivor corpus.  Contract, spec-pinned:
-    * labels-after-retract == full CC recompute over corpus ∖ removed,
-    * row-for-row.
+    * standing indexes drop the removed docs' rows (each row depends
+    * only on its own doc), so later refreshes probe exactly the
+    * survivor corpus.  Contract, spec-pinned: labels-after-retract ==
+    * full CC recompute over corpus ∖ removed, row-for-row.
     *
-    * Cost class: COMPACT-class maintenance (it begins by folding any
-    * outstanding delta generations so labels are current), with the
-    * re-CC itself pruned to O(affected components) — at production
-    * dup rates components are tiny, so the re-CC is O(removed), and
-    * the linear piece is the same anti-join rewrite every compact
-    * already pays.  Single-writer maintenance window assumed. */
+    * One transaction over every part.  Cost class: COMPACT-class
+    * maintenance (it starts from the compacted state, so outstanding
+    * delta generations are folded), with the re-CC itself pruned to
+    * O(affected components) — at production dup rates components are
+    * tiny, so the re-CC is O(removed).  Single-writer maintenance
+    * window assumed. */
   def retract(spark: SparkSession, removedIds: DataFrame, path: String): Unit = {
-    if (deltaEdges(spark, path).limit(1).count() > 0) compact(spark, path)
-    val removed = removedIds.select(col("doc_id")).distinct().localCheckpoint()
-    val labels = standingLabels(spark, path).localCheckpoint()
+    val snap = CommitLog.snapshot(spark, path)
+    val (compactLabels, compactEdges) = compacted(snap, path)
+    val removed = removedIds.select(col("doc_id")).distinct()
+      .localCheckpoint() // shared by every part's anti-join
+    val labels = compactLabels.localCheckpoint() // shared by affected, survivors and the pass-through
     val affected = labels.join(removed, Seq("doc_id"), "left_semi")
-      .select(col("group_id")).distinct().localCheckpoint()
+      .select(col("group_id")).distinct()
+      .localCheckpoint() // shared by the survivors, the affected edges and the pass-through
     val survivorsInAffected = labels
       .join(affected, Seq("group_id"), "left_semi")
       .join(removed, Seq("doc_id"), "left_anti")
       .select(col("doc_id"))
     // surviving edges of affected components: endpoints share a
     // component, so membership checks via a_id's standing label
-    val edges = allEdges(spark, path)
+    val edges = compactEdges
       .join(removed.select(col("doc_id").as("a_id")), Seq("a_id"), "left_anti")
       .join(removed.select(col("doc_id").as("b_id")), Seq("b_id"), "left_anti")
-      .localCheckpoint()
+      .select(col("a_id"), col("b_id"), col("gen"))
+      .localCheckpoint() // shared by the affected edges and the edge part
     val affectedEdges = edges
       .join(labels.select(col("doc_id").as("a_id"), col("group_id")), Seq("a_id"))
       .join(affected, Seq("group_id"), "left_semi")
       .select(col("a_id"), col("b_id"))
     val relabeled = Dedup.connectedComponents(survivorsInAffected, affectedEdges)
-    val folded = labels.join(affected, Seq("group_id"), "left_anti")
-      .select(col("doc_id"), col("group_id"))
-      .union(relabeled.select(col("doc_id"), col("group_id")))
-      .localCheckpoint()
-    folded.write.mode("overwrite").parquet(labelsPath(path))
-    edges.withColumn("gen", lit(0))
-      .write.mode("overwrite").partitionBy("gen").parquet(path)
-    // purge the probe-side indexes so later refreshes see survivors
-    // only (per-doc rows — the anti-join rung; .mh via its own verbs)
-    MinHashWarehouse.retract(removed, mhPath(path))
-    MinHashWarehouse.compact(spark, mhPath(path))
-    Seq(txtPath(path), pfxPath(path), starvedPath(path)).foreach { p =>
-      val pruned = spark.read.parquet(p)
-        .join(removed, Seq("doc_id"), "left_anti").localCheckpoint()
-      pruned.write.mode("overwrite").parquet(p)
+    CommitLog.transaction(spark, path) { t =>
+      t.replace(edges, path, Seq("gen"))
+      t.replace(labels.join(affected, Seq("group_id"), "left_anti")
+        .select(col("doc_id"), col("group_id"))
+        .union(relabeled.select(col("doc_id"), col("group_id"))), labelsPath(path))
+      (Seq(txtPath(path), pfxPath(path), starvedPath(path)).map(_ -> Nil) ++
+          MinHashWarehouse.parts(mhPath(path))).foreach { case (part, pcols) =>
+        t.replace(snap.read(part).join(removed, Seq("doc_id"), "left_anti"), part, pcols)
+      }
+      StreamTwin.compactIds(snap, t, path)
     }
   }
 
@@ -495,72 +419,19 @@ object EdgeWarehouse {
 
   /** The refresh's ONLINE twin — the crawl stream maintaining the
     * edge warehouse in flight: each arriving micro-batch of (doc_id,
-    * text) docs probes the standing indexes, appends its delta
-    * generation, and folds itself into the indexes inside
-    * foreachBatch.  The batching-invariance argument: a pair's edge
-    * is emitted exactly once — in the generation of its LATER
-    * endpoint, whose probe sees the earlier endpoint already folded
-    * in — so ANY split of the same docs into micro-batches reaches
-    * the identical edge SET (EdgeWarehouseSpec drives a MemoryStream
-    * in two batches and pins equality with the one-shot
+    * text) docs runs the refresh transaction, which commits the engine
+    * batch id with the data (`StreamTwin.exactlyOnce`), so a redelivered
+    * committed batch folds nothing.  The batching-invariance argument:
+    * a pair's edge is emitted exactly once — in the generation of its
+    * LATER endpoint, whose probe sees the earlier endpoint already
+    * folded in — so ANY split of the same docs into micro-batches
+    * reaches the identical edge SET (EdgeWarehouseSpec drives a
+    * MemoryStream in two batches and pins equality with the one-shot
     * nearDupEdges).  Labels fold at compact cadence, exactly like the
-    * batch loop.  Micro-batches are processed serially by the
-    * streaming engine, which is the single-writer window every
-    * warehouse in the matrix assumes.
-    *
-    * EXACTLY-ONCE under foreachBatch's at-least-once delivery (the
-    * ADVICE-r10 guard-cost cure, re-done TWICE after review —
-    * disabling the guard traded loud failure for silent double-ingest
-    * on engine replay; a single rewritten marker file both lost the
-    * marker in its delete-rename window and silently dropped fresh
-    * batches when a restart without the same checkpoint reset engine
-    * ids to 0): the warehouse records each folded batchId as its OWN
-    * marker file in `<path>.batchid/` (temp + atomic rename per file
-    * — the CommitLog primitive; since round 12 BatchMarkers.record
-    * also prunes markers below the new max AFTER the max lands, so
-    * the value lastBatchId reads is never in a delete window),
-    * and the stream pins its checkpoint NEXT TO THE WAREHOUSE
-    * (`<path>.checkpoint`), so engine batch ids stay monotonic in the
-    * one lineage the marker is meaningful for.  A REPLAYED id ≤
-    * marker skips before any Spark action (the marker read is the
-    * FIRST operand) — the cheap per-trigger check ADVICE asked for.
-    * A batch with id > marker runs the full refresh WITH the re-crawl
-    * guard ON, so the one residual window — crash between the `.txt`
-    * commit and the marker write — still FAILS LOUDLY at the guard on
-    * re-delivery instead of corrupting (operator resolution: record
-    * the id; the batch is committed).  EdgeWarehouseSpec drives a
-    * replayed micro-batch and pins the no-double-ingest claim. */
-  def streamingRefresh(docs: DataFrame, path: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    // lineage guard BEFORE the query launches (ADVICE-r11 #4): a
-    // checkpoint deleted/recreated while the batchid markers survive
-    // would restart engine ids at 0 and silently skip every fresh
-    // batch — BatchMarkers stamps a shared run id into both dirs and
-    // fails loudly on any state the markers cannot be trusted in
-    graft.sources.BatchMarkers.ensureLineage(docs.sparkSession,
-      s"$path.checkpoint", batchIdPath(path))
-    docs.writeStream.outputMode("append")
-      .option("checkpointLocation", s"$path.checkpoint")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // marker check FIRST: a replayed id must skip without running
-        // any Spark action (isEmpty would execute the batch's plan)
-        if (id > lastBatchId(batch.sparkSession, path) && !batch.isEmpty) {
-          refresh(batch.sparkSession, batch, path)
-          writeBatchId(batch.sparkSession, path, id)
-        }
-      }
-      .start()
-  }
-
-  private def batchIdPath(p: String) = s"$p.batchid"
-
-  // delegated to the shared BatchMarkers mechanics (round 12 — one
-  // implementation for every streaming twin; Bm25Warehouse rides it
-  // too).  The thin wrappers keep this member's path naming local.
-  private[graft] def lastBatchId(spark: SparkSession, path: String): Long =
-    graft.sources.BatchMarkers.lastBatchId(spark, batchIdPath(path))
-
-  private[graft] def writeBatchId(spark: SparkSession, path: String, id: Long): Unit =
-    graft.sources.BatchMarkers.record(spark, batchIdPath(path), id)
+    * batch loop. */
+  def streamingRefresh(docs: DataFrame, path: String): org.apache.spark.sql.streaming.StreamingQuery =
+    StreamTwin.exactlyOnce(docs, path, checkpointEvery = 32)(
+      (s, batch, id) => { refreshTxn(s, batch, path, batchId = Some(id)); () })
 
   /** The once-per-JVM two-generation build for the registered
     * incremental query: ingest the base split, refresh the incoming

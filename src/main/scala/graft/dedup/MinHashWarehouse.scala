@@ -22,6 +22,10 @@ import graft.sources.{CommitLog, Tables, Tombstones}
   *    (8 B each) that exact verification intersects;
   *  - `<path>` (index): (doc_id, bands, bucket) partitioned by
   *    `band` — the banded rows the incoming batch equi-joins.
+  * Ingest and refresh also come in an `…In` form that writes
+  * inside a caller's transaction, and the probe in a form that reads
+  * through a caller's snapshot, so another member can keep the index
+  * as parts of its own base (EdgeWarehouse's J channel).
   *
   * Probe shape at scale: incoming docs sign once (native MinHashSig,
   * localCheckpoint — bands and shingle hashes are leaves, never
@@ -74,6 +78,15 @@ object MinHashWarehouse {
     // ×Bands re-evaluation trap (see minhashBandCandidates)
     signedCols(docs).localCheckpoint()
 
+  private def banded(signedDocs: DataFrame): DataFrame =
+    signedDocs.select(col("doc_id"), col("bands"),
+      posexplode(col("bands")).as(Seq("band", "bucket")))
+
+  /** The index parts with their partition columns; every row of each
+    * is keyed by `doc_id`. */
+  private[dedup] def parts(path: String): Seq[(String, Seq[String])] =
+    Seq((docsPath(path), Nil), (path, Seq("band")))
+
   /** Ingest: sign the historical corpus once, write the primary store
     * and the banded index. */
   def materialize(spark: SparkSession, dir: String, path: String): Unit =
@@ -84,20 +97,16 @@ object MinHashWarehouse {
   def materializeFrom(docs: DataFrame, path: String): Unit =
     materializeRaw(docs.filter(isBase), path)
 
-  /** Unfiltered ingest over an arbitrary standing frame — the
-    * EdgeWarehouse maintenance loop's J-channel index (its standing
-    * set is defined by ITS ingest/refresh history, not the mod-10
-    * test split). */
-  private[dedup] def materializeAll(docs: DataFrame, path: String): Unit =
-    materializeRaw(docs, path)
+  private def materializeRaw(docs: DataFrame, path: String): Unit =
+    CommitLog.transaction(docs.sparkSession, path)(materializeIn(_, docs, path))
 
-  private def materializeRaw(docs: DataFrame, path: String): Unit = {
+  /** Ingest every row of `docs` inside the caller's transaction `t`:
+    * sign once, replace the store and the banded index at `path`
+    * (a part of `t`'s base). */
+  private[dedup] def materializeIn(t: CommitLog.Txn, docs: DataFrame, path: String): Unit = {
     val base = signed(docs)
-    CommitLog.transaction(base.sparkSession, path) { t =>
-      t.replace(base, docsPath(path))
-      t.replace(base.select(col("doc_id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "bucket"))), path, Seq("band"))
-    }
+    t.replace(base, docsPath(path))
+    t.replace(banded(base), path, Seq("band"))
   }
 
   /** REFRESH — the missing last step of the crawl loop: fold an
@@ -110,13 +119,14 @@ object MinHashWarehouse {
     * doc_ids must be new to the corpus (the crawl contract: survivors
     * get fresh ids), exactly as a production ingest keyed by content
     * hash would guarantee. */
-  def refresh(batch: DataFrame, path: String): Unit = {
+  def refresh(batch: DataFrame, path: String): Unit =
+    CommitLog.transaction(batch.sparkSession, path)(refreshIn(_, batch, path))
+
+  /** The refresh body inside the caller's transaction `t`. */
+  private[dedup] def refreshIn(t: CommitLog.Txn, batch: DataFrame, path: String): Unit = {
     val b = signed(batch)
-    CommitLog.transaction(b.sparkSession, path) { t =>
-      t.append(b, docsPath(path))
-      t.append(b.select(col("doc_id"), col("bands"),
-        posexplode(col("bands")).as(Seq("band", "bucket"))), path, Seq("band"))
-    }
+    t.append(b, docsPath(path))
+    t.append(banded(b), path, Seq("band"))
   }
 
   /** RETRACT — remove docs from the standing index: append their ids
@@ -140,7 +150,7 @@ object MinHashWarehouse {
     * amortizing the retract verb's O(removed) appends; physical
     * reclaim = CommitLog.vacuum at the retention cadence. */
   def compact(spark: SparkSession, path: String): Unit =
-    Tomb.compact(spark, path, Seq((docsPath(path), Nil), (path, Seq("band"))))
+    Tomb.compact(spark, path, parts(path))
 
   /** The retraction build for the registered `d_dedup_retracted`
     * query: index the base split, then retract every base doc with
@@ -205,13 +215,16 @@ object MinHashWarehouse {
     probeAgainst(spark, docs.filter(!isBase), path)
 
   /** Dedup an arbitrary batch frame against the index at `path`. */
-  private[graft] def probeAgainst(spark: SparkSession, batch: DataFrame, path: String): DataFrame = {
-    // ONE snapshot pins index + docs + tombstones — a refresh
-    // committing (or dying) mid-probe cannot tear the view
-    val snap = CommitLog.snapshot(spark, path)
+  private[graft] def probeAgainst(spark: SparkSession, batch: DataFrame, path: String): DataFrame =
+    probeWith(CommitLog.snapshot(spark, path), batch, path)
+
+  /** The probe through the caller's snapshot: ONE snapshot pins index
+    * + docs + tombstones, so a refresh committing (or dying) mid-probe
+    * cannot tear the view. */
+  private[graft] def probeWith(snap: CommitLog.Snapshot, batch: DataFrame,
+      path: String): DataFrame =
     probeCore(batch, snap.read(path),
       snap.read(docsPath(path)), dropTombstoned(snap, _, path))
-  }
 
   /** The probe body over EXPLICIT index/docs frames — shared by the
     * standing probe and the snapshot (as-of) probe, so the two read
@@ -219,9 +232,7 @@ object MinHashWarehouse {
   private def probeCore(batch: DataFrame, idx: DataFrame,
       docsStore: DataFrame, dropTomb: DataFrame => DataFrame): DataFrame = {
     val in = signed(batch)
-    val inBanded = in.select(col("doc_id"), col("bands"),
-      posexplode(col("bands")).as(Seq("band", "bucket")))
-    val cand = dropTomb(inBanded.as("a")
+    val cand = dropTomb(banded(in).as("a")
       .join(idx.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
           col("a.band") === graft.functions.FirstEqualIndex(col("a.bands"), col("b.bands")))

@@ -29,8 +29,6 @@ object Exact {
   def sqlSumx(expr: String): String =
     s"CAST(sum(CAST($expr AS DECIMAL(30,6))) AS DOUBLE)"
 
-  def sqlAvgx(expr: String): String = s"${sqlSumx(expr)}/count(*)"
-
   /** Bit-exact mirror of DuckDB's round(DOUBLE, n) — std::round(x·10ⁿ)/10ⁿ,
     * half away from zero on the BINARY value.  Spark's own `round` goes
     * through BigDecimal.valueOf(Double.toString(x)) (decimal shortest-

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.util.sketch.BloomFilter
 
 import graft.functions.TextFunctions.words
-import graft.sources.Tables
+import graft.sources.{CommitLog, Tables}
 
 /** The decontamination Bloom filter AT REST — eval-set membership as
   * a warehouse member, the production shape of d_bloom_decontaminate:
@@ -14,6 +14,10 @@ import graft.sources.Tables
   * eval docs are never rescanned at ingest (plan: the probe reads a
   * KB-scale bytes row, the filter rides the scan as a codegen'd
   * BloomContains literal).
+  *
+  * Layout: one CommitLog base at `path` holding one (bf, n_grams)
+  * row per generation; ingest, refresh and compact are each one
+  * transaction, and every read goes through a snapshot.
   *
   * Refresh contract: Bloom bit arrays built at the SAME
   * (capacity, fpp) are compatible, and setting bits is independent
@@ -33,7 +37,7 @@ import graft.sources.Tables
   * RETRACTION CONTRACT: rebuild-only.  Bitwise OR has no inverse — a
   * set bit cannot be attributed to one item, so removing an eval doc
   * cannot subtract from the array.  Deleting an eval generation means
-  * dropping its delta file and re-OR-folding the rest (cheap: the
+  * dropping its delta row and re-OR-folding the rest (cheap: the
   * generations are already separate rows); removing items WITHIN a
   * generation means rebuilding that generation's filter from its
   * surviving docs.  This is the honest bottom rung of the retraction
@@ -55,8 +59,8 @@ object BloomWarehouse {
     * Capacity, and a silently over-filled filter degrades toward
     * all-positives with no false-negative signal to catch it — so the
     * count is recorded next to the bytes and enforced at every
-    * refresh/compact (a review finding: over-capacity must be an
-    * ERROR, not quiet over-flagging). */
+    * refresh/compact: over-capacity is an ERROR, not quiet
+    * over-flagging. */
   private[graft] def deltaFilter(evalDocs: DataFrame, n: Int): (BloomFilter, Long) = {
     val grams = evalDocs
       .select(explode(graft.functions.GramHashes(words(col("text")), n)).as("hsh"))
@@ -71,19 +75,18 @@ object BloomWarehouse {
     bos.toByteArray
   }
 
-  private def writeRow(spark: SparkSession, bf: BloomFilter, nGrams: Long,
-      path: String, mode: String): Unit = {
+  /** One generation's row: the filter bytes and its insertion count. */
+  private def rowOf(spark: SparkSession, bf: BloomFilter, nGrams: Long): DataFrame = {
     import spark.implicits._
-    Seq((bytesOf(bf), nGrams)).toDF("bf", "n_grams")
-      .repartition(1).write.mode(mode).parquet(path)
+    Seq((bytesOf(bf), nGrams)).toDF("bf", "n_grams").repartition(1)
   }
 
   /** Generations' recorded insertion counts summed — an UPPER bound on
     * the union's distinct grams (cross-generation repeats double-count;
     * Bloom insertion of a present item is a no-op, so the bound is
     * conservative in the safe direction for the FP guarantee). */
-  private def cumulativeGrams(spark: SparkSession, path: String): Long =
-    spark.read.parquet(path).agg(sum(col("n_grams"))).head().getLong(0)
+  private def cumulativeGrams(snap: CommitLog.Snapshot, path: String): Long =
+    snap.read(path).agg(sum(col("n_grams"))).head().getLong(0)
 
   private def assertUnderCapacity(total: Long): Unit =
     require(total <= Capacity,
@@ -96,7 +99,7 @@ object BloomWarehouse {
       n: Int = 8): Unit = {
     val (bf, cnt) = deltaFilter(evalDocs, n)
     assertUnderCapacity(cnt)
-    writeRow(spark, bf, cnt, path, "overwrite")
+    CommitLog.transaction(spark, path)(_.replace(rowOf(spark, bf, cnt), path))
   }
 
   /** REFRESH — append the new eval generation's delta filter.
@@ -105,15 +108,18 @@ object BloomWarehouse {
   def refresh(spark: SparkSession, batch: DataFrame, path: String,
       n: Int = 8): Unit = {
     val (bf, cnt) = deltaFilter(batch, n)
-    assertUnderCapacity(cumulativeGrams(spark, path) + cnt)
-    writeRow(spark, bf, cnt, path, "append")
+    assertUnderCapacity(cumulativeGrams(CommitLog.snapshot(spark, path), path) + cnt)
+    CommitLog.transaction(spark, path)(_.append(rowOf(spark, bf, cnt), path))
   }
 
   /** The probe-side OR-fold: read every generation's bytes (KB-scale
     * driver metadata — the codebook/centroid collect class) and merge.
     * Associativity makes any generation split reach the same array. */
   private[graft] def mergedFilter(spark: SparkSession, path: String): BloomFilter =
-    spark.read.parquet(path).collect()
+    mergedOf(CommitLog.snapshot(spark, path), path)
+
+  private def mergedOf(snap: CommitLog.Snapshot, path: String): BloomFilter =
+    snap.read(path).collect()
       .map(r => BloomFilter.readFrom(
         new java.io.ByteArrayInputStream(r.getAs[Array[Byte]]("bf"))))
       .reduce { (a, b) => a.mergeInPlace(b); a }
@@ -124,10 +130,11 @@ object BloomWarehouse {
     * so a compact over an over-filled index fails like a refresh
     * would. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val total = cumulativeGrams(spark, path)
+    val snap = CommitLog.snapshot(spark, path)
+    val total = cumulativeGrams(snap, path)
     assertUnderCapacity(total)
-    val merged = mergedFilter(spark, path)
-    writeRow(spark, merged, total, path, "overwrite")
+    CommitLog.transaction(spark, path)(
+      _.replace(rowOf(spark, mergedOf(snap, path), total), path))
   }
 
   /** Registered `d_bloom_decontaminate_probe`: the TRAIN split probed

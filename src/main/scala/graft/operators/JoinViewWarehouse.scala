@@ -428,15 +428,9 @@ object JoinViewWarehouse {
       col("op").cast("long").as("op"))
 
   /** Fold one order-change batch: view += Σ op · (row ⋈ L_standing),
-    * side state += the op-signed rows.  The explicit decimal cast
-    * pins the view-delta schema to the refresh/retract writes'. */
-  def refreshOrderChanges(spark: SparkSession, batch: DataFrame, path: String): Unit = {
-    val done = orderChangesTxn(spark, batch, path, batchId = None)
-    assert(done, "unreachable: un-id'd refreshes never skip")
-  }
-
-  /** The order-change fold's transaction body — view deltas + side
-    * rows + the optional stream batch id in ONE atomic commit. */
+    * side state += the op-signed rows, and the optional stream batch
+    * id, in one transaction.  The explicit decimal cast pins the
+    * view-delta schema to the refresh/retract writes'. */
   private[graft] def orderChangesTxn(spark: SparkSession, batch: DataFrame,
       path: String, batchId: Option[Long]): Boolean = {
     // dup-check before any Spark work; one snapshot serves check +

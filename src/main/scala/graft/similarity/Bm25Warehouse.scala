@@ -298,9 +298,8 @@ object Bm25Warehouse {
     *  - the txn-embedded id closes the residual window (crash between
     *    the commit marker and the external batchid record): on
     *    redelivery the committed `.stream` part shows the id and the
-    *    verb folds nothing — this is STRONGER than EdgeWarehouse's
-    *    guard, which can only fail loudly there, because here the id
-    *    and the data commit in the same atomic marker;
+    *    verb folds nothing, because the id and the data commit in
+    *    the same atomic marker;
     *  - the lineage guard fails the STREAM START loudly when the
     *    checkpoint and the markers diverge.
     * Register-free contract: any batching folds to the same index a

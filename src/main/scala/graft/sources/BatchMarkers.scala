@@ -4,10 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The shared EXACTLY-ONCE mechanics for foreachBatch maintenance
-  * loops — extracted from EdgeWarehouse (round 11) so every streaming
-  * twin that folds batches into a warehouse uses ONE implementation
-  * (VERDICT-r11 ask #6 wires Bm25Warehouse onto it; EdgeWarehouse
-  * delegates).
+  * loops: every streaming twin that folds batches into a warehouse
+  * uses this ONE implementation (through `StreamTwin.exactlyOnce`).
   *
   * foreachBatch is AT-LEAST-ONCE: after a crash the engine re-delivers
   * the last unacknowledged micro-batch with the same batchId.  The
@@ -21,7 +19,7 @@ import org.apache.spark.sql.SparkSession
   * a missing max (this replaces the earlier strictly-append-only
   * form, whose directory grew one file per micro-batch ever).
   *
-  * LINEAGE GUARD (ADVICE-r11 #4): the marker ids are only meaningful
+  * LINEAGE GUARD: the marker ids are only meaningful
   * in the ONE checkpoint lineage that produced them — if the stream's
   * checkpoint directory is deleted or recreated while the markers
   * survive, engine batch ids restart at 0 and every fresh batch would
@@ -33,8 +31,8 @@ import org.apache.spark.sql.SparkSession
   * markers cannot be trusted in:
   *  - both stamps present and equal  -> proceed (the normal restart);
   *  - both absent, no markers        -> fresh lineage: stamp both;
-  *  - checkpoint stamp lost but markers survive (the ADVICE scenario,
-  *    and also legacy unstamped markers) -> THROW — the operator must
+  *  - checkpoint stamp lost but markers survive (also legacy
+  *    unstamped markers) -> THROW — the operator must
   *    either restore the checkpoint or clear the marker directory;
   *  - marker stamp lost but checkpoint survives: if the marker dir is
   *    EMPTY of ids (markers wiped in full) re-stamp and proceed —
@@ -42,7 +40,7 @@ import org.apache.spark.sql.SparkSession
   *    member's own loud guards (e.g. Edge's re-crawl check) instead
   *    of silently skipping; if .done ids SURVIVE without their stamp
   *    (partial restore) those ids belong to an unknown lineage ->
-  *    THROW (review r12).
+  *    THROW.
   */
 object BatchMarkers {
 
@@ -68,7 +66,7 @@ object BatchMarkers {
     * markers below it — the new max lands first, so `lastBatchId`
     * never observes a gap, and the directory stays O(1) files instead
     * of one per micro-batch ever (the same unbounded-listing growth
-    * CommitLog.checkpoint kills for the commit log; review r12).
+    * CommitLog.checkpoint kills for the commit log).
     * Engine batch ids are monotonic within the lineage the guard
     * pins, so a pruned lower id can never be needed again. */
   def record(spark: SparkSession, markerDir: String, id: Long): Unit = {
@@ -136,7 +134,7 @@ object BatchMarkers {
         // stream starts) — if batch ids survive without their stamp
         // (partial restore, selective copy), those ids belong to an
         // UNKNOWN lineage and adopting them would re-enable the silent
-        // skip this guard exists to prevent (review r12)
+        // skip this guard exists to prevent
         if (lastBatchId(spark, markerDir) >= 0)
           throw new IllegalStateException(
             s"BatchMarkers: marker directory $markerDir holds batch ids but " +

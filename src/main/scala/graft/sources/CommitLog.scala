@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, max, min}
 import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, TimestampNTZType}
 
-/** The ATOMIC MULTI-FILE COMMIT protocol for warehouse maintenance —
-  * the generalization of EdgeWarehouse's commit-marker (round 10) to
-  * every member whose refresh/retract touches more than one file.
+/** The ATOMIC MULTI-FILE COMMIT protocol for warehouse maintenance:
+  * every member whose refresh/retract touches more than one file
+  * commits here.
   *
   * The problem it removes: a warehouse member's state spans sibling
   * parquet "parts" (Bm25: postings + df + stats; the join view:
@@ -50,8 +50,8 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, 
   *          probe pins the committed-log fold once and reads only
   *          those directories, so a refresh landing mid-probe (or
   *          crashing mid-flight) cannot tear the probe's view across
-  *          parts — the VERDICT-r10 ask #3 contract, deleting the
-  *          no-concurrent-probe caveat (writers still serialize:
+  *          parts, so probes need no quiet window (writers still
+  *          serialize:
   *          single-WRITER stays the matrix contract, now with honest
   *          crash semantics instead of a no-crash assumption).
   *
@@ -68,7 +68,7 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, 
   *    BalanceWarehouse's compactHorizon contract: asOf(g ≥ h) is
   *    bit-invariant, asOf(g < h) becomes EMPTY (history before the
   *    horizon is physically reclaimable), and — better than the
-  *    round-9 directory-partition form — later generations' files are
+  *    directory-partition form — later generations' files are
   *    NOT rewritten.
   *
   * A snapshot folds the log rows in (sortGen, seq) order, where
@@ -85,7 +85,7 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, 
   *   fold is EMPTY, never a read of reclaimed directories.)
   *
   * As-of SNAPSHOT READS fall out of the same fold with a generation
-  * cut — the BalanceWarehouse gen-dir log (round 10) re-based on the
+  * cut — the BalanceWarehouse gen-dir log re-based on the
   * shared protocol, so "the warehouse as of generation g" is now a
   * verb EVERY member gets by routing its writes here.
   *
@@ -100,7 +100,7 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, 
   * directory listing plus a few ~100 B reads, O(transactions ever),
   * metadata-scale by construction.
   *
-  * DATA SKIPPING (round 12): a verb may declare `statsCols` — exact
+  * DATA SKIPPING: a verb may declare `statsCols` — exact
   * per-generation min/max of those columns are computed INSIDE the
   * write job (an observe node — zero extra pass) and recorded in the
   * commit entry.  `Snapshot.readWhere` then drops generations whose
@@ -120,18 +120,11 @@ import org.apache.spark.sql.types.{DataType, DateType, NumericType, StringType, 
   * deletes the superseded ones, bounding snapshot I/O at streaming
   * cadence (the Delta checkpoint.parquet move).
   *
-  * ONE DELIBERATE EXCEPTION rides its own protocol: EdgeWarehouse
-  * (dedup/EdgeWarehouse.scala) keeps its `.txt`-store-as-commit-marker
-  * refresh.  The reason is structural, not historical: (a) its marker
-  * is not metadata — the `.txt` rows ARE the corpus-membership table
-  * the re-crawl guard semi-joins, so "marker lands last" already gives
-  * commit semantics with a data part as the marker; and (b) its
-  * J-channel index lives under MinHashWarehouse's OWN CommitLog base
-  * (a transaction cannot span two bases), so even a full migration
-  * would leave a cross-base crash window whose resume semantics are
-  * exactly Edge's documented duplicate-erasure contract — migrating
-  * would not delete that clause, only restate it.  Everything else in
-  * the matrix commits here.
+  * A transaction spans exactly one base.  A member that embeds another
+  * member's parts (EdgeWarehouse's J-channel MinHash index at
+  * `<edge>.mh`) writes them as parts of its own base through the
+  * embedded member's in-transaction verbs, so one verb is still one
+  * atomic commit.
   */
 object CommitLog {
 
@@ -144,13 +137,13 @@ object CommitLog {
     extends RuntimeException("injected crash (test only)")
   @volatile private[graft] var crashAfterWrites: Int = Int.MaxValue
   @volatile private[graft] var crashBeforeCommit: Boolean = false
-  // the ADVICE-r11 window: marker temp file fully written, rename not
+  // the window where the marker temp file is fully written, rename not
   // yet issued — the torn-marker crash the name filter must survive
   @volatile private[graft] var crashBeforeMarkerRename: Boolean = false
   // checkpoint's widest window: its file renamed into place, the
   // superseded markers not yet deleted (duplicate-entry state)
   @volatile private[graft] var crashAfterMarkerRename: Boolean = false
-  // test-only RACE injection (round 15): runs between the fence's
+  // test-only RACE injection: runs between the fence's
   // exists-check and the publish step — the exact window where a
   // racing writer's marker can land.  CommitLogSpec uses it to commit
   // a same-sequence marker in that window and assert the loser is
@@ -191,7 +184,7 @@ object CommitLog {
     * generation that holds matching rows — silently wrong results.
     * Callers wanting instant stats pass unix micros (numeric);
     * TimestampNTZ is wall-clock and renders tz-independently, so its
-    * lexical contract holds (review r12b). */
+    * lexical contract holds. */
   private def statKindOf(dt: DataType): Option[String] = dt match {
     case _: NumericType => Some("num")
     case DateType | StringType | TimestampNTZType => Some("lex")
@@ -235,7 +228,7 @@ object CommitLog {
       // limit -1: an empty-string min/max encodes to an EMPTY b64
       // token, and the default split drops trailing empties — the
       // 4th field must survive or one all-empty-string batch would
-      // poison every later parse of the log (review r12b)
+      // poison every later parse of the log
       val p = item.split("~", -1)
       p(0) -> ColStats(p(1), b64d(p(2)), b64d(p(3)))
     }.toMap
@@ -283,8 +276,8 @@ object CommitLog {
       * a rebase drops generations by that position — so a second
       * rebase whose horizon lands between an earlier rebase's horizon
       * and its txn gen still supersedes the earlier rebase dir
-      * (ADVICE-r11 #2: comparing physical gens there kept both dirs
-      * live and double-counted every row up to the earlier horizon).
+      * (comparing physical gens there would keep both dirs
+      * live and double-count every row up to the earlier horizon).
       * The map fold is idempotent under duplicate entries, which is
       * what lets `checkpoint` coexist transiently with the markers it
       * supersedes. */
@@ -303,7 +296,7 @@ object CommitLog {
       * directory, logically the OLDEST state (everything folded up to
       * the horizon) — so consumers that need "the newest live
       * generation" must order by position, not physical gen
-      * (latestGen; review r14 — the tokenizer retention verb's empty
+      * (latestGen: the tokenizer retention verb's empty
       * rebase dir would otherwise shadow the surviving head version). */
     private[sources] def livePositioned(part: String, asOfGen: Long)
         : Seq[(Long, Long, Map[String, ColStats])] = {
@@ -362,7 +355,7 @@ object CommitLog {
       * zero-row version is still the head (its rows cannot vote), and
       * a retention rebase dir — physically the newest directory but
       * logically the oldest state — can never shadow the surviving
-      * head version (review r14). */
+      * head version. */
     def latestGen(part: String, asOfGen: Long = Long.MaxValue): Option[Long] =
       livePositioned(part, asOfGen).lastOption.map(_._1)
 
@@ -441,8 +434,8 @@ object CommitLog {
 
   // ONLY canonical names are the log: the temp file a crashed writer
   // left behind (`_tmp-…`) must never be read as a commit — it was
-  // never renamed, so its transaction never happened (ADVICE-r11 #1:
-  // an endsWith(".commit") filter also matched the temp name, making
+  // never renamed, so its transaction never happened (an
+  // endsWith(".commit") filter would also match the temp name, making
   // a never-committed txn visible and torn temp files a parse error)
   private val MarkerRe = """\d{20}\.(commit|checkpoint)""".r
   private def isMarkerName(name: String): Boolean =
@@ -450,7 +443,7 @@ object CommitLog {
   private def seqOfMarker(name: String): Long =
     name.takeWhile(_ != '.').toLong
 
-  /** The WRITER FENCE (VERDICT-r14 ask #5): the protocol's contract is
+  /** The WRITER FENCE: the protocol's contract is
     * single-writer maintenance windows, and this commit path turns a
     * violation from silent data loss into a LOUD abort.  On HDFS a
     * rename onto an existing name returns false (already loud), but on
@@ -467,7 +460,7 @@ object CommitLog {
     *      what this writer wrote — a racer's rename landing between (1)
     *      and our rename is detected as foreign content (loud abort;
     *      the racer's commit stands: exactly one wins).
-    * Honesty notes (review r15 — the fence's limits, stated exactly):
+    * Honesty notes (the fence's limits, stated exactly):
     *  - the fence arbitrates the MARKER.  Two writers interleaving in
     *    the same microsecond window can still cross-write each other's
     *    UNCOMMITTED gen-N data dirs before either commits (the dirs
@@ -578,7 +571,7 @@ object CommitLog {
     * vanished file would silently DROP its transactions, so the read
     * RETRIES the whole listing instead; the checkpoint file is in
     * place before any delete happens, so the retry's listing is
-    * complete (review r12 — the lock-free concurrent-reader promise
+    * complete (the lock-free concurrent-reader promise
     * now survives log maintenance, not just commits). */
   def snapshot(spark: SparkSession, base: String): Snapshot = {
     var backoff = 0
@@ -587,7 +580,7 @@ object CommitLog {
       catch {
         case _: java.io.FileNotFoundException if backoff < 5 =>
           backoff += 1
-          // real backoff (review r12 second pass): the racing
+          // real backoff: the racing
           // checkpoint deletes its superseded markers one at a time,
           // so give its sweep time to finish — 10/20/40/80/160 ms
           // before the relist, vs six instant collisions
@@ -621,7 +614,7 @@ object CommitLog {
   /** Number of marker files the log currently holds — one driver FS
     * listing; the streaming twins trigger `checkpoint` off this count
     * (self-healing across skipped/replayed batches, unlike an
-    * id-divisibility schedule; review r12 second pass). */
+    * id-divisibility schedule). */
   def markerCount(spark: SparkSession, base: String): Int = {
     val dir = new Path(logPath(base))
     val f = fs(spark, logPath(base))
@@ -630,8 +623,7 @@ object CommitLog {
   }
 
   /** LOG CHECKPOINT — the fold-and-truncate verb that bounds
-    * snapshot cost (the Delta `checkpoint.parquet` move, VERDICT-r11
-    * ask #2): the whole committed fold is rewritten as ONE marker
+    * snapshot cost (the Delta `checkpoint.parquet` move): the whole committed fold is rewritten as ONE marker
     * file (same line format, entries verbatim with their original
     * seqs — the fold is order-insensitive by (sortGen, seq), so a
     * checkpoint changes NOTHING about any snapshot), then every
@@ -699,7 +691,7 @@ object CommitLog {
 
     private def write(df: DataFrame, part: String, partitionCols: Seq[String],
         statsCols: Seq[String]): Map[String, ColStats] = {
-      // writer fence, PRE-WRITE rung (VERDICT-r14 ask #5): if the
+      // writer fence, PRE-WRITE rung: if the
       // canonical marker for this txn's sequence already landed,
       // another writer committed "our" generation while this txn was
       // open — abort BEFORE overwriting its now-COMMITTED gen dirs
@@ -760,7 +752,7 @@ object CommitLog {
             // it would be prune-safe (statLt compares unparseable as
             // not-less, both directions) but statsMax could then SERVE
             // "NaN" as the part-wide max string and crash a caller's
-            // parser (ADVICE r12) — refuse at record time instead.
+            // parser — refuse at record time instead.
             case _ => None
           }
         }.toMap
@@ -871,8 +863,7 @@ object CommitLog {
     // crashed transaction whose FIRST-ever write touched a part with
     // no committed entry (e.g. the first append to a `.tomb` side
     // table) leaves a gen dir the log knows nothing about — sweeping
-    // dot-suffixed siblings of base reclaims those too (ADVICE-r11
-    // #3).  Scope is deliberately tight: exactly `base` and
+    // dot-suffixed siblings of base reclaims those too.  Scope is deliberately tight: exactly `base` and
     // `base.<suffix>` names (every part the matrix writes is one or
     // the other), never a sibling member that merely shares a name
     // prefix, and only `gen-N` subdirectories — the shape only this
@@ -881,16 +872,16 @@ object CommitLog {
     val parent = baseP.getParent
     val sweepParts: Seq[String] = {
       val fromLog = snap.entries.map(e => base + e.part)
-      // sibling DIRECTORIES only (review r12 second pass: files must
+      // sibling DIRECTORIES only (files must
       // neither enter the sweep nor masquerade as a nested log)
       val dirNames: Set[String] =
         if (parent == null || !f.exists(parent)) Set.empty
         else f.listStatus(parent).toSeq.filter(_.isDirectory)
           .map(_.getPath.getName).toSet
       // a dot-suffixed sibling with its OWN commit log is a NESTED
-      // CommitLog base (e.g. EdgeWarehouse's J-channel index at
-      // `<edge>.mh` with `<edge>.mh.commits`) — ITS root AND its own
-      // dot-suffixed parts (`<edge>.mh.docs`, `<edge>.mh.tomb`) are
+      // CommitLog base (e.g. an index at `<base>.mh` with
+      // `<base>.mh.commits`) — ITS root AND its own
+      // dot-suffixed parts (`<base>.mh.docs`, `<base>.mh.tomb`) are
       // governed by ITS log, and folding THIS log would compute
       // live = {} and delete committed data; only its own vacuum may
       // touch any of them.  (The base itself is exempt: `base.commits`
@@ -919,7 +910,7 @@ object CommitLog {
       }
     }
     // stale marker TEMP files a writer killed before its rename left
-    // behind (ADVICE-r11 #1's other half).  Safe under the protocol's
+    // behind.  Safe under the protocol's
     // single-writer window: vacuum is a maintenance verb, so no
     // commit is concurrently mid-rename.
     val logDir = new Path(logPath(base))

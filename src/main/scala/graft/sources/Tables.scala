@@ -47,12 +47,6 @@ final class Tables(val spark: SparkSession, val dir: String) {
   }
   def documents: DataFrame = table("documents")
   def embeddings: DataFrame = table("embeddings")
-
-  /** `events` with a `date` column — the per-day grain every dashboard
-    * rollup groups on (fcd materializes the same grain into its
-    * `dashboard` table, reference: src/collector/dashboard/collectDashboard.ts:23).
-    */
-  def eventsWithDate: DataFrame = events.withColumn("date", to_date(col("ts")))
 }
 
 object Tables {

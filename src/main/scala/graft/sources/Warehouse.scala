@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * of buckets lets Spark plan a SortMergeJoin with NO Exchange on
   * either side — at 100 TB that's the difference between re-shuffling
   * two fact tables per query and reading pre-partitioned files.
-  * `BucketedJoinSpec` asserts the Exchange-free plan.
+  * ScaleSpec "bucketed fact-fact join plans without Exchange" asserts
+  * the Exchange-free plan.
   */
 object Warehouse {
 
@@ -22,8 +23,8 @@ object Warehouse {
     // warehouse directory behind, and CREATE TABLE refuses to reuse it.
     // Hadoop FS API, NOT java.io (local-FS deletes silently no-op on
     // hdfs:///object-store warehouse dirs, and the subsequent CREATE
-    // TABLE then fails on the stale location).  BucketedJoinSpec
-    // drives the stale-location path.
+    // TABLE then fails on the stale location).  ScaleSpec "bucketize
+    // survives a stale table location…" drives the stale-location path.
     Seq("lineitem_b", "orders_b").foreach { name =>
       spark.sql(s"DROP TABLE IF EXISTS $name")
       val loc = new org.apache.hadoop.fs.Path(

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{BloomWarehouse, TrainPrep}
 import graft.functions.TextFunctions.words
-import graft.sources.Tables
+import graft.sources.{CommitLog, Tables}
 
 /** The Bloom decontamination warehouse contract: generation-split
   * delta filters OR-fold to the BYTE-EQUAL array of a one-shot build
@@ -21,8 +21,11 @@ class BloomWarehouseSpec extends GraftSpec {
   private def tmp(tag: String): String =
     Files.createTempDirectory(s"graft-blw-$tag").resolve("idx").toString
 
+  /** The committed generation rows at `path`. */
+  private def rowsAt(path: String) = CommitLog.snapshot(spark, path).read(path)
+
   private def bytesAt(path: String): Seq[Array[Byte]] =
-    spark.read.parquet(path).collect().map(_.getAs[Array[Byte]]("bf")).toSeq
+    rowsAt(path).collect().map(_.getAs[Array[Byte]]("bf")).toSeq
 
   private def docsWithBucket = Tables(spark, Dir).documents
     .select(col("doc_id"), col("text"),
@@ -69,7 +72,7 @@ class BloomWarehouseSpec extends GraftSpec {
     BloomWarehouse.materializeFrom(spark,
       d.filter(col("bucket") >= 90 && col("bucket") < 95), p)
     // the recorded count is the generation's exact distinct gram count
-    val recorded = spark.read.parquet(p).select(col("n_grams")).head().getLong(0)
+    val recorded = rowsAt(p).select(col("n_grams")).head().getLong(0)
     val exact = d.filter(col("bucket") >= 90 && col("bucket") < 95)
       .select(explode(graft.functions.GramHashes(words(col("text")), 8)).as("h"))
       .distinct().count()
@@ -82,8 +85,8 @@ class BloomWarehouseSpec extends GraftSpec {
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
     val full = tmp("over")
-    Seq((bos.toByteArray, BloomWarehouse.Capacity + 1)).toDF("bf", "n_grams")
-      .write.mode("overwrite").parquet(full)
+    val overRow = Seq((bos.toByteArray, BloomWarehouse.Capacity + 1)).toDF("bf", "n_grams")
+    CommitLog.transaction(spark, full)(_.replace(overRow, full))
     val batch = Seq((1L, "eight distinct words are needed for one gram here"))
       .toDF("doc_id", "text")
     intercept[IllegalArgumentException] {

@@ -295,7 +295,7 @@ class Bm25WarehouseSpec extends GraftSpec {
     // superseded and vacuum reclaimed: collecting it must FAIL LOUDLY
     // (missing input path), not return partial data — the
     // drained-readers contract's enforcement half
-    val thrown = intercept[Throwable](pinnedFresh.collect())
+    val thrown = quietExpectedFailures(intercept[Throwable](pinnedFresh.collect()))
     val chain = Iterator.iterate[Throwable](thrown)(_.getCause)
       .takeWhile(_ != null).take(8).map(String.valueOf).mkString(" | ")
     assert(chain.contains("PATH_NOT_FOUND") || chain.contains("FileNotFound") ||

@@ -77,6 +77,10 @@ class EdgeWarehouseSpec extends GraftSpec {
     java.nio.file.Files.createTempDirectory(s"graft-edgew-$tag")
       .resolve("edges").toString
 
+  /** `part` of the warehouse at `p`, read through a committed snapshot. */
+  private def committed(p: String, part: String): org.apache.spark.sql.DataFrame =
+    sources.CommitLog.snapshot(spark, p).read(part)
+
   test("refresh == one-shot nearDupEdges(base ∪ batch) bit-for-bit, multi-generation") {
     import org.apache.spark.sql.functions._
     val docs = sources.Tables(spark, Dir).documents
@@ -195,19 +199,26 @@ class EdgeWarehouseSpec extends GraftSpec {
       mem.addData(incoming.toIndexedSeq)
       q.processAllAvailable()
       // the marker recorded the folded batch
-      assert(dedup.EdgeWarehouse.lastBatchId(spark, p) == 0L)
-      val txtAfterFirst = spark.read.parquet(s"$p.txt").count()
+      assert(sources.BatchMarkers.lastBatchId(spark, s"$p.batchid") == 0L)
+      val txtAfterFirst = committed(p, s"$p.txt").count()
       // simulate at-least-once re-delivery: the engine hands the SAME
       // docs under an id the marker already covers — the fold must
       // SKIP (no double ingest, and crucially no guard throw that
       // would kill the query)
-      dedup.EdgeWarehouse.writeBatchId(spark, p, 7L)
+      sources.BatchMarkers.record(spark, s"$p.batchid", 7L)
       mem.addData(incoming.toIndexedSeq) // engine id 1 <= marker 7
       q.processAllAvailable()
-      assert(spark.read.parquet(s"$p.txt").count() == txtAfterFirst,
+      assert(committed(p, s"$p.txt").count() == txtAfterFirst,
         "a replayed micro-batch was double-ingested")
       assert(q.exception.isEmpty, s"replay killed the query: ${q.exception}")
     } finally q.stop()
+    // the id committed with the data: redelivering batch 0 folds
+    // nothing even without the external marker
+    val replay = docs.filter(pmod(col("doc_id"), lit(10)) === 8)
+    assert(!dedup.EdgeWarehouse.refreshTxn(spark, replay, p, Some(0L)),
+      "a committed batch id was folded again")
+    assert(committed(p, s"$p.txt").count() == incoming.length +
+      docs.filter(pmod(col("doc_id"), lit(10)) < 8).count())
   }
 
   test("GUARD: a re-crawled doc_id fails loudly instead of corrupting the indexes") {
@@ -220,14 +231,22 @@ class EdgeWarehouseSpec extends GraftSpec {
     dedup.EdgeWarehouse.refresh(spark, batch, p)
     // the same batch again = committed ids re-arriving: the crawl
     // contract is violated and the guard must throw BEFORE any write
-    val txtRowsBefore = spark.read.parquet(s"$p.txt").count()
+    val txtRowsBefore = committed(p, s"$p.txt").count()
     val e = intercept[IllegalStateException] {
       dedup.EdgeWarehouse.refresh(spark, batch, p)
     }
     assert(e.getMessage.contains("already in the corpus"))
-    assert(spark.read.parquet(s"$p.txt").count() == txtRowsBefore,
+    assert(committed(p, s"$p.txt").count() == txtRowsBefore,
       "guard threw but writes happened anyway")
   }
+
+  /** Run `verb` with the commit marker withheld: every part written,
+    * nothing committed — the widest crash window of a transaction. */
+  private def crashBeforeCommit(verb: => Unit): Unit =
+    try {
+      sources.CommitLog.crashBeforeCommit = true
+      intercept[sources.CommitLog.InjectedCrash](verb)
+    } finally sources.CommitLog.resetCrashInjection()
 
   test("interrupted refresh (crash before the .txt commit marker) resumes cleanly") {
     import org.apache.spark.sql.functions._
@@ -239,9 +258,9 @@ class EdgeWarehouseSpec extends GraftSpec {
     dedup.EdgeWarehouse.ingest(spark, base, clean)
     dedup.EdgeWarehouse.refresh(spark, batchA, clean)
     dedup.EdgeWarehouse.ingest(spark, base, crashed)
-    // crash in the WIDEST non-committed window: everything written
-    // except the commit marker — the resume contract's hardest case
-    dedup.EdgeWarehouse.refreshImpl(spark, batchA, crashed, commitTxt = false)
+    // crash in the WIDEST window: every part written, the commit
+    // marker (which now covers `.txt` with every other part) withheld
+    crashBeforeCommit(dedup.EdgeWarehouse.refresh(spark, batchA, crashed))
     // resume = re-run the same batch; the guard passes (never committed)
     dedup.EdgeWarehouse.refresh(spark, batchA, crashed)
     // a LATER batch must see the identical standing corpus
@@ -250,7 +269,9 @@ class EdgeWarehouseSpec extends GraftSpec {
     assert(edgeSet(dedup.EdgeWarehouse.allEdges(spark, crashed)) ==
       edgeSet(dedup.EdgeWarehouse.allEdges(spark, clean)),
       "resumed run's edge SET diverged from the clean run's")
-    // compact erases the resume's duplicate rows: counts converge too
+    // no duplicate rows to erase: counts converge before and after compact
+    assert(dedup.EdgeWarehouse.allEdges(spark, crashed).count() ==
+      dedup.EdgeWarehouse.allEdges(spark, clean).count())
     dedup.EdgeWarehouse.compact(spark, clean)
     dedup.EdgeWarehouse.compact(spark, crashed)
     assert(dedup.EdgeWarehouse.allEdges(spark, crashed).count() ==
@@ -270,27 +291,24 @@ class EdgeWarehouseSpec extends GraftSpec {
     dedup.EdgeWarehouse.ingest(spark, base, clean)
     dedup.EdgeWarehouse.refresh(spark, batch, clean)
     dedup.EdgeWarehouse.ingest(spark, base, crashed)
-    dedup.EdgeWarehouse.refreshImpl(spark, batch, crashed, commitTxt = false)
-    // THE GAP STATE the contract names, asserted directly: the two
-    // CommitLog-independent bases are exactly one batch apart — the
-    // J-channel index (its own log at <path>.mh) has COMMITTED the
-    // batch while the corpus-membership marker (.txt) has not
+    crashBeforeCommit(dedup.EdgeWarehouse.refresh(spark, batch, crashed))
+    // the J-channel index is a part of the warehouse's own base, so a
+    // crash can no longer leave it one batch ahead of `.txt`: neither
+    // holds the uncommitted batch
     val batchIds = batch.select(col("doc_id")).collect()
       .map(_.getLong(0)).toSet
-    val mhDocs = sources.CommitLog.snapshot(spark, s"$crashed.mh")
-      .read(s"$crashed.mh.docs").select(col("doc_id")).collect()
-      .map(_.getLong(0)).toSet
-    assert(batchIds.subsetOf(mhDocs),
-      "gap precondition failed: the .mh txn should have committed the batch")
-    val txtIds = spark.read.parquet(s"$crashed.txt").select(col("doc_id"))
+    val mhDocs = committed(crashed, s"$crashed.mh.docs").select(col("doc_id"))
+      .collect().map(_.getLong(0)).toSet
+    assert(batchIds.intersect(mhDocs).isEmpty,
+      "the .mh index committed a batch whose .txt rows were not committed")
+    val txtIds = committed(crashed, s"$crashed.txt").select(col("doc_id"))
       .collect().map(_.getLong(0)).toSet
     assert(batchIds.intersect(txtIds).isEmpty,
-      "gap precondition failed: .txt must NOT hold the uncommitted batch")
+      ".txt must NOT hold the uncommitted batch")
     // resume = re-run the same batch (the guard passes — never in .txt)
     dedup.EdgeWarehouse.refresh(spark, batch, crashed)
     // convergence: edges, labels, and the J probe of a FRESH doc all
-    // equal the never-crashed run (the .mh now holds the batch TWICE;
-    // duplicate candidates must erase, not double)
+    // equal the never-crashed run
     assert(edgeSet(dedup.EdgeWarehouse.allEdges(spark, crashed)) ==
       edgeSet(dedup.EdgeWarehouse.allEdges(spark, clean)),
       "cross-base resume: edge set diverged")
@@ -302,11 +320,11 @@ class EdgeWarehouseSpec extends GraftSpec {
     val probeB = docs.filter(pmod(col("doc_id"), lit(10)) === 9)
       .select(col("doc_id"), col("text"))
     def jMatches(p: String) = dedup.MinHashWarehouse
-      .probeAgainst(spark, probeB, s"$p.mh")
+      .probeWith(sources.CommitLog.snapshot(spark, p), probeB, s"$p.mh")
       .select(col("new_id"), col("base_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(jMatches(crashed) == jMatches(clean),
-      "cross-base resume: duplicated .mh rows changed the probe's match set")
+      "cross-base resume: the .mh index diverged from the clean run's")
   }
 
   test("registered incremental fold (labels + deltas at rest) equals dedupGroups") {
@@ -338,17 +356,11 @@ class EdgeWarehouseSpec extends GraftSpec {
     // index purge: a later refresh must probe survivors only — the
     // .txt/.edpfx stores and the .mh index carry no removed doc rows
     val p = dedup.EdgeWarehouse.builtRetractedPath(spark, Dir)
-    Seq(s"$p.txt", s"$p.edpfx").foreach { t =>
-      assert(spark.read.parquet(t)
+    Seq(s"$p.txt", s"$p.edpfx", s"$p.mh.docs").foreach { t =>
+      assert(committed(p, t)
         .filter(pmod(col("doc_id"), lit(13)) === 0).count() == 0,
         s"$t still carries retracted docs")
     }
-    // the .mh J-channel index lives behind MinHashWarehouse's own
-    // CommitLog base since round 12 — read its committed fold
-    assert(graft.sources.CommitLog.snapshot(spark, s"$p.mh")
-      .read(s"$p.mh.docs")
-      .filter(pmod(col("doc_id"), lit(13)) === 0).count() == 0,
-      s"$p.mh.docs still carries retracted docs")
     assert(dedup.EdgeWarehouse.allEdges(spark, p)
       .filter(pmod(col("a_id"), lit(13)) === 0 ||
         pmod(col("b_id"), lit(13)) === 0).count() == 0,

@@ -197,8 +197,8 @@ class ExpressionPropertySpec extends GraftSpec {
     val under = Seq(Seq(4e12), Seq(4e12)).toDF("v").agg(sumxArr(col("v")))
       .head().getSeq[Double](0)
     assert(under == Seq(8e12))
-    val e = intercept[Exception](
-      Seq(Seq(5e12), Seq(5e12)).toDF("v").agg(sumxArr(col("v"))).collect())
+    val e = quietExpectedFailures(intercept[Exception](
+      Seq(Seq(5e12), Seq(5e12)).toDF("v").agg(sumxArr(col("v"))).collect()))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(_.isInstanceOf[ArithmeticException]),
       s"expected an ArithmeticException in the cause chain, got $e")

@@ -148,9 +148,11 @@ class RelationsSpec extends GraftSpec {
 
   test("a missing path throws the same exception class as spark.read.parquet") {
     val dir = tmp("missing")
-    val want = intercept[Exception](spark.read.parquet(s"$dir/nope.parquet")).getClass
-    assert(intercept[Exception](Tables(spark, dir).table("nope")).getClass == want)
-    assert(intercept[Exception](
-      Relations.parquet(spark, s"$dir/gen-7", committed = true)).getClass == want)
+    quietExpectedFailures {
+      val want = intercept[Exception](spark.read.parquet(s"$dir/nope.parquet")).getClass
+      assert(intercept[Exception](Tables(spark, dir).table("nope")).getClass == want)
+      assert(intercept[Exception](
+        Relations.parquet(spark, s"$dir/gen-7", committed = true)).getClass == want)
+    }
   }
 }

@@ -4,7 +4,8 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BalanceWarehouse, BigramLmWarehouse, JoinViewWarehouse, QuantileWarehouse, RichlistWarehouse}
+import graft.dedup.EdgeWarehouse
+import graft.operators.{BalanceWarehouse, BigramLmWarehouse, BloomWarehouse, JoinViewWarehouse, QuantileWarehouse, RichlistWarehouse, TrainPrep}
 import graft.similarity.Bm25Warehouse
 import graft.sources.{CommitLog, Tables}
 
@@ -35,7 +36,12 @@ import graft.sources.{CommitLog, Tables}
   *  - MinHashWarehouse and IvfWarehouse — the tombstone purge of a
   *    compact (`Tombstones.purge`: one replace per listed part, plus
   *    the `.stream` id fold where a streaming twin has written one;
-  *    the tombstone clear writes no file).
+  *    the tombstone clear writes no file);
+  *  - EdgeWarehouse — the dedup graph: edges, CC labels, the
+  *    corpus-membership and Ed-Join index parts and the embedded
+  *    MinHash index, all in one base (refresh 6 writes, compact 2,
+  *    retract 7);
+  *  - BloomWarehouse — one filter row per generation (compact 1 write).
   */
 class WarehouseCommitSpec extends GraftSpec {
 
@@ -334,6 +340,108 @@ class WarehouseCommitSpec extends GraftSpec {
     val hBefore = hprobe()
     crashEveryWindow(1, () => HllWarehouse.compact(spark, hp),
       () => hprobe(), hBefore, hBefore)
+  }
+
+  /** Every part of the edge warehouse at `p` as strings keyed by its
+    * suffix: edges with their generation, labels, and each index's
+    * rows (doc ids where the rows carry text or signatures). */
+  private def edgeState(p: String) = () => {
+    val snap = CommitLog.snapshot(spark, p)
+    Seq("" -> Seq("a_id", "b_id", "gen"), ".labels" -> Seq("doc_id", "group_id"),
+        ".txt" -> Seq("doc_id"), ".edpfx" -> Seq("doc_id", "len", "hsh"),
+        ".edstarved" -> Seq("doc_id"), ".mh.docs" -> Seq("doc_id"),
+        ".mh" -> Seq("doc_id", "band", "bucket"))
+      .flatMap { case (sfx, cols) =>
+        snap.read(p + sfx).select(cols.map(col): _*).collect().map(r => s"$sfx:$r")
+      }.toSet
+  }
+
+  private def edgeBase = t.documents.filter(pmod(col("doc_id"), lit(10)) < 8)
+  private def edgeInc = t.documents.filter(pmod(col("doc_id"), lit(10)) >= 8)
+
+  test("edge: a refresh killed in every window is invisible; resume == clean run") {
+    val clean = tmp("edge-clean")
+    EdgeWarehouse.ingest(spark, edgeBase, clean)
+    val before = edgeState(clean)()
+    EdgeWarehouse.refresh(spark, edgeInc, clean)
+    val want = edgeState(clean)()
+    assert(before != want, "degenerate: refresh changed nothing")
+
+    val p = tmp("edge")
+    EdgeWarehouse.ingest(spark, edgeBase, p)
+    // refresh writes 6 parts: delta edges, .mh.docs, .mh, .edpfx,
+    // .edstarved and .txt
+    crashEveryWindow(6, () => EdgeWarehouse.refresh(spark, edgeInc, p),
+      edgeState(p), before, want)
+  }
+
+  test("edge: a compact killed in every window is invisible; resume == clean run") {
+    def build(p: String): Unit = {
+      EdgeWarehouse.ingest(spark, edgeBase, p)
+      EdgeWarehouse.refresh(spark, edgeInc, p)
+    }
+    val clean = tmp("edgec-clean")
+    build(clean)
+    val before = edgeState(clean)()
+    EdgeWarehouse.compact(spark, clean)
+    val want = edgeState(clean)()
+    assert(before != want, "degenerate: compact changed nothing")
+
+    val p = tmp("edgec")
+    build(p)
+    // compact writes 2 parts: the deduped edges and the folded labels
+    crashEveryWindow(2, () => EdgeWarehouse.compact(spark, p),
+      edgeState(p), before, want)
+  }
+
+  test("edge: a retract killed in every window is invisible; resume == clean run") {
+    val removed = t.documents.filter(EdgeWarehouse.isRetractedDoc).select(col("doc_id"))
+    def build(p: String): Unit = {
+      EdgeWarehouse.ingest(spark, edgeBase, p)
+      EdgeWarehouse.refresh(spark, edgeInc, p)
+    }
+    val clean = tmp("edger-clean")
+    build(clean)
+    val before = edgeState(clean)()
+    EdgeWarehouse.retract(spark, removed, clean)
+    val want = edgeState(clean)()
+    assert(before != want, "degenerate: retract changed nothing")
+
+    val p = tmp("edger")
+    build(p)
+    // retract writes 7 parts: edges, labels, .txt, .edpfx, .edstarved,
+    // .mh.docs and .mh
+    crashEveryWindow(7, () => EdgeWarehouse.retract(spark, removed, p),
+      edgeState(p), before, want)
+  }
+
+  test("bloom: a compact killed in every window is invisible; resume == clean run") {
+    val d = t.documents.select(col("doc_id"), col("text"),
+      pmod(TrainPrep.contentHash(col("text")), lit(100L)).as("bucket"))
+    // the merged filter's digest and the generation row count
+    def state(p: String) = () => {
+      val bos = new java.io.ByteArrayOutputStream()
+      BloomWarehouse.mergedFilter(spark, p).writeTo(bos)
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(bos.toByteArray).map("%02x".format(_)).mkString
+      Set(s"bytes=$digest", s"rows=${committedRows(p, p)}")
+    }
+    def build(p: String): Unit = {
+      BloomWarehouse.materializeFrom(spark, d.filter(col("bucket") >= 90 && col("bucket") < 95), p)
+      BloomWarehouse.refresh(spark, d.filter(col("bucket") >= 95), p)
+    }
+    val clean = tmp("bloom-clean")
+    build(clean)
+    val before = state(clean)()
+    BloomWarehouse.compact(spark, clean)
+    val want = state(clean)()
+    assert(before != want, "degenerate: compact left the generation rows as they were")
+
+    val p = tmp("bloom")
+    build(p)
+    // compact writes 1 part: the merged row
+    crashEveryWindow(1, () => BloomWarehouse.compact(spark, p),
+      state(p), before, want)
   }
 
   test("concurrent reader: a probe pinned before a refresh commits keeps the pre-refresh answer (quantile + bm25, beyond BalanceWarehouse)") {
